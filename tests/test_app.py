@@ -18,7 +18,7 @@ from xova_spark.app import (
     parse_fields,
     parse_scans,
 )
-from xova_spark.sources.ms_writer import read_ms
+from xova_spark.sources.ms_fixture import load_ms
 
 
 # -- argparsing (test_argparsing.py:6-21) ----------------------------------
@@ -63,7 +63,7 @@ def _run(spark, ms_dir, tmp_path, cmdline):
 
 def test_app_timechannel(spark, ms_dir, tmp_path):
     out = _run(spark, ms_dir, tmp_path, ["timechannel", ms_dir, "-t", "4"])
-    back = read_ms(spark, out)
+    back = load_ms(spark, out)
     assert back["ms_rows"].count() > 0
     assert back["ms_vis"].count() > 0
     # averaging reduced the row count
@@ -76,7 +76,7 @@ def test_app_timechannel_fieldsel(spark, ms_dir, tmp_path):
         spark, ms_dir, tmp_path,
         ["timechannel", ms_dir, "-t", "4", "-f", "0", "-s", "0,2"],
     )
-    back = read_ms(spark, out)
+    back = load_ms(spark, out)
     rows = back["ms_rows"].toPandas()
     assert set(rows["FIELD_ID"]) == {0}
     assert set(rows["SCAN_NUMBER"]) <= {0, 2}
@@ -88,7 +88,7 @@ def test_app_field_name_resolution(spark, ms_dir, tmp_path):
         spark, ms_dir, tmp_path,
         ["timechannel", ms_dir, "-t", "4", "-f", "FIELD-1"],
     )
-    back = read_ms(spark, out)
+    back = load_ms(spark, out)
     assert set(back["ms_rows"].toPandas()["FIELD_ID"]) == {1}
 
 
@@ -97,7 +97,7 @@ def test_app_bda(spark, ms_dir, tmp_path):
         spark, ms_dir, tmp_path,
         ["bda", ms_dir, "-d", "0.95", "-fov", "0.315", "-t", "16"],
     )
-    back = read_ms(spark, out)
+    back = load_ms(spark, out)
     rows = back["ms_rows"].toPandas()
     assert len(rows) > 0
     # ragged output: multiple channelisations, all remapped to new DDIDs
@@ -114,7 +114,7 @@ def test_app_column_rename(spark, ms_dir, tmp_path):
         spark, ms_dir, tmp_path,
         ["timechannel", ms_dir, "-t", "4", "-dc", "CORRECTED_DATA:DATA"],
     )
-    back = read_ms(spark, out)
+    back = load_ms(spark, out)
     assert "DATA_re" in back["ms_vis"].columns
     assert "vis_re" not in back["ms_vis"].columns
 
@@ -135,70 +135,87 @@ def test_app_overwrite_guard(spark, ms_dir, tmp_path):
         ).execute()
 
 
-def test_app_stream_matches_batch_average(spark, ms_dir, ms, tmp_path):
+def _assert_same_ms(spark, got_path, want_path):
+    """Every written table of two output MSs is the same: same table
+    set, same columns in the same order, and EXCEPT ALL empty in both
+    directions (no tolerance — the fixture is dyadic, so the sums are
+    exact in any order)."""
+    got, want = load_ms(spark, got_path), load_ms(spark, want_path)
+    assert set(got) == set(want)
+    for name, w in want.items():
+        g = got[name]
+        assert g.columns == w.columns, name
+        assert g.exceptAll(w).count() == 0, name
+        assert w.exceptAll(g).count() == 0, name
+
+
+def test_app_stream_matches_batch_average(spark, ms_dir, tmp_path):
     """``xova-spark stream``: draining the fixture's vis files through
-    the streaming maintenance path must produce the same averaged MS as
-    the one-shot batch aggregation."""
-    from xova_spark.operators import timechannel as tc
-
-    out = os.path.join(str(tmp_path), "streamed.ms")
-    got_path = Application(
-        ["stream", ms_dir, "-o", out, "-t", "4", "-c", "8"], spark=spark
+    the streaming maintenance path must write the same MS as the
+    one-shot ``timechannel`` command with the same parameters."""
+    params = ["-t", "4", "-c", "8"]
+    streamed = Application(
+        ["stream", ms_dir, "-o", str(tmp_path / "streamed.ms"), *params],
+        spark=spark,
     ).execute()
-    back = read_ms(spark, got_path)
-    for name in ("ms_vis", "spw_chans", "spw_meta", "ddid", "pol", "field",
-                 "antenna"):
-        assert name in back, name
-
-    keys = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1", "ANTENNA2",
-            "time_bin", "chan_bin", "corr"]
-    bins = tc.bin_map(ms["ms_rows"], 4.0)
-    want = (
-        tc.average_vis(ms["ms_vis"], bins, 8).toPandas().set_index(keys).sort_index()
-    )
-    got = (
-        back["ms_vis"].toPandas()
-        .rename(columns={"chan": "chan_bin"})  # written under the reopen contract
-        .set_index(keys).sort_index()
-    )
-    assert len(got) == len(want)
-    for c in ("vis_re", "vis_im", "weight_sp", "sigma_sp"):
-        assert (abs(got[c] - want[c]) < 1e-9).all(), c
-    # stream output now carries the averaged ROW tables too (batch parity)
-    assert back["ms_rows"].count() > 0
-    assert back["ms_weights"].count() > 0
+    batch = Application(
+        ["timechannel", ms_dir, "-o", str(tmp_path / "batch.ms"), *params],
+        spark=spark,
+    ).execute()
+    _assert_same_ms(spark, streamed, batch)
 
 
-def test_app_stream_bda_matches_batch_average(spark, ms_dir, ms, tmp_path):
+def test_app_stream_bda_matches_batch_average(spark, ms_dir, tmp_path):
     """``xova-spark stream --mode bda``: the ragged-binned maintenance
-    path must converge to the batch BDA visibility aggregation."""
-    from xova_spark.operators import bda as B
-
-    out = os.path.join(str(tmp_path), "streamed_bda.ms")
-    got_path = Application(
-        ["stream", ms_dir, "-o", out, "--mode", "bda", "-d", "0.95",
-         "-fov", "1.0"], spark=spark
+    path must write the same MS as the one-shot ``bda`` command."""
+    params = ["-d", "0.95", "-fov", "1.0"]
+    streamed = Application(
+        ["stream", ms_dir, "-o", str(tmp_path / "streamed_bda.ms"),
+         "--mode", "bda", *params],
+        spark=spark,
     ).execute()
-    back = read_ms(spark, got_path)
-    for name in ("ms_rows", "ms_vis", "spw", "ddid_map", "pol", "field",
-                 "antenna"):
-        assert name in back, name
+    batch = Application(
+        ["bda", ms_dir, "-o", str(tmp_path / "batch_bda.ms"), *params],
+        spark=spark,
+    ).execute()
+    _assert_same_ms(spark, streamed, batch)
 
-    params = B.bin_params(ms["ms_rows"], B.ddid_dims(ms), 0.95, 1.0, 1e9, 1)
-    bins = B.bin_map(B.assign_bins(ms["ms_rows"], params))
-    keys = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1", "ANTENNA2",
-            "time_bin", "chan_bin", "corr"]
-    want = (
-        B.average_vis(ms["ms_vis"], bins).toPandas().set_index(keys).sort_index()
-    )
-    got = (
-        back["ms_vis"].toPandas()
-        .rename(columns={"chan": "chan_bin"})
-        .set_index(keys).sort_index()
-    )
-    assert len(got) == len(want)
-    for c in ("vis_re", "vis_im", "weight_sp", "sigma_sp"):
-        assert (abs(got[c] - want[c]) < 1e-9).all(), c
+
+def test_app_unreadable_input_table_fails(spark, ms_dir, tmp_path):
+    """A corrupt subtable in the input fails the run, naming the table,
+    instead of silently dropping out of the output MS."""
+    import shutil
+
+    staged = str(tmp_path / "corrupt.ms")
+    shutil.copytree(ms_dir, staged)
+    pol = os.path.join(staged, "pol.parquet")
+    with open(pol, "r+b") as fh:
+        fh.truncate(os.path.getsize(pol) // 2)
+    with pytest.raises(RuntimeError, match="pol"):
+        Application(
+            ["timechannel", staged, "-t", "4", "-o", str(tmp_path / "out.ms")],
+            spark=spark,
+        ).execute()
+
+
+def test_app_force_removes_stale_tables(spark, ms_dir, tmp_path):
+    """``--force`` over an earlier BDA output: BDA's lineage tables
+    (``spw``, ``ddid_map``) must not survive into the timechannel MS."""
+    from xova_spark.operators.check import check_ms, check_spw
+
+    out = str(tmp_path / "reused.ms")
+    Application(
+        ["bda", ms_dir, "-d", "0.95", "-fov", "0.315", "-t", "16", "-o", out],
+        spark=spark,
+    ).execute()
+    assert {"spw", "ddid_map"} <= set(load_ms(spark, out))
+    Application(
+        ["timechannel", ms_dir, "-t", "4", "-o", out, "--force"], spark=spark
+    ).execute()
+    back = load_ms(spark, out)
+    assert "spw" not in back and "ddid_map" not in back
+    assert check_ms(back).count() == 0
+    assert check_spw(back).count() == 0
 
 
 def test_app_output_reopens_checks_and_reaverages(spark, ms_dir, tmp_path):
@@ -208,7 +225,6 @@ def test_app_output_reopens_checks_and_reaverages(spark, ms_dir, tmp_path):
     second round of averaging."""
     from xova_spark.operators.check import check_ms, check_spw
     from xova_spark.operators.timechannel import timechannel
-    from xova_spark.sources.ms_fixture import load_ms
 
     out = os.path.join(str(tmp_path), "reopen.ms")
     Application(
@@ -229,7 +245,6 @@ def test_app_bda_output_passes_check(spark, ms_dir, tmp_path):
     every output row's channel count must match its (new) DDID's
     NUM_CHAN — the shape contract the reference validates via TAQL."""
     from xova_spark.operators.check import check_ms, check_spw
-    from xova_spark.sources.ms_fixture import load_ms
 
     out = os.path.join(str(tmp_path), "bda_check.ms")
     Application(
@@ -248,7 +263,6 @@ def test_app_unknown_subtable_and_keywords_roundtrip(spark, ms_dir, tmp_path):
     import shutil
 
     from xova_spark.operators.timechannel import timechannel
-    from xova_spark.sources.ms_fixture import load_ms
     from xova_spark.sources.ms_writer import write_ms
 
     staged = os.path.join(str(tmp_path), "in.ms")
@@ -432,7 +446,6 @@ def test_app_timechannel_on_fake_casa_table(spark, ms_dir, tmp_path):
     from xova_spark.operators.check import check_ms, check_spw
     from xova_spark.sources import casa_ms
     from xova_spark.sources.casa_fake import fake_ms_from_fixture
-    from xova_spark.sources.ms_fixture import load_ms
 
     twin = fake_ms_from_fixture(ms_dir, str(tmp_path / "cli_twin.ms"))
     assert casa_ms.is_casa_ms(twin)  # CLI input IS a casa-table dir
@@ -460,7 +473,6 @@ def test_app_average_uvw_coordinates_flag(spark, ms_dir, tmp_path):
     import pandas as pd
 
     from xova_spark.operators.timechannel import timechannel
-    from xova_spark.sources.ms_fixture import load_ms
 
     out_fix = os.path.join(str(tmp_path), "fixed.ms")
     out_avg = os.path.join(str(tmp_path), "avg.ms")
@@ -499,7 +511,6 @@ def test_app_bda_on_fake_casa_table(spark, ms_dir, tmp_path):
     from xova_spark.operators.check import check_ms, check_spw
     from xova_spark.sources import casa_ms
     from xova_spark.sources.casa_fake import fake_ms_from_fixture
-    from xova_spark.sources.ms_fixture import load_ms
 
     twin = fake_ms_from_fixture(ms_dir, str(tmp_path / "bda_twin.ms"))
     out = os.path.join(str(tmp_path), "bda_out.ms")

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from xova_spark.operators import bda as B
+from xova_spark.operators import timechannel as tc
 from xova_spark.queries import bda as Q
 from xova_spark.testing import assert_frames_match
 
@@ -67,7 +68,7 @@ def test_bda_vis_chan_conservation(spark, ms, params):
     """Each output row's visibility spectrum has exactly out_nchan
     channel bins (ragged contract, averaging.py:159-161)."""
     binned = B.assign_bins(ms["ms_rows"], params)
-    vis = B.average_vis(ms["ms_vis"], B.bin_map(binned))
+    vis = tc.average_vis(ms["ms_vis"], B.bin_map(binned), F.col("chan_fac"))
     per_bin = (
         vis.groupBy(*B.BIN_KEYS)
         .agg((F.max("chan_bin") + 1).alias("got_nchan"))

@@ -128,12 +128,13 @@ def test_ms_maintenance_converges_to_batch_average(
 
 def test_stream_finalized_ms_write_roundtrip(spark, ms, split_vis, tmp_path):
     """Close the loop: stream-maintained partials -> finalize_vis ->
-    write_ms (S8-S11) -> read_ms; the re-read MS equals the one-shot
+    write_ms (S8-S11) -> load_ms; the re-read MS equals the one-shot
     batch-averaged MS (vis + averaged SPW subtables + passthrough),
     i.e. the reference's full write path (app.py:107-116) driven
     entirely from a stream."""
     from xova_spark.operators import timechannel as tc
-    from xova_spark.sources.ms_writer import read_ms, write_ms
+    from xova_spark.sources.ms_fixture import load_ms
+    from xova_spark.sources.ms_writer import write_ms
     from xova_spark.streaming.materialize import (
         finalize_vis,
         materialized_ms_vis,
@@ -163,7 +164,7 @@ def test_stream_finalized_ms_write_roundtrip(spark, ms, split_vis, tmp_path):
         },
         out,
     )
-    back = read_ms(spark, out)
+    back = load_ms(spark, out)
     assert set(back) == {"ms_vis", "spw_chans", "spw_meta", "antenna"}
 
     keys = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1", "ANTENNA2",

@@ -71,6 +71,7 @@ def test_bda_vis_plan(spark, ms):
     scale the FINAL adaptive plan must have converted every one to
     broadcast: zero sort-merge joins after execution."""
     from xova_spark.operators import bda as B
+    from xova_spark.operators import timechannel as tc
     from xova_spark.queries import bda as bq
 
     params = B.bin_params(
@@ -78,7 +79,7 @@ def test_bda_vis_plan(spark, ms):
         bq.MIN_NCHAN,
     )
     binned = B.assign_bins(ms["ms_rows"], params)
-    q = B.average_vis(ms["ms_vis"], B.bin_map(binned))
+    q = tc.average_vis(ms["ms_vis"], B.bin_map(binned), F.col("chan_fac"))
     q.collect()  # finalize THIS DataFrame's adaptive plan (count() would
     # build a separate QueryExecution and leave q's plan initial)
     assert P.sortmerge_join_count(q) == 0, P.plan_stats(q)
@@ -110,6 +111,7 @@ def test_bda_vis_broadcast_is_size_gated(spark, ms):
     assign_bins subtree carries legit dim hints and appears twice in
     average_vis's plan, which would double-count them)."""
     from xova_spark.operators import bda as B
+    from xova_spark.operators import timechannel as tc
 
     binned = (
         ms["ms_rows"]
@@ -117,10 +119,13 @@ def test_bda_vis_broadcast_is_size_gated(spark, ms):
         .withColumn("chan_fac", F.lit(2))
     )
     assert P.broadcast_hint_count(
-        B.average_vis(ms["ms_vis"], B.bin_map(binned), map_broadcast_rows=0)
+        tc.average_vis(
+            ms["ms_vis"], B.bin_map(binned), F.col("chan_fac"),
+            map_broadcast_rows=0,
+        )
     ) == 0, "gate shut but a row-scale broadcast hint survived"
     assert P.broadcast_hint_count(
-        B.average_vis(ms["ms_vis"], B.bin_map(binned))
+        tc.average_vis(ms["ms_vis"], B.bin_map(binned), F.col("chan_fac"))
     ) > 0, "map fits at fixture scale but was not hinted"
 
 

@@ -1,7 +1,7 @@
 """Streaming extension + MS sink tests.
 
 Streaming: a converged availableNow stream must equal its batch twin
-(same A1a aggregates, epoch-aligned bins). Sink: write_ms/read_ms
+(same A1a aggregates, epoch-aligned bins). Sink: write_ms/load_ms
 roundtrip preserves every averaged table; the overwrite guard refuses
 to clobber without force (ref app.py:152-159).
 """
@@ -14,7 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from xova_spark.operators import timechannel as tc
-from xova_spark.sources.ms_writer import OutputExistsError, read_ms, write_ms
+from xova_spark.sources.ms_fixture import load_ms
+from xova_spark.sources.ms_writer import OutputExistsError, write_ms
 from xova_spark.streaming import average as SA
 from xova_spark.testing import assert_frames_match
 
@@ -51,7 +52,7 @@ def test_write_ms_roundtrip(spark, ms, tmp_path):
     out = tc.timechannel(ms, time_bin_secs=4.0, chan_bin_size=16)
     path = os.path.join(str(tmp_path), "out_ms")
     write_ms(out, path)
-    back = read_ms(spark, path)
+    back = load_ms(spark, path)
     for name in ("ms_rows", "ms_vis", "ms_weights", "spw_chans"):
         got = back[name].toPandas()
         want = out[name].toPandas()
@@ -73,7 +74,7 @@ def test_partition_pruning_on_reread(spark, ms, tmp_path):
     out = tc.timechannel(ms, time_bin_secs=4.0)
     path = os.path.join(str(tmp_path), "pruned_ms")
     write_ms(out, path)
-    back = read_ms(spark, path)
+    back = load_ms(spark, path)
     q = back["ms_rows"].filter(F.col("FIELD_ID") == 0)
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan

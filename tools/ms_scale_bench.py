@@ -189,6 +189,8 @@ def _noop(df) -> None:
 
 
 def bench_tier(spark, ms_dir: str, trials: int) -> dict:
+    from pyspark.sql import functions as F
+
     from xova_spark.operators import bda as B
     from xova_spark.operators import timechannel as tc
     from xova_spark.queries import bda as bdaq
@@ -219,7 +221,7 @@ def bench_tier(spark, ms_dir: str, trials: int) -> dict:
         )
         binned = B.assign_bins(t["ms_rows"], params)
         bm = B.bin_map(binned).persist()
-        _noop(B.average_vis(t["ms_vis"], bm))
+        _noop(tc.average_vis(t["ms_vis"], bm, F.col("chan_fac")))
         bdas.append(time.time() - t0)
         bm.unpersist()
     res["bda"] = {"trials": bdas, "median": statistics.median(bdas)}

@@ -276,6 +276,9 @@ def parse_args(cmdline: list[str]) -> argparse.Namespace:
     if args.command not in ("check", "search"):
         if args.output is None:
             args.output = derive_output_name(args.ms)
+        if (args.command == "stream" and args.mode == "timechannel"
+                and args.time_bin_secs is None):
+            args.time_bin_secs = 2.0
         if args.command in ("timechannel", "bda"):
             args.data_column = parse_data_column_map(args.data_column)
             # This engine averages ONE visibility column into one output
@@ -389,30 +392,41 @@ class Application:
         tables = self._prepare(tables)
         fields = self._resolve_fields(tables, args.fields)
         scans = list(args.scan_numbers) or None
+        out = self._average(tables, args.command, fields or None, scans)
+        return self._write_output(out, tables)
 
-        if args.command == "timechannel":
+    def _average(
+        self, tables: dict, pipeline: str, fields=None, scans=None
+    ) -> dict:
+        """The ``timechannel`` or ``bda`` operator over the prepared
+        tables, with this command line's averaging parameters."""
+        args = self.args
+        if pipeline == "timechannel":
             from xova_spark.operators.timechannel import timechannel
 
-            out = timechannel(
+            return timechannel(
                 tables,
                 time_bin_secs=args.time_bin_secs,
                 chan_bin_size=args.chan_bin_size,
-                fields=fields or None,
+                fields=fields,
                 scans=scans,
             )
-        else:
-            from xova_spark.operators.bda import bda
+        from xova_spark.operators.bda import bda
 
-            out = bda(
-                tables,
-                decorrelation=args.decorrelation,
-                max_fov=args.max_fov,
-                time_bin_secs=args.time_bin_secs or 1e9,
-                min_nchan=args.min_nchan,
-                fields=fields or None,
-                scans=scans,
-            )
+        return bda(
+            tables,
+            decorrelation=args.decorrelation,
+            max_fov=args.max_fov,
+            time_bin_secs=args.time_bin_secs or 1e9,
+            min_nchan=args.min_nchan,
+            fields=fields,
+            scans=scans,
+        )
 
+    def _write_output(self, out: dict, tables: dict) -> str:
+        """The tail every averaging command shares: UVW recompute, the
+        -dc rename, write_ms and the optional profile dump."""
+        args = self.args
         if not args.average_uvw_coordinates:
             # V4: resynthesize UVW at averaged TIMEs, joined before the
             # single write (not the reference's post-write update).
@@ -421,7 +435,7 @@ class Application:
             out["ms_rows"] = fixms(out["ms_rows"], tables["antenna"], tables["field"])
 
         # P3: surface the averaged data under the mapped column names.
-        dc = args.data_column
+        dc = getattr(args, "data_column", None)
         if "ms_vis" in out and dc and list(dc.items()) != [("DATA", "DATA")]:
             (to_name,) = set(dc.values())
             out["ms_vis"] = out["ms_vis"].withColumnsRenamed(
@@ -437,7 +451,6 @@ class Application:
 
             write_profile(out, args.profile, time.perf_counter() - t0)
         return args.output
-
 
     def _execute_corpus(self) -> str:
         """``xova-spark corpus``: run the training-data funnel (quality,
@@ -724,21 +737,29 @@ class Application:
         return None
 
     def _execute_stream(self, tables: dict) -> str:
-        """``xova-spark stream``: continuous time-and-channel averaging.
+        """``xova-spark stream``: continuous time-and-channel or BDA
+        averaging.
 
         Arriving visibility files (availableNow drain) merge into a
         partial-aggregate store via foreachBatch; on drain the partials
-        finalize into the A1a averaged columns and the output MS is
-        written through the same write_ms path as the batch commands —
+        finalize into the A1a averaged columns. Every other output table
+        comes from the same ``timechannel()`` / ``bda()`` call the batch
+        command makes, and the MS is written through the same tail —
         the streaming twin of the reference's one-shot
         read→average→write (app.py:59-128), with identical results
-        because the maintained partials are decomposable sums."""
+        because the maintained partials are decomposable sums.
+
+        FLAG_ROW (unless --respect-flag-row) is derived by ``_prepare``
+        from the whole static ``<ms>/ms_vis`` table, as it stands before
+        the first trigger — not from the samples that have arrived. A
+        row's flag, and so the row averaging and the row -> bin map the
+        triggers join against, reflects all of its static samples even
+        while only some of them have streamed in."""
         import os
 
         args = self.args
         spark = self._session()
         from xova_spark.operators import timechannel as tc
-        from xova_spark.sources.ms_writer import write_ms
         from xova_spark.streaming.materialize import (
             finalize_vis,
             materialized_ms_vis,
@@ -778,90 +799,42 @@ class Application:
 
             shutil.rmtree(part_dir)
         # Only the visibility samples ARRIVE; the row table is static, so
-        # its averaged form (and the weights) come from the same batch
-        # operators the one-shot commands use — the stream maintains the
-        # one table batch could not: the sample partials.
-        def _vis_contract(vis_df, bins_df):
-            dim = bins_df.select(*tc.BIN_KEYS, "rep").distinct()
-            return (
-                vis_df.join(dim, tc.BIN_KEYS)
-                .withColumnRenamed("rep", "row_id")
-                .withColumnRenamed("chan_bin", "chan")
-            )
-
+        # every other output table is the batch operator's.
+        out = self._average(tables, args.mode)
+        rows = tables["ms_rows"]
         if args.mode == "bda":
             from xova_spark.operators import bda as B
-            from xova_spark.streaming.materialize import (
-                finalize_bda_vis,
-                materialized_bda_vis,
-            )
 
             params = B.bin_params(
-                tables["ms_rows"],
+                rows,
                 B.ddid_dims(tables),
                 args.decorrelation,
                 args.max_fov,
                 args.time_bin_secs or 1e9,
                 args.min_nchan,
             )
-            binned = B.assign_bins(tables["ms_rows"], params)
-            bins = B.bin_map(binned)
-            q = materialized_bda_vis(stream, bins, part_dir, checkpoint)
-            q.awaitTermination()
-            dmap = B.ddid_map(params, tables)
-            grid = B.spw_grid(params, tables)
-            rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans",
-                         "spw_meta", "ddid"}
-            out = {
-                "ms_rows": B.remap_main(
-                    B._remap_rows(B.average_rows(binned, with_row_id=True), dmap)
-                ),
-                "ms_weights": (
-                    tc.average_weights(tables["ms_weights"], bins, keep_rep=True)
-                    .withColumnRenamed("rep", "row_id")
-                ),
-                "ms_vis": _vis_contract(
-                    finalize_bda_vis(spark, part_dir, bins), bins
-                ),
-                "spw": grid,
-                "ddid_map": dmap,
-                **B.conformant_subtables(dmap, grid),
-                **{k: v for k, v in tables.items() if k not in rewritten},
-            }
+            bins = B.bin_map(B.assign_bins(rows, params))
+            chan_div = F.col("chan_fac")
         else:
-            tbin = args.time_bin_secs or 2.0
-            bins = tc.bin_map(tables["ms_rows"], tbin)
-            q = materialized_ms_vis(
-                stream, bins, part_dir, checkpoint, args.chan_bin_size
+            bins = tc.bin_map(rows, args.time_bin_secs)
+            chan_div = args.chan_bin_size
+        q = materialized_ms_vis(stream, bins, part_dir, checkpoint, chan_div)
+        q.awaitTermination()
+        # Same columns, order and reopen contract as the batch ms_vis:
+        # row_id = the bin's rep surrogate, chan = the channel bin.
+        dim = bins.select("rep", *tc.BIN_KEYS).distinct()
+        out["ms_vis"] = (
+            finalize_vis(spark, part_dir)
+            .join(dim, tc.BIN_KEYS)
+            .select(
+                F.col("rep").alias("row_id"),
+                *tc.BIN_KEYS,
+                F.col("chan_bin").alias("chan"),
+                "corr",
+                *tc.VIS_VALUES,
             )
-            q.awaitTermination()
-
-            out_chans, out_meta = tc.average_spw(
-                tables["spw_chans"], tables["spw_meta"], args.chan_bin_size
-            )
-            rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans",
-                         "spw_meta"}
-            out = {
-                "ms_rows": tc.average_rows(
-                    tables["ms_rows"], tbin, with_row_id=True
-                ),
-                "ms_weights": (
-                    tc.average_weights(tables["ms_weights"], bins, keep_rep=True)
-                    .withColumnRenamed("rep", "row_id")
-                ),
-                "ms_vis": _vis_contract(finalize_vis(spark, part_dir), bins),
-                "spw_chans": out_chans,
-                "spw_meta": out_meta,
-                **{k: v for k, v in tables.items() if k not in rewritten},
-            }
-        if not args.average_uvw_coordinates:
-            from xova_spark.operators.uvw import fixms
-
-            out["ms_rows"] = fixms(
-                out["ms_rows"], tables["antenna"], tables["field"]
-            )
-        write_ms(out, args.output, force=args.force)
-        return args.output
+        )
+        return self._write_output(out, tables)
 
 
 def main() -> None:

@@ -54,7 +54,14 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from xova_spark.operators.timechannel import BIN_KEYS, BL_KEYS, PART_KEYS, _fallback
+from xova_spark.operators.timechannel import (
+    BIN_KEYS,
+    BL_KEYS,
+    PART_KEYS,
+    average_vis,
+    average_weights,
+    row_aggs,
+)
 
 C_LIGHT = 299792458.0  # m/s
 OMEGA_E = 7.292115e-5  # Earth sidereal rotation rate, rad/s
@@ -191,26 +198,10 @@ def average_rows(binned: DataFrame, with_row_id: bool = False) -> DataFrame:
     ``with_row_id`` adds row_id = min(input row_id) per bin (the rep
     surrogate) so written BDA output satisfies the load_ms row-identity
     contract and is check-able/re-openable."""
-    fr = F.col("FLAG_ROW")
-    unfl = ~fr
     extra = [F.min("row_id").alias("row_id")] if with_row_id else []
     return binned.groupBy(*BIN_KEYS).agg(
         *extra,
-        F.avg("TIME").alias("TIME"),
-        F.sum("INTERVAL").alias("INTERVAL"),
-        _fallback(F.sum(F.when(unfl, F.col("EXPOSURE"))), F.sum("EXPOSURE")).alias(
-            "EXPOSURE"
-        ),
-        _fallback(
-            F.sum(F.when(unfl, F.col("EXPOSURE") * F.col("TIME_CENTROID")))
-            / F.sum(F.when(unfl, F.col("EXPOSURE"))),
-            F.sum(F.col("EXPOSURE") * F.col("TIME_CENTROID")) / F.sum("EXPOSURE"),
-        ).alias("TIME_CENTROID"),
-        *[
-            _fallback(F.avg(F.when(unfl, F.col(c))), F.avg(F.col(c))).alias(c)
-            for c in ("u", "v", "w")
-        ],
-        F.bool_and(fr).alias("FLAG_ROW"),
+        *row_aggs(),
         F.count("*").alias("n_rows"),
         F.any_value("out_nchan").alias("NUM_CHAN"),
         F.any_value("decorr_chan_width").alias("DECORR_CHAN_WIDTH"),
@@ -219,7 +210,8 @@ def average_rows(binned: DataFrame, with_row_id: bool = False) -> DataFrame:
 
 def bin_map(binned: DataFrame) -> DataFrame:
     """row_id -> BDA bin key + chan_fac + row flag, the join map for the
-    visibility aggregation (analogue of timechannel.bin_map).
+    visibility aggregation (analogue of timechannel.bin_map; BDA calls
+    timechannel.average_vis with ``F.col("chan_fac")`` as the divisor).
 
     Also carries ``rep`` — min(row_id) within the bin — a SINGLE-column
     surrogate for the 6-column bin key. The visibility aggregation
@@ -231,66 +223,6 @@ def bin_map(binned: DataFrame) -> DataFrame:
     w = Window.partitionBy(*BIN_KEYS)
     return binned.withColumn("rep", F.min("row_id").over(w)).select(
         "row_id", "rep", *BIN_KEYS, "chan_fac", "FLAG_ROW"
-    )
-
-
-def average_vis(
-    vis: DataFrame,
-    bins: DataFrame,
-    keep_rep: bool = False,
-    map_broadcast_rows: int | None = None,
-) -> DataFrame:
-    """Phase 2b: ragged visibility averaging — chan_bin width varies per
-    baseline (chan_fac), A1a weighted-mean semantics with fully-flagged
-    fallback. One shuffle of the big table, keyed on the compact
-    (rep, chan_bin, corr) surrogate."""
-    # Both the row -> bin map (one entry per MS row) and the rep -> keys
-    # dim (one entry per output bin) scale with the input: the broadcast
-    # hint is SIZE-GATED by one planning count (the reference's eager
-    # plan-pass analogue, chunking.py:281-285). Small -> hinted
-    # single-shuffle plan; at 100 TB -> plain joins, AQE decides.
-    from xova_spark.operators.timechannel import map_fits_broadcast
-
-    fits = map_fits_broadcast(bins, map_broadcast_rows)
-    narrow = bins.select("row_id", "rep", "chan_fac")
-    dim = bins.select("rep", *BIN_KEYS).distinct()
-    if fits:
-        narrow, dim = F.broadcast(narrow), F.broadcast(dim)
-    j = vis.join(narrow, "row_id").withColumn(
-        "chan_bin", F.floor(F.col("chan") / F.col("chan_fac")).cast("int")
-    )
-    fl, w = F.col("flag"), F.col("weight_sp")
-    s = F.col("sigma_sp")
-    n_unfl = F.count(F.when(~fl, F.lit(1)))
-
-    def wmean(x):
-        return F.when(
-            n_unfl > 0, F.sum(F.when(~fl, w * x)) / F.sum(F.when(~fl, w))
-        ).otherwise(F.sum(w * x) / F.sum(w))
-
-    sum_w = F.when(n_unfl > 0, F.sum(F.when(~fl, w))).otherwise(F.sum(w))
-    sum_w2s2 = F.when(n_unfl > 0, F.sum(F.when(~fl, w * w * s * s))).otherwise(
-        F.sum(w * w * s * s)
-    )
-    agg = j.groupBy("rep", "chan_bin", "corr").agg(
-        wmean(F.col("vis_re")).alias("vis_re"),
-        wmean(F.col("vis_im")).alias("vis_im"),
-        F.bool_and(fl).alias("flag"),
-        sum_w.alias("weight_sp"),
-        (F.sqrt(sum_w2s2) / sum_w).alias("sigma_sp"),
-        F.count("*").alias("n_samples"),
-    )
-    head = ["rep", *BIN_KEYS] if keep_rep else BIN_KEYS
-    return agg.join(dim, "rep").select(  # dim already hint-wrapped above
-        *head,
-        "chan_bin",
-        "corr",
-        "vis_re",
-        "vis_im",
-        "flag",
-        "weight_sp",
-        "sigma_sp",
-        "n_samples",
     )
 
 
@@ -400,8 +332,6 @@ def bda(
     rewritten = {
         "ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta", "ddid"
     }
-    from xova_spark.operators.timechannel import average_weights
-
     out_weights = None
     if "ms_weights" in tables:
         out_weights = (
@@ -412,7 +342,7 @@ def bda(
         "ms_rows": remap_main(remapped),
         **({"ms_weights": out_weights} if out_weights is not None else {}),
         "ms_vis": (
-            average_vis(tables["ms_vis"], bins, keep_rep=True)
+            average_vis(tables["ms_vis"], bins, F.col("chan_fac"), keep_rep=True)
             .withColumnRenamed("rep", "row_id")
             .withColumnRenamed("chan_bin", "chan")
         ),

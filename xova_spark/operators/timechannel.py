@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 PART_KEYS = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER"]  # app.py:43 GROUP_COLS
@@ -151,21 +151,14 @@ def average_rows(
     )
 
 
-def average_binned_rows(binned: DataFrame, with_row_id: bool = False) -> DataFrame:
-    """A1a aggregation over rows that already carry a time_bin column
-    (from assign_time_bins, or chunking.assign_greedy_bins for the
-    bit-exact greedy variant).
-
-    ``with_row_id`` adds row_id = min(input row_id) per bin — the same
-    ``rep`` surrogate bin_map uses — so the written output satisfies the
-    load_ms row-identity contract and can be re-opened, re-checked, and
-    re-averaged like any input MS (the reference's average-then-check
-    workflow, check.py:22-76)."""
+def row_aggs() -> list:
+    """The A1a row-level aggregates every row averaging shares (batch
+    timechannel and BDA, streaming windows): TIME mean and INTERVAL sum
+    over all rows; EXPOSURE, TIME_CENTROID and UVW over unflagged rows
+    with the all-rows fallback; FLAG_ROW = all rows flagged."""
     fr = F.col("FLAG_ROW")
     unfl = ~fr
-    extra = [F.min("row_id").alias("row_id")] if with_row_id else []
-    return binned.groupBy(*BIN_KEYS).agg(
-        *extra,
+    return [
         F.avg("TIME").alias("TIME"),
         F.sum("INTERVAL").alias("INTERVAL"),
         _fallback(
@@ -181,7 +174,24 @@ def average_binned_rows(binned: DataFrame, with_row_id: bool = False) -> DataFra
             for c in ("u", "v", "w")
         ],
         F.bool_and(fr).alias("FLAG_ROW"),
-        F.count(F.when(unfl, F.lit(1))).alias("n_unflagged"),
+    ]
+
+
+def average_binned_rows(binned: DataFrame, with_row_id: bool = False) -> DataFrame:
+    """A1a aggregation over rows that already carry a time_bin column
+    (from assign_time_bins, or chunking.assign_greedy_bins for the
+    bit-exact greedy variant).
+
+    ``with_row_id`` adds row_id = min(input row_id) per bin — the same
+    ``rep`` surrogate bin_map uses — so the written output satisfies the
+    load_ms row-identity contract and can be re-opened, re-checked, and
+    re-averaged like any input MS (the reference's average-then-check
+    workflow, check.py:22-76)."""
+    extra = [F.min("row_id").alias("row_id")] if with_row_id else []
+    return binned.groupBy(*BIN_KEYS).agg(
+        *extra,
+        *row_aggs(),
+        F.count(F.when(~F.col("FLAG_ROW"), F.lit(1))).alias("n_unflagged"),
         F.count("*").alias("n_rows"),
         # Constant ID columns pass through (ref averaging.py:117-136).
         *[
@@ -252,50 +262,76 @@ def average_weights(
     return _reattach(agg, bins, ["corr", "WEIGHT", "SIGMA"], keep_rep, fits)
 
 
+VIS_VALUES = ["vis_re", "vis_im", "flag", "weight_sp", "sigma_sp", "n_samples"]
+
+
+def vis_partials() -> list:
+    """The A1a visibility aggregation as 11 decomposable sums over raw
+    samples: counts and weighted sums over the unflagged samples
+    (``_u``) and over all samples (``_a``), plus the all-flagged flag.
+    Partials of disjoint sample sets merge by sum (AND for flag_all),
+    so a batch aggregation and an incrementally merged one feed the
+    same ``finalize``."""
+    fl, w, s = F.col("flag"), F.col("weight_sp"), F.col("sigma_sp")
+    re, im = F.col("vis_re"), F.col("vis_im")
+    unfl = ~fl
+    return [
+        F.count("*").alias("n"),
+        F.count(F.when(unfl, F.lit(1))).alias("n_unfl"),
+        F.sum(F.when(unfl, w)).alias("sw_u"),
+        F.sum(F.when(unfl, w * re)).alias("swre_u"),
+        F.sum(F.when(unfl, w * im)).alias("swim_u"),
+        F.sum(F.when(unfl, w * w * s * s)).alias("sw2s2_u"),
+        F.sum(w).alias("sw_a"),
+        F.sum(w * re).alias("swre_a"),
+        F.sum(w * im).alias("swim_a"),
+        F.sum(w * w * s * s).alias("sw2s2_a"),
+        F.bool_and(fl).alias("flag_all"),
+    ]
+
+
+def finalize() -> list:
+    """The VIS_VALUES columns from vis_partials' sums: the
+    WEIGHT_SPECTRUM-weighted mean over unflagged samples, falling back
+    to all samples when the bin is fully flagged (averaging.py:251-255);
+    weight = sum of weights, sigma = sqrt(sum(w²σ²))/sum(w)."""
+    has_u = F.col("n_unfl") > 0
+
+    def pick(u, a):
+        return F.when(has_u, F.col(u)).otherwise(F.col(a))
+
+    sw = pick("sw_u", "sw_a")
+    return [
+        (pick("swre_u", "swre_a") / sw).alias("vis_re"),
+        (pick("swim_u", "swim_a") / sw).alias("vis_im"),
+        F.col("flag_all").alias("flag"),
+        sw.alias("weight_sp"),
+        (F.sqrt(pick("sw2s2_u", "sw2s2_a")) / sw).alias("sigma_sp"),
+        F.col("n").alias("n_samples"),
+    ]
+
+
 def average_vis(
-    vis: DataFrame, bins: DataFrame, chan_bin_size: int = 16,
+    vis: DataFrame, bins: DataFrame, chan_bin_size: int | Column = 16,
     keep_rep: bool = False,
     map_broadcast_rows: int | None = None,
 ) -> DataFrame:
-    """Visibility averaging per (bin, chan_bin, corr): weighted complex
-    mean over unflagged samples with fully-flagged fallback (A1/A1a).
-    One shuffle of the big table, keyed on (rep, chan_bin, corr).
-    The row -> bin map join is size-gated (see average_weights); one
-    planning count covers both the map and dim sides."""
+    """Visibility averaging per (bin, chan_bin, corr): finalize over
+    vis_partials (A1/A1a). One shuffle of the big table, keyed on
+    (rep, chan_bin, corr). ``chan_bin_size`` is the channel divisor: an
+    int for timechannel, ``F.col("chan_fac")`` for BDA's per-baseline
+    ragged factor carried by its bin map. The row -> bin map join is
+    size-gated (see average_weights); one planning count covers both the
+    map and dim sides."""
     fits = map_fits_broadcast(bins, map_broadcast_rows)
-    narrow = bins.select("row_id", "rep")
+    # The map's per-row payload: rep, plus chan_fac on a BDA map.
+    narrow = bins.drop(*BIN_KEYS, "FLAG_ROW")
     j = vis.join(F.broadcast(narrow) if fits else narrow, "row_id").withColumn(
         "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
     )
-    fl, w = F.col("flag"), F.col("weight_sp")
-    re, im, s = F.col("vis_re"), F.col("vis_im"), F.col("sigma_sp")
-    n_unfl = F.count(F.when(~fl, F.lit(1)))
-    # Weighted means over the unflagged set, else over the flagged set.
-    def wmean(x):
-        return F.when(
-            n_unfl > 0, F.sum(F.when(~fl, w * x)) / F.sum(F.when(~fl, w))
-        ).otherwise(F.sum(w * x) / F.sum(w))
-
-    sum_w = F.when(n_unfl > 0, F.sum(F.when(~fl, w))).otherwise(F.sum(w))
-    sum_w2s2 = F.when(n_unfl > 0, F.sum(F.when(~fl, w * w * s * s))).otherwise(
-        F.sum(w * w * s * s)
-    )
-    agg = j.groupBy("rep", "chan_bin", "corr").agg(
-        wmean(re).alias("vis_re"),
-        wmean(im).alias("vis_im"),
-        F.bool_and(fl).alias("flag"),
-        sum_w.alias("weight_sp"),
-        (F.sqrt(sum_w2s2) / sum_w).alias("sigma_sp"),
-        F.count("*").alias("n_samples"),
-    )
-    return _reattach(
-        agg,
-        bins,
-        ["chan_bin", "corr", "vis_re", "vis_im", "flag", "weight_sp",
-         "sigma_sp", "n_samples"],
-        keep_rep,
-        fits,
-    )
+    keys = ["rep", "chan_bin", "corr"]
+    agg = j.groupBy(*keys).agg(*vis_partials()).select(*keys, *finalize())
+    return _reattach(agg, bins, ["chan_bin", "corr", *VIS_VALUES], keep_rep, fits)
 
 
 def average_spw(

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from xova_spark.operators import bda as B
+from xova_spark.operators import timechannel as tc
 from xova_spark.sources.ms_fixture import load_ms, ms_fixture_dir
 
 REGISTRY: dict[str, tuple] = {}
@@ -190,7 +191,7 @@ def bda_vis(spark, sf_dir):
     varies per baseline (averaging.py:338-342, format='ragged')."""
     t, params = _params(spark)
     binned = B.assign_bins(t["ms_rows"], params)
-    return B.average_vis(t["ms_vis"], B.bin_map(binned))
+    return tc.average_vis(t["ms_vis"], B.bin_map(binned), F.col("chan_fac"))
 
 
 @q(
@@ -335,10 +336,10 @@ def bda_vis_greedy(spark, sf_dir):
     before bin_map — the ragged channel averaging is untouched. Same
     coincidence oracle as bda_rows_greedy (uniform cadence => greedy ==
     floor grid)."""
-    from pyspark.sql import functions as F
-
     t, _ = _params(spark)
-    return B.average_vis(t["ms_vis"], B.bin_map(_greedy_binned(spark)))
+    return tc.average_vis(
+        t["ms_vis"], B.bin_map(_greedy_binned(spark)), F.col("chan_fac")
+    )
 
 
 @q(

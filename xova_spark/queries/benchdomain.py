@@ -14,6 +14,8 @@ semantics, bigger input).
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from xova_spark.operators import bda as B
 from xova_spark.operators import timechannel as tc
 from xova_spark.queries import bda as bdaq
@@ -58,7 +60,7 @@ def bda_avg(spark, sf_dir):
         bdaq.MIN_NCHAN,
     )
     binned = B.assign_bins(t["ms_rows"], params)
-    return B.average_vis(t["ms_vis"], B.bin_map(binned).persist())
+    return tc.average_vis(t["ms_vis"], B.bin_map(binned).persist(), F.col("chan_fac"))
 
 
 REGISTRY["timechannel_avg"] = (timechannel_avg, _swap(msq.REGISTRY["ms_tc_vis"][1]))

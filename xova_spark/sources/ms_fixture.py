@@ -297,8 +297,12 @@ def load_ms(spark, ms_dir: str) -> dict:
     (a BDA output also carries spw/ddid_map lineage tables; a stream
     output may omit row tables), and any EXTRA table present — known to
     this engine or not — is loaded too (the read-side of the S10
-    wholesale subtable passthrough, subtables.py:9-37). Table keywords
-    saved by write_ms come back under ``_keywords``."""
+    wholesale subtable passthrough, subtables.py:9-37). A table that is
+    present but unreadable — any ``<name>.parquet`` entry, or the
+    directory of a KNOWN_TABLES name — raises an error naming it, so no
+    table silently drops out of the output; other directories that are
+    not parquet datasets (scratch dirs, checkpoints) are skipped. Table
+    keywords saved by write_ms come back under ``_keywords``."""
     out = {}
     names = list(KNOWN_TABLES)
     for entry in sorted(os.listdir(ms_dir)):
@@ -317,15 +321,18 @@ def load_ms(spark, ms_dir: str) -> dict:
             if os.path.exists(candidate):
                 try:
                     df = spark.read.parquet(candidate)
-                except Exception:  # noqa: BLE001 — non-table entry
+                except Exception as exc:  # noqa: BLE001 — classified below
                     # An EMPTY table (0-row partitioned write leaves no
                     # parquet footer) comes back as a 0-row frame via
-                    # write_ms's schema manifest. Otherwise best-effort
-                    # discovery: a directory that is not a parquet
-                    # dataset (scratch dirs, checkpoints) is not a
-                    # subtable and is simply skipped.
+                    # write_ms's schema manifest.
                     df = empty_from_manifest(spark, schemas, name)
                     if df is None:
+                        if candidate.endswith(".parquet") or name in KNOWN_TABLES:
+                            raise RuntimeError(
+                                f"MS table {name!r} cannot be read: {candidate}"
+                            ) from exc
+                        # Not a parquet dataset and not a known table: a
+                        # scratch dir or checkpoint, not a subtable.
                         continue
                 df.createOrReplaceTempView(name)
                 out[name] = df

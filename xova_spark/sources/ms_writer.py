@@ -63,7 +63,7 @@ def write_ms(tables: dict, path: str, force: bool = False) -> None:
         if not isinstance(df, DataFrame):
             continue
         # Schema manifest: df.schema.json() costs no job, and it is what
-        # lets load_ms/read_ms re-open an EMPTY table — a partitioned
+        # lets load_ms re-open an EMPTY table — a partitioned
         # write of 0 rows leaves only _SUCCESS (no footer to infer
         # from), which must come back as a 0-row frame with the right
         # schema, not a silently missing table (empty selections are
@@ -91,6 +91,17 @@ def write_ms(tables: dict, path: str, force: bool = False) -> None:
         os.makedirs(path, exist_ok=True)
         with open(os.path.join(path, "_keywords.json"), "w") as fh:
             json.dump(keywords, fh, indent=1, sort_keys=True)
+    if force and os.path.isdir(path):
+        # A table directory the new output does not have must not
+        # survive from the old one: load_ms would re-open it as part of
+        # the new MS. After the writes, so a passthrough table read from
+        # ``path`` itself is already copied.
+        import shutil
+
+        for entry in os.listdir(path):
+            full = os.path.join(path, entry)
+            if entry not in schemas and os.path.isdir(full):
+                shutil.rmtree(full)
 
 
 def load_manifest_schemas(path: str) -> dict:
@@ -115,22 +126,3 @@ def empty_from_manifest(spark: SparkSession, schemas: dict, name: str):
     from pyspark.sql.types import StructType
 
     return spark.createDataFrame([], StructType.fromJson(json.loads(sch)))
-
-
-def read_ms(spark: SparkSession, path: str) -> dict:
-    """Load a written MS back into a table dict (inverse of write_ms).
-    An empty table (0-row partitioned write leaves no parquet footer)
-    comes back as a 0-row frame via the schema manifest."""
-    out = {}
-    schemas = load_manifest_schemas(path)
-    for name in sorted(os.listdir(path)):
-        sub = os.path.join(path, name)
-        if os.path.isdir(sub):
-            try:
-                out[name] = spark.read.parquet(sub)
-            except Exception:  # noqa: BLE001 — empty dataset, no footer
-                empty = empty_from_manifest(spark, schemas, name)
-                if empty is None:
-                    raise
-                out[name] = empty
-    return out

@@ -22,7 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xova_spark.operators.timechannel import BL_KEYS, PART_KEYS, _fallback
+from xova_spark.operators.timechannel import (
+    BL_KEYS,
+    PART_KEYS,
+    finalize,
+    row_aggs,
+    vis_partials,
+)
 
 
 def read_rows_stream(spark: SparkSession, ms_dir: str) -> DataFrame:
@@ -48,26 +54,7 @@ def read_rows_stream(spark: SparkSession, ms_dir: str) -> DataFrame:
 
 
 def _row_aggs() -> list:
-    fr = F.col("FLAG_ROW")
-    unfl = ~fr
-    return [
-        F.avg("TIME").alias("TIME"),
-        F.sum("INTERVAL").alias("INTERVAL"),
-        _fallback(F.sum(F.when(unfl, F.col("EXPOSURE"))), F.sum("EXPOSURE")).alias(
-            "EXPOSURE"
-        ),
-        _fallback(
-            F.sum(F.when(unfl, F.col("EXPOSURE") * F.col("TIME_CENTROID")))
-            / F.sum(F.when(unfl, F.col("EXPOSURE"))),
-            F.sum(F.col("EXPOSURE") * F.col("TIME_CENTROID")) / F.sum("EXPOSURE"),
-        ).alias("TIME_CENTROID"),
-        *[
-            _fallback(F.avg(F.when(unfl, F.col(c))), F.avg(F.col(c))).alias(c)
-            for c in ("u", "v", "w")
-        ],
-        F.bool_and(fr).alias("FLAG_ROW"),
-        F.count("*").alias("n_rows"),
-    ]
+    return [*row_aggs(), F.count("*").alias("n_rows")]
 
 
 def streaming_average_rows(
@@ -212,6 +199,21 @@ def read_vis_stream(spark: SparkSession, ms_dir: str) -> DataFrame:
     )
 
 
+def _windowed_vis(j: DataFrame, window, watermark: str) -> DataFrame:
+    """The A1a visibility aggregation per event-time ``window`` (over
+    the ``ts`` column this adds) x baseline x chan_bin x corr: the batch
+    vis_partials kept as streaming state, finalized per emitted group.
+    The window struct comes out as ``win``."""
+    return (
+        j.withColumn("ts", F.timestamp_seconds(F.col("TIME")))
+        .withWatermark("ts", watermark)
+        .groupBy(window.alias("win"), *PART_KEYS, *BL_KEYS, "chan_bin", "corr")
+        .agg(*vis_partials())
+        .select("win", *PART_KEYS, *BL_KEYS, "chan_bin", "corr", *finalize())
+        .drop("weight_sp", "sigma_sp")
+    )
+
+
 def streaming_average_vis(
     vis_stream: DataFrame,
     rows_static: DataFrame,
@@ -225,38 +227,11 @@ def streaming_average_vis(
     then aggregate per tumbling window x chan_bin x corr with the A1a
     weighted-mean semantics. This is the 100 TB streaming shape — the
     unbounded table is the fact stream; dimensions stay static."""
-    from xova_spark.operators.timechannel import BL_KEYS, PART_KEYS
-
     dim = rows_static.select("row_id", *PART_KEYS, *BL_KEYS, "TIME")
     j = vis_stream.join(dim, "row_id").withColumn(
         "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
     )
-    ts = F.timestamp_seconds(F.col("TIME"))
-    fl, w = F.col("flag"), F.col("weight_sp")
-    n_unfl = F.count(F.when(~fl, F.lit(1)))
-
-    def wmean(x):
-        return F.when(
-            n_unfl > 0, F.sum(F.when(~fl, w * x)) / F.sum(F.when(~fl, w))
-        ).otherwise(F.sum(w * x) / F.sum(w))
-
-    out = (
-        j.withColumn("ts", ts)
-        .withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", f"{time_bin_secs} seconds").alias("win"),
-            *PART_KEYS,
-            *BL_KEYS,
-            "chan_bin",
-            "corr",
-        )
-        .agg(
-            wmean(F.col("vis_re")).alias("vis_re"),
-            wmean(F.col("vis_im")).alias("vis_im"),
-            F.bool_and(fl).alias("flag"),
-            F.count("*").alias("n_samples"),
-        )
-    )
+    out = _windowed_vis(j, F.window("ts", f"{time_bin_secs} seconds"), watermark)
     return out.withColumn(
         "time_bin",
         F.floor(
@@ -277,8 +252,6 @@ def streaming_bda_vis(
     per-baseline RAGGED channel factor from the static decorrelation
     params. Stream-static joins attach the row dim and chan_fac; the
     stateful aggregation keys on session x baseline x chan_bin x corr."""
-    from xova_spark.operators.timechannel import BL_KEYS, PART_KEYS
-
     dim = rows_static.select("row_id", *PART_KEYS, *BL_KEYS, "TIME")
     fac = params_static.select(*PART_KEYS, *BL_KEYS, "chan_fac")
     j = (
@@ -288,31 +261,9 @@ def streaming_bda_vis(
             "chan_bin", F.floor(F.col("chan") / F.col("chan_fac")).cast("int")
         )
     )
-    fl, w = F.col("flag"), F.col("weight_sp")
-    n_unfl = F.count(F.when(~fl, F.lit(1)))
-
-    def wmean(x):
-        return F.when(
-            n_unfl > 0, F.sum(F.when(~fl, w * x)) / F.sum(F.when(~fl, w))
-        ).otherwise(F.sum(w * x) / F.sum(w))
-
-    out = (
-        j.withColumn("ts", F.timestamp_seconds(F.col("TIME")))
-        .withWatermark("ts", watermark)
-        .groupBy(
-            F.session_window(F.col("ts"), f"{gap_secs} seconds").alias("sess"),
-            *PART_KEYS,
-            *BL_KEYS,
-            "chan_bin",
-            "corr",
-        )
-        .agg(
-            wmean(F.col("vis_re")).alias("vis_re"),
-            wmean(F.col("vis_im")).alias("vis_im"),
-            F.bool_and(fl).alias("flag"),
-            F.count("*").alias("n_samples"),
-        )
+    out = _windowed_vis(
+        j, F.session_window(F.col("ts"), f"{gap_secs} seconds"), watermark
     )
     return out.withColumn(
-        "session_start", F.unix_timestamp(F.col("sess.start"))
-    ).drop("sess")
+        "session_start", F.unix_timestamp(F.col("win.start"))
+    ).drop("win")

@@ -16,50 +16,64 @@ partial agg, key-join merge, atomic swap — is identical.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xova_spark.operators.timechannel import finalize, vis_partials
 
-def _merge_into(batch_df: DataFrame, batch_id: int, out_dir: str, keys: list[str]):
-    spark = batch_df.sparkSession
-    partial = batch_df.groupBy(*keys).agg(
-        F.count("*").alias("n"), F.sum("value").alias("total")
-    )
-    tmp = os.path.join(out_dir, "_staged")
+
+def _upsert(partial: DataFrame, out_dir: str, keys: list[str], merge_aggs: list):
+    """Read-merge-overwrite of the stored state ``<out_dir>/current``:
+    union one micro-batch's partials with it, re-aggregate per key with
+    ``merge_aggs``, then stage-then-swap the result in, so a reader
+    never sees a half-written table."""
     cur = os.path.join(out_dir, "current")
     if os.path.exists(cur):
-        existing = spark.read.parquet(cur)
-        merged = (
-            existing.unionByName(partial)
+        partial = (
+            partial.sparkSession.read.parquet(cur)
+            .unionByName(partial)
             .groupBy(*keys)
-            .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
+            .agg(*merge_aggs)
         )
-    else:
-        merged = partial
-    # stage-then-swap: the reader never sees a half-written rollup
-    merged.write.mode("overwrite").parquet(tmp)
+    tmp = os.path.join(out_dir, "_staged")
+    partial.write.mode("overwrite").parquet(tmp)
     swap = os.path.join(out_dir, "_old")
     if os.path.exists(cur):
         os.rename(cur, swap)
     os.rename(tmp, cur)
     if os.path.exists(swap):
-        import shutil
-
         shutil.rmtree(swap)
+
+
+def _start(stream_df: DataFrame, merge, checkpoint: str):
+    """Start a maintenance query (availableNow) that hands every
+    micro-batch to ``merge(batch_df, batch_id)``; returns the handle."""
+    return (
+        stream_df.writeStream.foreachBatch(merge)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _merge_into(batch_df: DataFrame, batch_id: int, out_dir: str, keys: list[str]):
+    partial = batch_df.groupBy(*keys).agg(
+        F.count("*").alias("n"), F.sum("value").alias("total")
+    )
+    _upsert(
+        partial, out_dir, keys,
+        [F.sum("n").alias("n"), F.sum("total").alias("total")],
+    )
 
 
 def materialized_rollup(
     stream_df: DataFrame, out_dir: str, keys: list[str], checkpoint: str
 ):
     """Start the maintenance query (availableNow); returns the handle."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: _merge_into(df, bid, out_dir, keys)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream_df, lambda df, bid: _merge_into(df, bid, out_dir, keys), checkpoint
     )
 
 
@@ -70,71 +84,36 @@ def read_rollup(spark, out_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming MS maintenance: the averaging pipeline as a continuously
 # materialized output MS. Each micro-batch of visibility samples merges
-# DECOMPOSABLE A1a partials (count/sum pairs per component; flag merged
-# by AND) into the stored table; the final averaged columns — weighted
-# means with the fully-flagged fallback — derive at read time from the
-# partials. This is the reference's write path (app.py:107-116) turned
-# into incremental maintenance the batch engine cannot express.
+# the DECOMPOSABLE A1a partials (operators/timechannel.vis_partials:
+# counts and sums, flag merged by AND) into the stored table; the
+# averaged columns derive at read time through the same finalize the
+# batch average_vis uses. This is the reference's write path
+# (app.py:107-116) turned into incremental maintenance the batch engine
+# cannot express. Both pipelines share it: a BDA bin map and
+# ``F.col("chan_fac")`` as the channel divisor give the ragged bins.
 
 _VIS_KEYS = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1", "ANTENNA2",
              "time_bin", "chan_bin", "corr"]
-
-
-def _vis_partials(vis: DataFrame, bins: DataFrame, chan_bin_size: int) -> DataFrame:
-    """Per-(bin, chan_bin, corr) decomposable partials of the A1a
-    visibility aggregation (operators/timechannel.average_vis):
-    everything here merges by plain sum / AND across micro-batches."""
-    j = vis.join(bins, "row_id").withColumn(
-        "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
-    )
-    fl, w, s = F.col("flag"), F.col("weight_sp"), F.col("sigma_sp")
-    unfl = ~fl
-    return j.groupBy(*_VIS_KEYS).agg(
-        F.count("*").alias("n"),
-        F.count(F.when(unfl, F.lit(1))).alias("n_unfl"),
-        F.sum(F.when(unfl, w)).alias("sw_u"),
-        F.sum(F.when(unfl, w * F.col("vis_re"))).alias("swre_u"),
-        F.sum(F.when(unfl, w * F.col("vis_im"))).alias("swim_u"),
-        F.sum(F.when(unfl, w * w * s * s)).alias("sw2s2_u"),
-        F.sum(w).alias("sw_a"),
-        F.sum(w * F.col("vis_re")).alias("swre_a"),
-        F.sum(w * F.col("vis_im")).alias("swim_a"),
-        F.sum(w * w * s * s).alias("sw2s2_a"),
-        F.bool_and(fl).alias("flag_all"),
-    )
-
 
 _PARTIAL_SUMS = ["n", "n_unfl", "sw_u", "swre_u", "swim_u", "sw2s2_u",
                  "sw_a", "swre_a", "swim_a", "sw2s2_a"]
 
 
-def _merge_vis_into(batch_df: DataFrame, batch_id: int, out_dir: str,
-                    bins: DataFrame, chan_bin_size: int):
-    spark = batch_df.sparkSession
-    partial = _vis_partials(batch_df, bins, chan_bin_size)
-    cur = os.path.join(out_dir, "current")
-    if os.path.exists(cur):
-        merged = (
-            spark.read.parquet(cur)
-            .unionByName(partial)
-            .groupBy(*_VIS_KEYS)
-            .agg(
-                *[F.sum(c).alias(c) for c in _PARTIAL_SUMS],
-                F.bool_and("flag_all").alias("flag_all"),
-            )
-        )
-    else:
-        merged = partial
-    tmp = os.path.join(out_dir, "_staged")
-    merged.write.mode("overwrite").parquet(tmp)
-    swap = os.path.join(out_dir, "_old")
-    if os.path.exists(cur):
-        os.rename(cur, swap)
-    os.rename(tmp, cur)
-    if os.path.exists(swap):
-        import shutil
+def _vis_partials(vis: DataFrame, bins: DataFrame, chan_bin_size) -> DataFrame:
+    """Per-(bin, chan_bin, corr) vis_partials of one micro-batch."""
+    j = vis.join(bins, "row_id").withColumn(
+        "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
+    )
+    return j.groupBy(*_VIS_KEYS).agg(*vis_partials())
 
-        shutil.rmtree(swap)
+
+def _merge_vis_into(batch_df: DataFrame, batch_id: int, out_dir: str,
+                    bins: DataFrame, chan_bin_size):
+    _upsert(
+        _vis_partials(batch_df, bins, chan_bin_size), out_dir, _VIS_KEYS,
+        [*[F.sum(c).alias(c) for c in _PARTIAL_SUMS],
+         F.bool_and("flag_all").alias("flag_all")],
+    )
 
 
 def materialized_ms_vis(
@@ -142,153 +121,24 @@ def materialized_ms_vis(
     bins: DataFrame,
     out_dir: str,
     checkpoint: str,
-    chan_bin_size: int = 16,
+    chan_bin_size=16,
 ):
     """Start the MS-maintenance query (availableNow): every arriving
-    visibility file merges into the averaged output table."""
-    return (
-        vis_stream.writeStream.foreachBatch(
-            lambda df, bid: _merge_vis_into(df, bid, out_dir, bins, chan_bin_size)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    visibility file merges into the partial store. ``bins`` is a
+    timechannel or BDA bin map; ``chan_bin_size`` the channel divisor
+    (an int, or ``F.col("chan_fac")`` with a BDA map)."""
+    return _start(
+        vis_stream,
+        lambda df, bid: _merge_vis_into(df, bid, out_dir, bins, chan_bin_size),
+        checkpoint,
     )
 
 
 def finalize_vis(spark, out_dir: str) -> DataFrame:
-    """Derive the A1a averaged columns from the stored partials — the
-    same weighted-mean-with-fallback expressions as the batch
-    average_vis, evaluated over merged sums instead of raw samples."""
+    """The A1a averaged columns from the stored partials: _VIS_KEYS plus
+    the batch average_vis value columns, through the same finalize."""
     p = spark.read.parquet(os.path.join(out_dir, "current"))
-    has_u = F.col("n_unfl") > 0
-
-    def pick(u, a):
-        return F.when(has_u, F.col(u)).otherwise(F.col(a))
-
-    sw = pick("sw_u", "sw_a")
-    return p.select(
-        *_VIS_KEYS,
-        (pick("swre_u", "swre_a") / sw).alias("vis_re"),
-        (pick("swim_u", "swim_a") / sw).alias("vis_im"),
-        F.col("flag_all").alias("flag"),
-        sw.alias("weight_sp"),
-        (F.sqrt(pick("sw2s2_u", "sw2s2_a")) / sw).alias("sigma_sp"),
-        F.col("n").alias("n_samples"),
-    )
-
-
-# --- BDA maintenance: same partial-merge machinery, ragged bins ---------
-
-_BDA_KEYS = ["rep", "chan_bin", "corr"]
-
-
-def _bda_vis_partials(vis: DataFrame, bins: DataFrame) -> DataFrame:
-    """BDA twin of _vis_partials: the chan_bin width varies per baseline
-    (chan_fac from the bin map) and grouping keys on the compact
-    (rep, chan_bin, corr) surrogate (operators/bda.average_vis)."""
-    narrow = bins.select("row_id", "rep", "chan_fac")
-    j = vis.join(narrow, "row_id").withColumn(
-        "chan_bin", F.floor(F.col("chan") / F.col("chan_fac")).cast("int")
-    )
-    fl, w, s = F.col("flag"), F.col("weight_sp"), F.col("sigma_sp")
-    unfl = ~fl
-    return j.groupBy(*_BDA_KEYS).agg(
-        F.count("*").alias("n"),
-        F.count(F.when(unfl, F.lit(1))).alias("n_unfl"),
-        F.sum(F.when(unfl, w)).alias("sw_u"),
-        F.sum(F.when(unfl, w * F.col("vis_re"))).alias("swre_u"),
-        F.sum(F.when(unfl, w * F.col("vis_im"))).alias("swim_u"),
-        F.sum(F.when(unfl, w * w * s * s)).alias("sw2s2_u"),
-        F.sum(w).alias("sw_a"),
-        F.sum(w * F.col("vis_re")).alias("swre_a"),
-        F.sum(w * F.col("vis_im")).alias("swim_a"),
-        F.sum(w * w * s * s).alias("sw2s2_a"),
-        F.bool_and(fl).alias("flag_all"),
-    )
-
-
-def _merge_bda_vis_into(batch_df: DataFrame, batch_id: int, out_dir: str,
-                        bins: DataFrame):
-    spark = batch_df.sparkSession
-    partial = _bda_vis_partials(batch_df, bins)
-    cur = os.path.join(out_dir, "current")
-    if os.path.exists(cur):
-        merged = (
-            spark.read.parquet(cur)
-            .unionByName(partial)
-            .groupBy(*_BDA_KEYS)
-            .agg(
-                *[F.sum(c).alias(c) for c in _PARTIAL_SUMS],
-                F.bool_and("flag_all").alias("flag_all"),
-            )
-        )
-    else:
-        merged = partial
-    tmp = os.path.join(out_dir, "_staged")
-    merged.write.mode("overwrite").parquet(tmp)
-    swap = os.path.join(out_dir, "_old")
-    if os.path.exists(cur):
-        os.rename(cur, swap)
-    os.rename(tmp, cur)
-    if os.path.exists(swap):
-        import shutil
-
-        shutil.rmtree(swap)
-
-
-def materialized_bda_vis(
-    vis_stream: DataFrame,
-    bins: DataFrame,
-    out_dir: str,
-    checkpoint: str,
-):
-    """Start the BDA MS-maintenance query (availableNow): every arriving
-    visibility file merges into the ragged-binned partial store."""
-    return (
-        vis_stream.writeStream.foreachBatch(
-            lambda df, bid: _merge_bda_vis_into(df, bid, out_dir, bins)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def finalize_bda_vis(spark, out_dir: str, bins: DataFrame) -> DataFrame:
-    """Derive the A1a averaged columns from merged BDA partials and
-    re-attach the wide bin keys by broadcast dim join — the streamed
-    twin of operators/bda.average_vis (same output schema)."""
-    from xova_spark.operators.timechannel import BIN_KEYS
-
-    p = spark.read.parquet(os.path.join(out_dir, "current"))
-    has_u = F.col("n_unfl") > 0
-
-    def pick(u, a):
-        return F.when(has_u, F.col(u)).otherwise(F.col(a))
-
-    sw = pick("sw_u", "sw_a")
-    derived = p.select(
-        *_BDA_KEYS,
-        (pick("swre_u", "swre_a") / sw).alias("vis_re"),
-        (pick("swim_u", "swim_a") / sw).alias("vis_im"),
-        F.col("flag_all").alias("flag"),
-        sw.alias("weight_sp"),
-        (F.sqrt(pick("sw2s2_u", "sw2s2_a")) / sw).alias("sigma_sp"),
-        F.col("n").alias("n_samples"),
-    )
-    dim = bins.select("rep", *BIN_KEYS).distinct()
-    return derived.join(dim, "rep").select(
-        *BIN_KEYS,
-        "chan_bin",
-        "corr",
-        "vis_re",
-        "vis_im",
-        "flag",
-        "weight_sp",
-        "sigma_sp",
-        "n_samples",
-    )
+    return p.select(*_VIS_KEYS, *finalize())
 
 
 # ---------------------------------------------------------------------------
@@ -315,43 +165,20 @@ def _cdc_compact_batch(batch_df: DataFrame) -> DataFrame:
 
 
 def _cdc_merge_into(batch_df: DataFrame, batch_id: int, out_dir: str):
-    spark = batch_df.sparkSession
-    partial = _cdc_compact_batch(batch_df)
-    cur = os.path.join(out_dir, "current")
-    if os.path.exists(cur):
-        ordk = F.struct(F.col("last_ts_us"), F.col("last_event_id"))
-        merged = (
-            spark.read.parquet(cur)
-            .unionByName(partial)
-            .groupBy(*_CDC_KEYS)
-            .agg(
-                F.max_by("last_event_id", ordk).alias("last_event_id"),
-                F.max_by("last_value", ordk).alias("last_value"),
-                F.max("last_ts_us").alias("last_ts_us"),
-                F.sum("n_versions").alias("n_versions"),
-            )
-        )
-    else:
-        merged = partial
-    tmp = os.path.join(out_dir, "_staged")
-    merged.write.mode("overwrite").parquet(tmp)
-    swap = os.path.join(out_dir, "_old")
-    if os.path.exists(cur):
-        os.rename(cur, swap)
-    os.rename(tmp, cur)
-    if os.path.exists(swap):
-        import shutil
-
-        shutil.rmtree(swap)
+    ordk = F.struct(F.col("last_ts_us"), F.col("last_event_id"))
+    _upsert(
+        _cdc_compact_batch(batch_df), out_dir, _CDC_KEYS,
+        [
+            F.max_by("last_event_id", ordk).alias("last_event_id"),
+            F.max_by("last_value", ordk).alias("last_value"),
+            F.max("last_ts_us").alias("last_ts_us"),
+            F.sum("n_versions").alias("n_versions"),
+        ],
+    )
 
 
 def materialized_cdc_state(stream_df: DataFrame, out_dir: str, checkpoint: str):
     """Start the CDC latest-state maintenance query (availableNow)."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: _cdc_merge_into(df, bid, out_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream_df, lambda df, bid: _cdc_merge_into(df, bid, out_dir), checkpoint
     )
