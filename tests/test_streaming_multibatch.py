@@ -194,7 +194,12 @@ def test_bda_vis_session_invariance_under_real_triggers(
 
     oneshot = SA.run_to_memory(
         SA.streaming_bda_vis(
-            SA.read_vis_stream(spark, ms_dir), ms["ms_rows"], params, 4.0
+            SA.parquet_stream(
+                spark,
+                os.path.join(ms_dir, "ms_vis.parquet"),
+                os.path.join(ms_dir, "stream", "ms_vis"),
+            ),
+            ms["ms_rows"], params, 4.0,
         ),
         "mb_bda_oneshot",
     ).toPandas()

@@ -760,6 +760,7 @@ class Application:
         args = self.args
         spark = self._session()
         from xova_spark.operators import timechannel as tc
+        from xova_spark.streaming.average import parquet_stream
         from xova_spark.streaming.materialize import (
             finalize_vis,
             materialized_ms_vis,
@@ -767,27 +768,8 @@ class Application:
 
         vis_dir = args.vis_dir or os.path.join(args.ms, "ms_vis.parquet")
         checkpoint = args.checkpoint or args.output + ".ckpt"
-        schema = spark.read.parquet(vis_dir).schema
-        # The file stream source requires a directory (it force-sets
-        # basePath to the load path for non-glob paths); a single-file
-        # vis source (the fixture layout) is staged behind a symlink dir.
-        if not os.path.isdir(vis_dir):
-            staged = args.output + ".vis_src"
-            os.makedirs(staged, exist_ok=True)
-            link = os.path.join(staged, os.path.basename(vis_dir))
-            if not os.path.exists(link):
-                try:
-                    os.symlink(os.path.abspath(vis_dir), link)
-                except OSError:
-                    import shutil
-
-                    shutil.copy(vis_dir, link)
-            vis_dir = staged
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .format("parquet")
-            .load(vis_dir)
+        stream = parquet_stream(
+            spark, vis_dir, args.output + ".vis_src", maxFilesPerTrigger="1"
         )
         part_dir = args.output + ".partials"
         # Rerun safety: the checkpoint is what prevents re-consuming

@@ -34,8 +34,6 @@ single shuffle. Skewed baselines are handled by AQE skew-join splitting.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -47,23 +45,6 @@ BIN_KEYS = PART_KEYS + BL_KEYS + ["time_bin"]
 # so 4M rows ~ 256 MB build side — comfortably under executor memory on
 # the design-point cluster, far above the bench fixtures.
 DEFAULT_MAP_BROADCAST_ROWS = 4_000_000
-
-
-def planned_broadcast(df: DataFrame, limit_rows: int | None = None):
-    """Size-GATED broadcast hint for tables that scale with the input
-    (row -> bin maps, per-output-bin dims).
-
-    An unconditional hint is a 100 TB driver OOM; NO hint makes AQE
-    stage the big-table side through a shuffle write before its runtime
-    conversion can kick in (6x slower at bench scale). So do what the
-    reference does: an eager planning pass (its dataset_chunks computes
-    chunk stats up front, chunking.py:281-285) — here one cheap count()
-    of the ROW-scale map (3 orders of magnitude smaller than the sample
-    table) decides. Small -> hint broadcast (single-shuffle plan);
-    large -> plain join, AQE picks the strategy at 100 TB."""
-    if map_fits_broadcast(df, limit_rows):
-        return F.broadcast(df)
-    return df
 
 
 # Decision memo keyed by DataFrame object: a pipeline builds ONE bin map
@@ -81,9 +62,9 @@ _EST_CONFIRM_BYTES_PER_ROW = 8
 
 
 def map_fits_broadcast(df: DataFrame, limit_rows: int | None = None) -> bool:
-    """The planning decision behind planned_broadcast, reusable when one
-    decision covers several derived joins (average_vis hints BOTH its
-    row-map and bin-dim sides from a single count).
+    """Size gate for broadcast-hinting tables that scale with the input
+    (row -> bin maps, per-output-bin dims); one decision covers several
+    derived joins (average_vis hints BOTH its row-map and bin-dim sides).
 
     Two stages, cheapest first: (1) Catalyst's free plan-statistics
     estimate may CONFIRM a small map with no job at all (scan-derived
@@ -93,9 +74,7 @@ def map_fits_broadcast(df: DataFrame, limit_rows: int | None = None) -> bool:
     this count is the path a genuinely large input takes, and its False
     verdict is what keeps 100 TB plans hint-free."""
     if limit_rows is None:
-        limit_rows = int(
-            os.environ.get("XOVA_MAP_BROADCAST_ROWS", DEFAULT_MAP_BROADCAST_ROWS)
-        )
+        limit_rows = DEFAULT_MAP_BROADCAST_ROWS
     if limit_rows <= 0:
         return False
     hit = _FITS_CACHE.get(id(df))
@@ -227,7 +206,7 @@ def _reattach(
 ) -> DataFrame:
     # The rep -> keys dim has one row per OUTPUT bin, which scales with
     # the input — the broadcast hint is applied only when the caller's
-    # planning count said the map side fits (planned_broadcast).
+    # planning count said the map side fits (map_fits_broadcast).
     dim = bins.select("rep", *BIN_KEYS).distinct()
     head = ["rep", *BIN_KEYS] if keep_rep else BIN_KEYS
     joined = agg.join(F.broadcast(dim) if hint else dim, "rep")
@@ -244,7 +223,7 @@ def average_weights(
     SIGMA = sqrt(sum(w²σ²))/sum(w) — weighted RMS (A1a).
 
     The row -> bin map has one entry per MS row; its join strategy is
-    size-gated by one planning count (planned_broadcast): hinted
+    size-gated by one planning count (map_fits_broadcast): hinted
     broadcast when small, AQE's choice at 100 TB."""
     fits = map_fits_broadcast(bins, map_broadcast_rows)
     narrow = bins.select("row_id", "rep", "FLAG_ROW")

@@ -580,7 +580,7 @@ def dedup_cc_clusters(spark, sf_dir):
     oracle, which IS the exhaustive referee).
 
     SIZE-GATED execution (same philosophy as timechannel's
-    planned_broadcast): the verified-edge set is the near-dup pairs
+    map_fits_broadcast): the verified-edge set is the near-dup pairs
     only — typically orders of magnitude smaller than the corpus. When
     it fits comfortably on the driver (<= ``_CC_COLLECT_EDGES`` pairs,
     ~100 MB), a driver-side union-find computes exact min-label

@@ -215,7 +215,9 @@ def stream_tc_vis(spark, sf_dir):
     from xova_spark.sources.ms_fixture import load_ms
 
     t = load_ms(spark, _DIR)
-    stream = SA.read_vis_stream(spark, _DIR)
+    stream = SA.parquet_stream(
+        spark, f"{_DIR}/ms_vis.parquet", f"{_DIR}/stream/ms_vis"
+    )
     name = f"q_stream_tc_vis_{next(_uniq)}"
     return SA.run_to_memory(
         SA.streaming_average_vis(stream, t["ms_rows"], _VIS_BIN, _VIS_CHAN_BIN),
@@ -240,7 +242,9 @@ def stream_bda_vis(spark, sf_dir):
         t["ms_rows"], B.ddid_dims(t), bq.DECORR, bq.MAX_FOV, bq.TIME_CAP,
         bq.MIN_NCHAN,
     )
-    stream = SA.read_vis_stream(spark, _DIR)
+    stream = SA.parquet_stream(
+        spark, f"{_DIR}/ms_vis.parquet", f"{_DIR}/stream/ms_vis"
+    )
     name = f"q_stream_bda_vis_{next(_uniq)}"
     return SA.run_to_memory(
         SA.streaming_bda_vis(stream, t["ms_rows"], params, _GAP), name

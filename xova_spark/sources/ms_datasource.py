@@ -30,16 +30,6 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, EqualTo, InputP
 
 PUSHABLE = {"FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1", "ANTENNA2"}
 
-_PA_TO_DDL = {
-    "int32": "int",
-    "int64": "bigint",
-    "double": "double",
-    "float": "float",
-    "bool": "boolean",
-    "string": "string",
-    "large_string": "string",
-}
-
 
 @dataclass
 class RowGroupPartition(InputPartition):
@@ -57,17 +47,10 @@ class MSDataSource(DataSource):
         table = self.options.get("table", "ms_rows")
         return os.path.join(self.options["path"], f"{table}.parquet")
 
-    def schema(self) -> str:
-        import pyarrow.parquet as pq
+    def schema(self):
+        from xova_spark.sources.ms_writer import footer_schema
 
-        sch = pq.read_schema(self._file())
-        cols = []
-        for field in sch:
-            ddl = _PA_TO_DDL.get(str(field.type))
-            if ddl is None:
-                raise ValueError(f"unmapped MS column type: {field.type}")
-            cols.append(f"`{field.name}` {ddl}")
-        return ", ".join(cols)
+        return footer_schema(self._file())
 
     def reader(self, schema) -> "MSReader":
         return MSReader(self._file())

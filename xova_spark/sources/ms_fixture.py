@@ -42,6 +42,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+# The fixture is an MS in the input layout; ms_writer owns the format.
+from xova_spark.sources.ms_writer import load_ms  # noqa: F401
+
 DEFAULT_CACHE = "/root/repo/.cache/ms_fixture"
 
 # (nchan, ncorr) per DDID — reference testing_data.py:41-42,55.
@@ -271,76 +274,3 @@ def _generate(out: str, na: int, ntime: int, seed: int) -> None:
         ),
         os.path.join(out, "antenna.parquet"),
     )
-
-
-KNOWN_TABLES = (
-    "ms_rows",
-    "ms_weights",
-    "ms_vis",
-    "spw_chans",
-    "spw_meta",
-    "ddid",
-    "pol",
-    "field",
-    "antenna",
-)
-
-
-def load_ms(spark, ms_dir: str) -> dict:
-    """Open an MS directory as a table dict; register temp views.
-
-    Accepts BOTH layouts so the engine can re-open its own output (the
-    reference's average-then-check workflow, check.py:22-76):
-    - fixture layout: ``<ms>/<name>.parquet`` files,
-    - write_ms layout: ``<ms>/<name>/`` parquet dataset directories.
-    Tables missing from the directory are skipped rather than an error
-    (a BDA output also carries spw/ddid_map lineage tables; a stream
-    output may omit row tables), and any EXTRA table present — known to
-    this engine or not — is loaded too (the read-side of the S10
-    wholesale subtable passthrough, subtables.py:9-37). A table that is
-    present but unreadable — any ``<name>.parquet`` entry, or the
-    directory of a KNOWN_TABLES name — raises an error naming it, so no
-    table silently drops out of the output; other directories that are
-    not parquet datasets (scratch dirs, checkpoints) are skipped. Table
-    keywords saved by write_ms come back under ``_keywords``."""
-    out = {}
-    names = list(KNOWN_TABLES)
-    for entry in sorted(os.listdir(ms_dir)):
-        stem = entry[:-8] if entry.endswith(".parquet") else entry
-        if stem not in names and not stem.startswith("_"):
-            names.append(stem)
-    from xova_spark.sources.ms_writer import (
-        empty_from_manifest,
-        load_manifest_schemas,
-    )
-
-    schemas = load_manifest_schemas(ms_dir)
-    for name in names:
-        for candidate in (os.path.join(ms_dir, f"{name}.parquet"),
-                          os.path.join(ms_dir, name)):
-            if os.path.exists(candidate):
-                try:
-                    df = spark.read.parquet(candidate)
-                except Exception as exc:  # noqa: BLE001 — classified below
-                    # An EMPTY table (0-row partitioned write leaves no
-                    # parquet footer) comes back as a 0-row frame via
-                    # write_ms's schema manifest.
-                    df = empty_from_manifest(spark, schemas, name)
-                    if df is None:
-                        if candidate.endswith(".parquet") or name in KNOWN_TABLES:
-                            raise RuntimeError(
-                                f"MS table {name!r} cannot be read: {candidate}"
-                            ) from exc
-                        # Not a parquet dataset and not a known table: a
-                        # scratch dir or checkpoint, not a subtable.
-                        continue
-                df.createOrReplaceTempView(name)
-                out[name] = df
-                break
-    kw_path = os.path.join(ms_dir, "_keywords.json")
-    if os.path.exists(kw_path):
-        import json
-
-        with open(kw_path) as fh:
-            out["_keywords"] = json.load(fh)
-    return out

@@ -1,4 +1,5 @@
-"""MS output sink — parquet-backed Measurement Set writes (S8-S11).
+"""The MS directory contract — parquet-backed Measurement Set writes and
+opens (S8-S11).
 
 Re-expresses the reference's write path (reference: xova/apps/xova/
 app.py:107-116 main+subtable writes, app.py:152-159 --force overwrite
@@ -6,6 +7,12 @@ guard, subtables.py:9-37 passthrough copy): one directory per MS, one
 parquet dataset per table, the main row table partitioned by the
 GROUP_COLS so partition-value filters (P1) become partition pruning on
 re-read.
+
+The write alone defines an output MS: its tables and the
+``_schemas.json`` manifest (table -> Spark schema) are committed with
+one rename. ``load_ms`` gives Spark every schema up front — from the
+manifest, or from the footers of an input ``<name>.parquet`` layout —
+so an open submits no Spark job.
 
 Scale design: the main table write is ``partitionBy(FIELD_ID,
 DATA_DESC_ID)`` — low-cardinality directory keys (fields x ddids), with
@@ -16,15 +23,21 @@ counts. AQE coalescing handles the reference's small-output compaction
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import shutil
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 MAIN_PARTITION_COLS = ("FIELD_ID", "DATA_DESC_ID")
 
-# Tables whose rows the averaging pipelines rewrite; everything else is
-# passthrough (ref subtables.py:9-37 copies them wholesale).
-MAIN_TABLES = ("ms_rows", "ms_weights", "ms_vis")
+MANIFEST = "_schemas.json"
+KEYWORDS = "_keywords.json"
 
 # Zone-map layout: sort within each write task before writing so parquet
 # row-group min/max statistics become tight, disjoint ranges — a re-read
@@ -45,84 +58,114 @@ class OutputExistsError(RuntimeError):
 
 
 def write_ms(tables: dict, path: str, force: bool = False) -> None:
-    """S8/S9/S10/S11: write every DataFrame in ``tables`` under
+    """S8/S9/S10/S11: write every DataFrame in ``tables`` as the MS
     ``path``; refuse to overwrite unless force (app.py:152-159).
+
+    Everything goes into ``<path>.tmp-<id>``, which one rename commits;
+    with force the old ``path`` is first moved to ``<path>.old-<id>``
+    and removed after. A write that raises removes the staging dir.
 
     A ``_keywords`` entry (a plain JSON-able dict, keyed by table name)
     is persisted as ``<path>/_keywords.json`` — the parquet-layout
     analogue of the reference's table-keyword relink on passthrough
     subtables (subtables.py:35 putkeywords); load_ms restores it."""
-    if os.path.exists(path):
-        if not force:
-            raise OutputExistsError(
-                f"{path} exists. Use force=True to overwrite (ref --force)."
-            )
-    mode = "overwrite" if force else "errorifexists"
-    schemas: dict[str, str] = {}
-    for name, df in tables.items():
-        if not isinstance(df, DataFrame):
-            continue
-        # Schema manifest: df.schema.json() costs no job, and it is what
-        # lets load_ms re-open an EMPTY table — a partitioned
-        # write of 0 rows leaves only _SUCCESS (no footer to infer
-        # from), which must come back as a 0-row frame with the right
-        # schema, not a silently missing table (empty selections are
-        # routine at scale).
-        schemas[name] = df.schema.json()
-        sort_cols = [c for c in SORT_WITHIN.get(name, ()) if c in df.columns]
-        if sort_cols:
-            df = df.sortWithinPartitions(*sort_cols)
-        writer = df.write.mode(mode)
-        if name == "ms_rows":
-            part = [c for c in MAIN_PARTITION_COLS if c in df.columns]
-            if part:
-                writer = writer.partitionBy(*part)
-        writer.parquet(os.path.join(path, name))
-    if schemas:
-        import json
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "_schemas.json"), "w") as fh:
-            json.dump(schemas, fh, indent=1, sort_keys=True)
-    keywords = tables.get("_keywords")
-    if isinstance(keywords, dict):
-        import json
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "_keywords.json"), "w") as fh:
-            json.dump(keywords, fh, indent=1, sort_keys=True)
-    if force and os.path.isdir(path):
-        # A table directory the new output does not have must not
-        # survive from the old one: load_ms would re-open it as part of
-        # the new MS. After the writes, so a passthrough table read from
-        # ``path`` itself is already copied.
-        import shutil
-
-        for entry in os.listdir(path):
-            full = os.path.join(path, entry)
-            if entry not in schemas and os.path.isdir(full):
-                shutil.rmtree(full)
-
-
-def load_manifest_schemas(path: str) -> dict:
-    """The `_schemas.json` manifest write_ms leaves beside the tables
-    (empty dict if absent / unreadable)."""
-    import json
-
+    path = os.path.normpath(path)
+    if os.path.exists(path) and not force:
+        raise OutputExistsError(
+            f"{path} exists. Use force=True to overwrite (ref --force)."
+        )
+    run = uuid.uuid4().hex[:12]
+    stage = f"{path}.tmp-{run}"
     try:
-        with open(os.path.join(path, "_schemas.json")) as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return {}
+        schemas: dict[str, str] = {}
+        for name, df in tables.items():
+            if not isinstance(df, DataFrame):
+                continue
+            # Free, and it is how load_ms reads an EMPTY table back: a
+            # partitioned write of 0 rows leaves no parquet footer.
+            schemas[name] = df.schema.json()
+            sort_cols = [c for c in SORT_WITHIN.get(name, ()) if c in df.columns]
+            if sort_cols:
+                df = df.sortWithinPartitions(*sort_cols)
+            writer = df.write
+            if name == "ms_rows":
+                part = [c for c in MAIN_PARTITION_COLS if c in df.columns]
+                if part:
+                    writer = writer.partitionBy(*part)
+            writer.parquet(os.path.join(stage, name))
+        os.makedirs(stage, exist_ok=True)
+        keywords = tables.get("_keywords")
+        if isinstance(keywords, dict):
+            with open(os.path.join(stage, KEYWORDS), "w") as fh:
+                json.dump(keywords, fh, indent=1, sort_keys=True)
+        with open(os.path.join(stage, MANIFEST), "w") as fh:
+            json.dump(schemas, fh, indent=1, sort_keys=True)
+        if os.path.exists(path):
+            old = f"{path}.old-{run}"
+            os.rename(path, old)
+            try:
+                os.rename(stage, path)
+            except OSError:
+                os.rename(old, path)
+                raise
+            shutil.rmtree(old)
+        else:
+            os.rename(stage, path)
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
 
 
-def empty_from_manifest(spark: SparkSession, schemas: dict, name: str):
-    """Reconstruct a 0-row DataFrame from the manifest schema, or None."""
-    sch = schemas.get(name)
-    if not sch:
-        return None
-    import json
+def footer_schema(path: str) -> StructType:
+    """The Spark schema of a parquet file — or of the first one in a
+    directory — from its footer, read on the driver: no Spark job."""
+    if os.path.isdir(path):
+        files = glob.glob(os.path.join(glob.escape(path), "*.parquet"))
+        path = min(files, default=path)
+    try:
+        arrow = pq.read_schema(path)
+    except (OSError, ValueError) as exc:  # ArrowInvalid is a ValueError
+        raise RuntimeError(f"unreadable parquet footer: {path}") from exc
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
 
-    from pyspark.sql.types import StructType
 
-    return spark.createDataFrame([], StructType.fromJson(json.loads(sch)))
+def load_ms(spark, ms_dir: str) -> dict:
+    """Open an MS directory as a table dict; register temp views.
+
+    Two layouts, so the engine re-opens its own output (the reference's
+    average-then-check workflow, check.py:22-76): the tables
+    ``_schemas.json`` lists (write_ms output), else every
+    ``<name>.parquet`` file (input), schema from its footer. Every table
+    is loaded, known to this engine or not (the read side of the S10
+    passthrough, subtables.py:9-37); nothing else in the directory is.
+    No Spark job runs; an empty table is a 0-row read. A corrupt
+    manifest or footer, or a missing listed table, raises naming it.
+    Keywords saved by write_ms come back under ``_keywords``."""
+    manifest = os.path.join(ms_dir, MANIFEST)
+    if os.path.exists(manifest):
+        try:
+            with open(manifest) as fh:
+                schemas = {
+                    name: StructType.fromJson(json.loads(sch))
+                    for name, sch in json.load(fh).items()
+                }
+        except (ValueError, TypeError, KeyError, AttributeError) as exc:
+            raise RuntimeError(f"corrupt MS manifest: {manifest}") from exc
+        paths = {name: os.path.join(ms_dir, name) for name in schemas}
+    else:
+        files = sorted(glob.glob(os.path.join(glob.escape(ms_dir), "*.parquet")))
+        if not files:
+            raise RuntimeError(f"not an MS: {ms_dir} has no {MANIFEST} or *.parquet")
+        paths = {os.path.basename(f)[: -len(".parquet")]: f for f in files}
+        schemas = {name: footer_schema(f) for name, f in paths.items()}
+    out = {}
+    for name, path in paths.items():
+        if not os.path.exists(path):
+            raise RuntimeError(f"MS table {name!r} is missing: {path}")
+        out[name] = spark.read.schema(schemas[name]).parquet(path)
+        out[name].createOrReplaceTempView(name)
+    kw_path = os.path.join(ms_dir, KEYWORDS)
+    if os.path.exists(kw_path):
+        with open(kw_path) as fh:
+            out["_keywords"] = json.load(fh)
+    return out

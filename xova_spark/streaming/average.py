@@ -31,25 +31,36 @@ from xova_spark.operators.timechannel import (
 )
 
 
-def read_rows_stream(spark: SparkSession, ms_dir: str) -> DataFrame:
-    """File-source stream over the main row table: each parquet file
-    arriving in the directory is a micro-batch (S1 as readStream).
-
-    The file source requires a directory; the fixture keeps one file
-    per table in a flat dir, so expose ``<ms_dir>/stream/ms_rows/`` with
-    the table file symlinked in (new files dropped there later become
-    further micro-batches)."""
+def parquet_stream(
+    spark: SparkSession, path: str, stage_dir: str, **options
+) -> DataFrame:
+    """File-source stream over the parquet file or directory ``path``
+    (S1 as readStream): each file in the directory is a micro-batch.
+    The schema comes from the footer (no Spark job). The file source
+    needs a directory (it force-sets basePath to a non-glob load path),
+    so a single file is staged as a symlink in ``stage_dir`` — files
+    dropped there later become further micro-batches."""
     import os
 
-    src = os.path.join(ms_dir, "ms_rows.parquet")
-    stream_dir = os.path.join(ms_dir, "stream", "ms_rows")
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "part-0.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    static = spark.read.parquet(src)
+    from xova_spark.sources.ms_writer import footer_schema
+
+    schema = footer_schema(path)
+    if not os.path.isdir(path):
+        os.makedirs(stage_dir, exist_ok=True)
+        link = os.path.join(stage_dir, "part-0.parquet")
+        if not os.path.lexists(link):
+            os.symlink(os.path.abspath(path), link)
+        path = stage_dir
     return (
-        spark.readStream.schema(static.schema).format("parquet").load(stream_dir)
+        spark.readStream.schema(schema).options(**options).format("parquet")
+        .load(path)
+    )
+
+
+def read_rows_stream(spark: SparkSession, ms_dir: str) -> DataFrame:
+    """Stream over the fixture's main row table."""
+    return parquet_stream(
+        spark, f"{ms_dir}/ms_rows.parquet", f"{ms_dir}/stream/ms_rows"
     )
 
 
@@ -181,22 +192,6 @@ def run_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
         )
         q.awaitTermination()
     return spark.table(name)
-
-
-def read_vis_stream(spark: SparkSession, ms_dir: str) -> DataFrame:
-    """File-source stream over the visibility sample table."""
-    import os
-
-    src = os.path.join(ms_dir, "ms_vis.parquet")
-    stream_dir = os.path.join(ms_dir, "stream", "ms_vis")
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "part-0.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    static = spark.read.parquet(src)
-    return (
-        spark.readStream.schema(static.schema).format("parquet").load(stream_dir)
-    )
 
 
 def _windowed_vis(j: DataFrame, window, watermark: str) -> DataFrame:

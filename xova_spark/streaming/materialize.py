@@ -31,8 +31,10 @@ def _upsert(partial: DataFrame, out_dir: str, keys: list[str], merge_aggs: list)
     never sees a half-written table."""
     cur = os.path.join(out_dir, "current")
     if os.path.exists(cur):
+        # The merged state has the partials' columns, order and types,
+        # so it is read with their schema: no inference job per trigger.
         partial = (
-            partial.sparkSession.read.parquet(cur)
+            partial.sparkSession.read.schema(partial.schema).parquet(cur)
             .unionByName(partial)
             .groupBy(*keys)
             .agg(*merge_aggs)
