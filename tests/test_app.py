@@ -92,6 +92,20 @@ def test_app_field_name_resolution(spark, ms_dir, tmp_path):
     assert set(back["ms_rows"].toPandas()["FIELD_ID"]) == {1}
 
 
+@pytest.mark.parametrize("spec", ["NOSUCH", "0,NOSUCH", "7"])
+def test_app_unknown_field_fails_before_writing(spark, ms_dir, tmp_path, spec):
+    """A -f spec that matches no FIELD row fails the run, naming it,
+    before any table is written — dropping it would leave the filter
+    off (every field averaged) or quietly narrow the selection."""
+    out = tmp_path / "out.ms"
+    with pytest.raises(ValueError, match=spec.split(",")[-1]):
+        Application(
+            ["timechannel", ms_dir, "-t", "4", "-f", spec, "-o", str(out)],
+            spark=spark,
+        ).execute()
+    assert not out.exists()
+
+
 def test_app_bda(spark, ms_dir, tmp_path):
     out = _run(
         spark, ms_dir, tmp_path,
@@ -179,6 +193,112 @@ def test_app_stream_bda_matches_batch_average(spark, ms_dir, tmp_path):
         spark=spark,
     ).execute()
     _assert_same_ms(spark, streamed, batch)
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_app_run_releases_its_holds(spark, ms_dir, tmp_path):
+    """The frames a run holds are released when it returns, and when it
+    raises after the operators have built and held their plans (a
+    second run to the same -o without --force)."""
+    from xova_spark.sources.ms_writer import OutputExistsError
+
+    spark.catalog.clearCache()  # frames other tests' registry queries share
+    for cmd in (["timechannel", ms_dir, "-t", "4"],
+                ["bda", ms_dir, "-d", "0.95", "-fov", "0.315", "-t", "16"]):
+        out = str(tmp_path / f"{cmd[0]}.ms")
+        Application([*cmd, "-o", out], spark=spark).execute()
+        assert _cache_is_empty(spark), cmd[0]
+        with pytest.raises(OutputExistsError):
+            Application([*cmd, "-o", out], spark=spark).execute()
+        assert _cache_is_empty(spark), cmd[0]
+
+
+def test_operators_outside_a_run_hold_nothing(spark, ms):
+    """timechannel() and bda() called outside held() (tests, registry
+    queries, replays) leave nothing cached."""
+    from xova_spark.operators.bda import bda
+    from xova_spark.operators.timechannel import timechannel
+
+    spark.catalog.clearCache()
+    for out in (timechannel(ms, 4.0, 8), bda(ms, 0.95, 0.315, 16.0)):
+        assert out["ms_vis"].count() > 0
+        assert _cache_is_empty(spark)
+
+
+def test_app_rerun_reads_changed_input(spark, ms_dir, tmp_path):
+    """A second run in the same session over an input overwritten in
+    place averages the new values — nothing the first run held is read
+    back. Changed: every visibility doubled, and every sample of a third
+    of the rows flagged (so the derived FLAG_ROW changes too)."""
+    import shutil
+
+    import pandas as pd
+
+    def change(ms):
+        path = os.path.join(ms, "ms_vis.parquet")
+        vis = pd.read_parquet(path)
+        vis["vis_re"] *= 2.0
+        vis["flag"] |= vis["row_id"] % 3 == 0
+        vis.to_parquet(path, index=False)
+
+    reused, fresh = str(tmp_path / "reused.ms"), str(tmp_path / "fresh.ms")
+    shutil.copytree(ms_dir, reused)
+    params = ["-t", "4", "-c", "8"]
+    Application(
+        ["timechannel", reused, "-o", str(tmp_path / "first.ms"), *params],
+        spark=spark,
+    ).execute()
+    change(reused)
+    again = Application(
+        ["timechannel", reused, "-o", str(tmp_path / "again.ms"), *params],
+        spark=spark,
+    ).execute()
+    shutil.copytree(ms_dir, fresh)
+    change(fresh)
+    want = Application(
+        ["timechannel", fresh, "-o", str(tmp_path / "want.ms"), *params],
+        spark=spark,
+    ).execute()
+    _assert_same_ms(spark, again, want)
+    first = load_ms(spark, str(tmp_path / "first.ms"))["ms_vis"]
+    assert first.exceptAll(load_ms(spark, again)["ms_vis"]).count() > 0
+
+
+def _last_job_id(sc) -> int:
+    sc.setJobGroup("job-probe", "job-probe")
+    try:
+        sc.parallelize([1], 1).count()
+        return max(sc.statusTracker().getJobIdsForGroup("job-probe"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+# Spark jobs of one whole CLI run on the test fixture, the streaming
+# trigger's jobs included (job ids are sequential per application). The
+# counts are deterministic. Before a run held its shared frames once,
+# they were timechannel 31, bda 115, stream 34.
+JOB_BUDGET = {"timechannel": 30, "bda": 49, "stream": 31}
+
+
+@pytest.mark.parametrize("command", sorted(JOB_BUDGET))
+def test_app_job_budget(spark, ms_dir, tmp_path, command):
+    """Each frame several output tables read is built once per run, so
+    a run costs no more Spark jobs than this budget."""
+    cmd = {
+        "timechannel": ["timechannel", ms_dir, "-t", "4", "-c", "16"],
+        "bda": ["bda", ms_dir, "-d", "0.95", "-fov", "0.315", "-t", "16",
+                "-mc", "2"],
+        "stream": ["stream", ms_dir, "--mode", "timechannel", "-t", "4",
+                   "-c", "16"],
+    }[command]
+    sc = spark.sparkContext
+    before = _last_job_id(sc)
+    Application([*cmd, "-o", str(tmp_path / "out.ms")], spark=spark).execute()
+    jobs = _last_job_id(sc) - before - 1
+    assert jobs <= JOB_BUDGET[command], jobs
 
 
 def test_app_unreadable_input_table_fails(spark, ms_dir, tmp_path):

@@ -4,6 +4,8 @@ does by hand must come out of Catalyst automatically)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,48 +87,65 @@ def test_bda_vis_plan(spark, ms):
     assert P.sortmerge_join_count(q) == 0, P.plan_stats(q)
 
 
-def test_timechannel_vis_broadcast_is_size_gated(spark, ms):
-    """The row -> bin map has one entry per MS row: an UNCONDITIONAL
-    broadcast hint there is a 100 TB driver OOM, while no hint stages
-    the sample table through an avoidable shuffle at bench scale. The
-    hint must be gated on the planning count: present when the map
-    measures small, ABSENT when the gate says it doesn't fit."""
+def _tc_map(ms):
     from xova_spark.operators import timechannel as tc
 
-    bins = tc.bin_map(ms["ms_rows"], 4.0)
-    # fixture scale: map fits -> hinted single-shuffle plan
-    assert P.broadcast_hint_count(tc.average_vis(ms["ms_vis"], bins)) > 0
-    # simulated 100 TB (gate forced shut): zero hints anywhere
-    assert P.broadcast_hint_count(
-        tc.average_vis(ms["ms_vis"], bins, map_broadcast_rows=0)
-    ) == 0
-    assert P.broadcast_hint_count(
-        tc.average_weights(ms["ms_weights"], bins, map_broadcast_rows=0)
-    ) == 0
+    return tc.bin_map(ms["ms_rows"], 4.0), 16
 
 
-def test_bda_vis_broadcast_is_size_gated(spark, ms):
-    """BDA sample-side chain: same gate. Feed a hint-free binned input
-    so any hint seen is one average_vis/bin_map added (the real
-    assign_bins subtree carries legit dim hints and appears twice in
-    average_vis's plan, which would double-count them)."""
+def _bda_map(ms):
+    """A BDA map over a hint-free binned input, so any hint seen is one
+    bin_map / average_* added (the real assign_bins subtree carries
+    legit dim hints)."""
     from xova_spark.operators import bda as B
-    from xova_spark.operators import timechannel as tc
 
     binned = (
         ms["ms_rows"]
         .withColumn("time_bin", F.lit(0))
         .withColumn("chan_fac", F.lit(2))
     )
-    assert P.broadcast_hint_count(
-        tc.average_vis(
-            ms["ms_vis"], B.bin_map(binned), F.col("chan_fac"),
-            map_broadcast_rows=0,
-        )
-    ) == 0, "gate shut but a row-scale broadcast hint survived"
-    assert P.broadcast_hint_count(
-        tc.average_vis(ms["ms_vis"], B.bin_map(binned), F.col("chan_fac"))
-    ) > 0, "map fits at fixture scale but was not hinted"
+    return B.bin_map(binned), F.col("chan_fac")
+
+
+@pytest.mark.parametrize("make_map", [_tc_map, _bda_map], ids=["timechannel", "bda"])
+def test_vis_joins_follow_broadcast_threshold(spark, ms, make_map):
+    """The row -> bin map has one entry per MS row, so its joins carry
+    no hint: a forced broadcast there is a 100 TB driver OOM. The
+    session's autoBroadcastJoinThreshold decides instead — on a held map
+    it sees the measured size and broadcasts at fixture scale, and with
+    the threshold off (the simulated 100 TB case) nothing on row_id is
+    broadcast."""
+    from xova_spark.operators import timechannel as tc
+
+    def outputs(bins, div):
+        return [
+            tc.average_weights(ms["ms_weights"], bins),
+            tc.average_vis(ms["ms_vis"], bins, div),
+        ]
+
+    # (a) no row-scale hint, at any size
+    for q in outputs(*make_map(ms)):
+        assert P.broadcast_hint_count(q) == 0, P.executed_plan(q)
+    # (b) fixture scale, map held: every row-scale join is broadcast
+    with tc.held():
+        bins, div = make_map(ms)
+        broadcast = []
+        for q in outputs(tc.hold(bins), div):
+            broadcast.append(sorted(q.collect()))
+            assert P.sortmerge_join_count(q) == 0, P.plan_stats(q)
+    # (c) threshold off: no broadcast join on row_id, same answer
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        with tc.held():
+            bins, div = make_map(ms)
+            for q, want in zip(outputs(tc.hold(bins), div), broadcast):
+                assert sorted(q.collect()) == want
+                plan = P.executed_plan(q).split("== Initial Plan ==")[0]
+                assert not re.search(r"BroadcastHashJoin \[row_id#", plan), plan
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_codegen_covers_hot_path(spark):

@@ -33,6 +33,8 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from xova_spark.operators.timechannel import held, hold
+
 
 # ---------------------------------------------------------------------------
 # Spec-string parsers (arguments.py:12-74)
@@ -314,21 +316,30 @@ class Application:
         return self.spark
 
     def _resolve_fields(self, tables: dict, fields: list) -> list[int]:
-        """Map field NAMEs to FIELD_IDs (the reference resolves names
-        against the FIELD subtable)."""
+        """Map field NAMEs and ids to FIELD_IDs (the reference resolves
+        names against the FIELD subtable). A spec that matches no FIELD
+        row raises, naming it: dropping it could leave no id, which would
+        turn the filter off and average every field."""
         if not fields:
             return []
-        names = {f for f in fields if isinstance(f, str)}
-        ids = [f for f in fields if isinstance(f, int)]
-        if names:
-            rows = tables["field"].filter(F.col("NAME").isin(list(names))).collect()
-            ids += [int(r["FIELD_ID"]) for r in rows]
-        return sorted(set(ids))
+        rows = tables["field"].select("FIELD_ID", "NAME").collect()
+        known = {int(r["FIELD_ID"]) for r in rows} | {r["NAME"] for r in rows}
+        unknown = [str(f) for f in fields if f not in known]
+        if unknown:
+            raise ValueError(
+                f"unknown field(s) {', '.join(unknown)}: no FIELD row of "
+                f"{self.args.ms} has that NAME or FIELD_ID"
+            )
+        return sorted(
+            int(r["FIELD_ID"]) for r in rows
+            if r["NAME"] in fields or int(r["FIELD_ID"]) in fields
+        )
 
     def _prepare(self, tables: dict) -> dict:
         """Shared input transforms: drop auto-correlations (S3 — pushed
         to the scan) and derive FLAG_ROW = all(FLAG) unless
-        --respect-flag-row (P2, averaging.py:224-225)."""
+        --respect-flag-row (P2, averaging.py:224-225). The prepared
+        rows are held: every output table derives from them."""
         rows = tables["ms_rows"]
         if not self.args.include_auto_correlations:
             rows = rows.filter(F.col("ANTENNA1") != F.col("ANTENNA2"))
@@ -343,7 +354,7 @@ class Application:
                 .withColumn("FLAG_ROW", F.coalesce(F.col("_fr"), F.col("FLAG_ROW")))
                 .drop("_fr")
             )
-        return {**tables, "ms_rows": rows}
+        return {**tables, "ms_rows": hold(rows)}
 
     def execute(self) -> str | None:
         args = self.args
@@ -382,18 +393,20 @@ class Application:
                 raise SystemExit(1)
             return None
 
-        if args.command == "stream":
-            # Same input maintenance as the batch commands: autocorr
-            # drop + FLAG_ROW derivation apply to the STATIC tables the
-            # stream aggregates against, so the drained result equals
-            # the batch run on the same flags.
-            return self._execute_stream(self._prepare(tables))
+        # The frames the run holds are released when it returns or raises.
+        with held():
+            if args.command == "stream":
+                # Same input maintenance as the batch commands: autocorr
+                # drop + FLAG_ROW derivation apply to the STATIC tables the
+                # stream aggregates against, so the drained result equals
+                # the batch run on the same flags.
+                return self._execute_stream(self._prepare(tables))
 
-        tables = self._prepare(tables)
-        fields = self._resolve_fields(tables, args.fields)
-        scans = list(args.scan_numbers) or None
-        out = self._average(tables, args.command, fields or None, scans)
-        return self._write_output(out, tables)
+            tables = self._prepare(tables)
+            fields = self._resolve_fields(tables, args.fields)
+            scans = list(args.scan_numbers) or None
+            out = self._average(tables, args.command, fields or None, scans)
+            return self._write_output(out, tables)
 
     def _average(
         self, tables: dict, pipeline: str, fields=None, scans=None
@@ -800,6 +813,9 @@ class Application:
         else:
             bins = tc.bin_map(rows, args.time_bin_secs)
             chan_div = args.chan_bin_size
+        # The same plan the operator held: every trigger's join reads
+        # the cache instead of repeating the FLAG_ROW pass.
+        bins = hold(bins)
         q = materialized_ms_vis(stream, bins, part_dir, checkpoint, chan_div)
         q.awaitTermination()
         # Same columns, order and reopen contract as the batch ms_vis:

@@ -60,6 +60,7 @@ from xova_spark.operators.timechannel import (
     PART_KEYS,
     average_vis,
     average_weights,
+    hold,
     row_aggs,
 )
 
@@ -321,13 +322,13 @@ def bda(
         rows = rows.filter(F.col("FIELD_ID").isin(fields))
     if scans:
         rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
-    params = bin_params(
+    params = hold(bin_params(
         rows, ddid_dims(tables), decorrelation, max_fov, time_bin_secs, min_nchan
-    )
+    ))
     binned = assign_bins(rows, params)
-    dmap = ddid_map(params, tables)
-    grid = spw_grid(params, tables)
-    bins = bin_map(binned)
+    dmap = hold(ddid_map(params, tables))
+    grid = hold(spw_grid(params, tables))
+    bins = hold(bin_map(binned))
     remapped = _remap_rows(average_rows(binned, with_row_id=True), dmap)
     rewritten = {
         "ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta", "ddid"

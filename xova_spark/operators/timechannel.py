@@ -27,12 +27,17 @@ Scale design: the row aggregation is one shuffle keyed on
 (partition, baseline) — the min-TIME window and the subsequent groupBy
 share that hash partitioning (HashPartitioning on a key subset satisfies
 the grouped distribution, so Catalyst inserts no second exchange). The
-vis aggregation joins the big samples table to the (row_id -> bin) map —
-broadcast when small, AQE shuffle-join otherwise — then aggregates in a
-single shuffle. Skewed baselines are handled by AQE skew-join splitting.
+vis aggregation joins the big samples table to the (row_id -> bin) map,
+then aggregates in a single shuffle. The row-scale joins carry no hint:
+the session's ``spark.sql.autoBroadcastJoinThreshold`` broadcasts the map
+when it is small (on a held map it sees the measured size) and AQE
+shuffle-joins it otherwise. Skewed baselines are handled by AQE
+skew-join splitting.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -40,60 +45,6 @@ from pyspark.sql import functions as F
 PART_KEYS = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER"]  # app.py:43 GROUP_COLS
 BL_KEYS = ["ANTENNA1", "ANTENNA2"]
 BIN_KEYS = PART_KEYS + BL_KEYS + ["time_bin"]
-
-# Size gate for broadcasting the row -> bin map: ~64 bytes/row serialized,
-# so 4M rows ~ 256 MB build side — comfortably under executor memory on
-# the design-point cluster, far above the bench fixtures.
-DEFAULT_MAP_BROADCAST_ROWS = 4_000_000
-
-
-# Decision memo keyed by DataFrame object: a pipeline builds ONE bin map
-# and derives several joins from it (rows/weights/vis) — one planning
-# count covers them all. The df reference is held so id() stays unique.
-_FITS_CACHE: dict[int, tuple[DataFrame, int, bool]] = {}
-# Catalyst's plan-statistics estimate is trustworthy in ONE direction
-# only: scan-derived plans carry (compressed) file bytes, so a SMALL
-# estimate really is small — but join nodes multiply child stats, so a
-# huge estimate may be garbage (measured: 3e18 "bytes" for a 2 MB BDA bin
-# map). The estimate therefore only ever CONFIRMS fits (zero planning
-# jobs); refusal always goes through the exact count. 8 bytes/row keeps
-# a 10x parquet-compression surprise under the broadcast design point.
-_EST_CONFIRM_BYTES_PER_ROW = 8
-
-
-def map_fits_broadcast(df: DataFrame, limit_rows: int | None = None) -> bool:
-    """Size gate for broadcast-hinting tables that scale with the input
-    (row -> bin maps, per-output-bin dims); one decision covers several
-    derived joins (average_vis hints BOTH its row-map and bin-dim sides).
-
-    Two stages, cheapest first: (1) Catalyst's free plan-statistics
-    estimate may CONFIRM a small map with no job at all (scan-derived
-    maps at bench scale); (2) otherwise one exact count(), memoized per
-    map object so sibling operators (average_rows / average_weights /
-    average_vis on the same bin map) share the single planning job —
-    this count is the path a genuinely large input takes, and its False
-    verdict is what keeps 100 TB plans hint-free."""
-    if limit_rows is None:
-        limit_rows = DEFAULT_MAP_BROADCAST_ROWS
-    if limit_rows <= 0:
-        return False
-    hit = _FITS_CACHE.get(id(df))
-    if hit is not None and hit[0] is df and hit[1] == limit_rows:
-        return hit[2]
-    fits = None
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        if est <= limit_rows * _EST_CONFIRM_BYTES_PER_ROW:
-            fits = True
-    except Exception:  # noqa: BLE001 — stats unavailable; fall through to count
-        pass
-    if fits is None:
-        fits = df.count() <= limit_rows
-    if len(_FITS_CACHE) > 512:
-        _FITS_CACHE.clear()
-    _FITS_CACHE[id(df)] = (df, limit_rows, fits)
-    return fits
-
 
 def _fallback(unflagged_expr, all_expr):
     """Aggregate over unflagged rows, falling back to all rows when the
@@ -197,37 +148,57 @@ def bin_map(rows: DataFrame, time_bin_secs: float = 2.0) -> DataFrame:
     )
 
 
+# The frames held by the innermost open held() scope; None outside one.
+_held: list[DataFrame] | None = None
+
+
+@contextmanager
+def held():
+    """Scope of one run's shared intermediates: every frame ``hold``
+    persists inside it is unpersisted when the scope exits, by return or
+    by raise. A nested scope restores the outer one on exit."""
+    global _held
+    outer, _held = _held, []
+    try:
+        yield
+    finally:
+        for df in _held:
+            df.unpersist()
+        _held = outer
+
+
+def hold(df: DataFrame) -> DataFrame:
+    """Build ``df`` once for the enclosing held() scope: persist it, with
+    no action — the first output table that reads it fills the cache.
+    Outside a scope the frame is returned unchanged."""
+    if _held is None:
+        return df
+    _held.append(df.persist())
+    return df
+
+
 def _reattach(
     agg: DataFrame,
     bins: DataFrame,
     tail_cols: list[str],
     keep_rep: bool = False,
-    hint: bool = False,
 ) -> DataFrame:
     # The rep -> keys dim has one row per OUTPUT bin, which scales with
-    # the input — the broadcast hint is applied only when the caller's
-    # planning count said the map side fits (map_fits_broadcast).
+    # the input: no hint, the broadcast threshold decides.
     dim = bins.select("rep", *BIN_KEYS).distinct()
     head = ["rep", *BIN_KEYS] if keep_rep else BIN_KEYS
-    joined = agg.join(F.broadcast(dim) if hint else dim, "rep")
-    return joined.select(*head, *tail_cols)
+    return agg.join(dim, "rep").select(*head, *tail_cols)
 
 
 def average_weights(
-    weights: DataFrame,
-    bins: DataFrame,
-    keep_rep: bool = False,
-    map_broadcast_rows: int | None = None,
+    weights: DataFrame, bins: DataFrame, keep_rep: bool = False
 ) -> DataFrame:
     """WEIGHT/SIGMA per (bin, corr): sum of weights over unflagged rows;
     SIGMA = sqrt(sum(w²σ²))/sum(w) — weighted RMS (A1a).
 
-    The row -> bin map has one entry per MS row; its join strategy is
-    size-gated by one planning count (map_fits_broadcast): hinted
-    broadcast when small, AQE's choice at 100 TB."""
-    fits = map_fits_broadcast(bins, map_broadcast_rows)
-    narrow = bins.select("row_id", "rep", "FLAG_ROW")
-    j = weights.join(F.broadcast(narrow) if fits else narrow, "row_id")
+    The row -> bin map has one entry per MS row, so its join carries no
+    hint (see the module docstring)."""
+    j = weights.join(bins.select("row_id", "rep", "FLAG_ROW"), "row_id")
     unfl = ~F.col("FLAG_ROW")
     w, s = F.col("WEIGHT"), F.col("SIGMA")
     sum_w = _fallback(F.sum(F.when(unfl, w)), F.sum(w))
@@ -238,7 +209,7 @@ def average_weights(
         sum_w.alias("WEIGHT"),
         (F.sqrt(sum_w2s2) / sum_w).alias("SIGMA"),
     )
-    return _reattach(agg, bins, ["corr", "WEIGHT", "SIGMA"], keep_rep, fits)
+    return _reattach(agg, bins, ["corr", "WEIGHT", "SIGMA"], keep_rep)
 
 
 VIS_VALUES = ["vis_re", "vis_im", "flag", "weight_sp", "sigma_sp", "n_samples"]
@@ -293,24 +264,20 @@ def finalize() -> list:
 def average_vis(
     vis: DataFrame, bins: DataFrame, chan_bin_size: int | Column = 16,
     keep_rep: bool = False,
-    map_broadcast_rows: int | None = None,
 ) -> DataFrame:
     """Visibility averaging per (bin, chan_bin, corr): finalize over
     vis_partials (A1/A1a). One shuffle of the big table, keyed on
     (rep, chan_bin, corr). ``chan_bin_size`` is the channel divisor: an
     int for timechannel, ``F.col("chan_fac")`` for BDA's per-baseline
-    ragged factor carried by its bin map. The row -> bin map join is
-    size-gated (see average_weights); one planning count covers both the
-    map and dim sides."""
-    fits = map_fits_broadcast(bins, map_broadcast_rows)
+    ragged factor carried by its bin map."""
     # The map's per-row payload: rep, plus chan_fac on a BDA map.
     narrow = bins.drop(*BIN_KEYS, "FLAG_ROW")
-    j = vis.join(F.broadcast(narrow) if fits else narrow, "row_id").withColumn(
+    j = vis.join(narrow, "row_id").withColumn(
         "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
     )
     keys = ["rep", "chan_bin", "corr"]
     agg = j.groupBy(*keys).agg(*vis_partials()).select(*keys, *finalize())
-    return _reattach(agg, bins, ["chan_bin", "corr", *VIS_VALUES], keep_rep, fits)
+    return _reattach(agg, bins, ["chan_bin", "corr", *VIS_VALUES], keep_rep)
 
 
 def average_spw(
@@ -369,7 +336,7 @@ def timechannel(
         rows = rows.filter(F.col("FIELD_ID").isin(fields))
     if scans:
         rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
-    bins = bin_map(rows, time_bin_secs)
+    bins = hold(bin_map(rows, time_bin_secs))
     out_chans, out_meta = average_spw(
         tables["spw_chans"], tables["spw_meta"], chan_bin_size
     )

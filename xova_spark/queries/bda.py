@@ -298,8 +298,8 @@ def _greedy_binned(spark):
     """The greedy-binned row map shared by bda_rows_greedy and
     bda_vis_greedy: assign_bins' params columns joined with the
     bit-greedy (row_id -> time_bin) map. Its lineage contains the
-    applyInPandas greedy stage, and downstream consumers scan it up to
-    three times (size-gate planning count + both hinted join sides) —
+    applyInPandas greedy stage, and downstream consumers scan it twice
+    (the row-map and the bin-dim join sides of average_vis) —
     routed through the session-scoped ``shared`` registry so the stage
     runs ONCE per session by construction (not by cache plan-equality)
     and the gate driver unpersists it at exit. O(rows) storage, spills."""

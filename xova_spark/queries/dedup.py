@@ -579,8 +579,7 @@ def dedup_cc_clusters(spark, sf_dir):
     quadratic all-pairs join (that form survives only in the DuckDB
     oracle, which IS the exhaustive referee).
 
-    SIZE-GATED execution (same philosophy as timechannel's
-    map_fits_broadcast): the verified-edge set is the near-dup pairs
+    SIZE-GATED execution: the verified-edge set is the near-dup pairs
     only — typically orders of magnitude smaller than the corpus. When
     it fits comfortably on the driver (<= ``_CC_COLLECT_EDGES`` pairs,
     ~100 MB), a driver-side union-find computes exact min-label

@@ -1597,7 +1597,7 @@ def graph_hits_scores(spark, sf_dir):
         )
 
     # NOTE (r10, measured): hinting the node-grain score side into the
-    # join (size-gated by map_fits_broadcast) was tried and REJECTED —
+    # join (behind a row-count size gate) was tried and REJECTED —
     # 2.91 s vs 1.92 s. The static plan broadcasts the cached edge
     # side, which looks backwards but is reused across all four
     # half-steps (ReuseExchange), and the join OUTPUT is edge-grain
