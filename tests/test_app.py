@@ -279,8 +279,9 @@ def _last_job_id(sc) -> int:
 # Spark jobs of one whole CLI run on the test fixture, the streaming
 # trigger's jobs included (job ids are sequential per application). The
 # counts are deterministic. Before a run held its shared frames once,
-# they were timechannel 31, bda 115, stream 34.
-JOB_BUDGET = {"timechannel": 30, "bda": 49, "stream": 31}
+# they were timechannel 31, bda 115, stream 34. ``stream_bda`` is
+# ``stream --mode bda``, binned by the operator's own held bin map.
+JOB_BUDGET = {"timechannel": 30, "bda": 49, "stream": 31, "stream_bda": 48}
 
 
 @pytest.mark.parametrize("command", sorted(JOB_BUDGET))
@@ -293,6 +294,8 @@ def test_app_job_budget(spark, ms_dir, tmp_path, command):
                 "-mc", "2"],
         "stream": ["stream", ms_dir, "--mode", "timechannel", "-t", "4",
                    "-c", "16"],
+        "stream_bda": ["stream", ms_dir, "--mode", "bda", "-d", "0.95",
+                       "-fov", "0.315", "-t", "16", "-mc", "2"],
     }[command]
     sc = spark.sparkContext
     before = _last_job_id(sc)
@@ -338,26 +341,43 @@ def test_app_force_removes_stale_tables(spark, ms_dir, tmp_path):
     assert check_spw(back).count() == 0
 
 
-def test_app_output_reopens_checks_and_reaverages(spark, ms_dir, tmp_path):
-    """The reference's average-then-check workflow (check.py:22-76) on
-    OUR OWN output: a written timechannel MS must load back through
-    load_ms (bare-directory layout), pass `check` cleanly, and feed a
-    second round of averaging."""
-    from xova_spark.operators.check import check_ms, check_spw
-    from xova_spark.operators.timechannel import timechannel
+# The averaging command lines the re-average round trip combines: the
+# first round, then a coarser second one.
+_AVERAGE_CMD = {
+    "timechannel": (["timechannel", "-t", "4", "-c", "8"],
+                    ["timechannel", "-t", "16", "-c", "2"]),
+    "bda": (["bda", "-d", "0.95", "-fov", "0.315", "-t", "16"],
+            ["bda", "-d", "0.95", "-fov", "0.315", "-t", "64"]),
+}
 
-    out = os.path.join(str(tmp_path), "reopen.ms")
-    Application(
-        ["timechannel", ms_dir, "-t", "4", "-c", "8", "-o", out], spark=spark
-    ).execute()
-    back = load_ms(spark, out)
-    assert check_ms(back).count() == 0
-    assert check_spw(back).count() == 0
-    # the check CLI itself accepts the written layout
-    Application(["check", out], spark=spark).execute()
+
+@pytest.mark.parametrize("second", sorted(_AVERAGE_CMD))
+@pytest.mark.parametrize("first", sorted(_AVERAGE_CMD))
+def test_app_output_reopens_checks_and_reaverages(
+    spark, ms_dir, tmp_path, first, second
+):
+    """The reference's average-then-check workflow (check.py:22-76) on
+    OUR OWN output: a written MS of either pipeline must load back
+    through load_ms (bare-directory layout), pass `check` cleanly, and
+    feed a second round of averaging by either pipeline, whose output
+    passes `check` too."""
+    from xova_spark.operators.check import check_ms, check_spw
+
+    def run(cmd, ms, out):
+        Application([cmd[0], ms, *cmd[1:], "-o", out], spark=spark).execute()
+        back = load_ms(spark, out)
+        assert check_ms(back).count() == 0, cmd[0]
+        assert check_spw(back).count() == 0, cmd[0]
+        # the check CLI itself accepts the written layout
+        Application(["check", out], spark=spark).execute()
+        return back
+
+    once = str(tmp_path / "once.ms")
+    back = run(_AVERAGE_CMD[first][0], ms_dir, once)
+    again = run(_AVERAGE_CMD[second][1], once, str(tmp_path / "again.ms"))
     # re-averaging the averaged output runs end-to-end and shrinks rows
-    again = timechannel(back, time_bin_secs=16.0, chan_bin_size=2)
     assert 0 < again["ms_rows"].count() < back["ms_rows"].count()
+    assert again["ms_vis"].count() > 0
 
 
 def test_app_bda_output_passes_check(spark, ms_dir, tmp_path):

@@ -52,15 +52,20 @@ def test_decorrelation_monotonicity(params):
 def test_bda_repartition_invariance(spark, ms, params):
     """BDA output must not depend on input partitioning (the
     reference's chunk-count invariance, test_averaging.py:29)."""
-    base = B.average_rows(B.assign_bins(ms["ms_rows"], params)).toPandas()
-    shuf = B.average_rows(
-        B.assign_bins(ms["ms_rows"].repartition(17, "ANTENNA1"), params)
+    base = tc.average_binned_rows(
+        B.assign_bins(ms["ms_rows"], params), constants=B.RAGGED_COLS
+    ).toPandas()
+    shuf = tc.average_binned_rows(
+        B.assign_bins(ms["ms_rows"].repartition(17, "ANTENNA1"), params),
+        constants=B.RAGGED_COLS,
     ).toPandas()
     assert_frames_match(base, shuf, rtol=0, atol=0)
 
 
 def test_bda_row_conservation(spark, ms, params):
-    out = B.average_rows(B.assign_bins(ms["ms_rows"], params)).toPandas()
+    out = tc.average_binned_rows(
+        B.assign_bins(ms["ms_rows"], params), constants=B.RAGGED_COLS
+    ).toPandas()
     assert out["n_rows"].sum() == ms["ms_rows"].count()
 
 
@@ -68,11 +73,16 @@ def test_bda_vis_chan_conservation(spark, ms, params):
     """Each output row's visibility spectrum has exactly out_nchan
     channel bins (ragged contract, averaging.py:159-161)."""
     binned = B.assign_bins(ms["ms_rows"], params)
-    vis = tc.average_vis(ms["ms_vis"], B.bin_map(binned), F.col("chan_fac"))
+    vis = tc.average_vis(
+        ms["ms_vis"], tc.rep_map(binned, ["chan_fac"]), F.col("chan_fac")
+    )
     per_bin = (
-        vis.groupBy(*B.BIN_KEYS)
+        vis.groupBy(*tc.BIN_KEYS)
         .agg((F.max("chan_bin") + 1).alias("got_nchan"))
-        .join(B.average_rows(binned), B.BIN_KEYS)
+        .join(
+            tc.average_binned_rows(binned, constants=B.RAGGED_COLS),
+            tc.BIN_KEYS,
+        )
     )
     bad = per_bin.filter(F.col("got_nchan") != F.col("NUM_CHAN")).count()
     assert bad == 0

@@ -81,7 +81,9 @@ def test_bda_vis_plan(spark, ms):
         bq.MIN_NCHAN,
     )
     binned = B.assign_bins(ms["ms_rows"], params)
-    q = tc.average_vis(ms["ms_vis"], B.bin_map(binned), F.col("chan_fac"))
+    q = tc.average_vis(
+        ms["ms_vis"], tc.rep_map(binned, ["chan_fac"]), F.col("chan_fac")
+    )
     q.collect()  # finalize THIS DataFrame's adaptive plan (count() would
     # build a separate QueryExecution and leave q's plan initial)
     assert P.sortmerge_join_count(q) == 0, P.plan_stats(q)
@@ -95,16 +97,16 @@ def _tc_map(ms):
 
 def _bda_map(ms):
     """A BDA map over a hint-free binned input, so any hint seen is one
-    bin_map / average_* added (the real assign_bins subtree carries
+    rep_map / average_* added (the real assign_bins subtree carries
     legit dim hints)."""
-    from xova_spark.operators import bda as B
+    from xova_spark.operators import timechannel as tc
 
     binned = (
         ms["ms_rows"]
         .withColumn("time_bin", F.lit(0))
         .withColumn("chan_fac", F.lit(2))
     )
-    return B.bin_map(binned), F.col("chan_fac")
+    return tc.rep_map(binned, ["chan_fac"]), F.col("chan_fac")
 
 
 @pytest.mark.parametrize("make_map", [_tc_map, _bda_map], ids=["timechannel", "bda"])

@@ -220,7 +220,7 @@ def bench_tier(spark, ms_dir: str, trials: int) -> dict:
             bdaq.MIN_NCHAN,
         )
         binned = B.assign_bins(t["ms_rows"], params)
-        bm = B.bin_map(binned).persist()
+        bm = tc.rep_map(binned, ["chan_fac"]).persist()
         _noop(tc.average_vis(t["ms_vis"], bm, F.col("chan_fac")))
         bdas.append(time.time() - t0)
         bm.unpersist()

@@ -409,7 +409,8 @@ class Application:
             return self._write_output(out, tables)
 
     def _average(
-        self, tables: dict, pipeline: str, fields=None, scans=None
+        self, tables: dict, pipeline: str, fields=None, scans=None,
+        vis_average=None,
     ) -> dict:
         """The ``timechannel`` or ``bda`` operator over the prepared
         tables, with this command line's averaging parameters."""
@@ -423,6 +424,7 @@ class Application:
                 chan_bin_size=args.chan_bin_size,
                 fields=fields,
                 scans=scans,
+                vis_average=vis_average,
             )
         from xova_spark.operators.bda import bda
 
@@ -434,6 +436,7 @@ class Application:
             min_nchan=args.min_nchan,
             fields=fields,
             scans=scans,
+            vis_average=vis_average,
         )
 
     def _write_output(self, out: dict, tables: dict) -> str:
@@ -753,11 +756,12 @@ class Application:
         """``xova-spark stream``: continuous time-and-channel or BDA
         averaging.
 
-        Arriving visibility files (availableNow drain) merge into a
-        partial-aggregate store via foreachBatch; on drain the partials
-        finalize into the A1a averaged columns. Every other output table
-        comes from the same ``timechannel()`` / ``bda()`` call the batch
-        command makes, and the MS is written through the same tail —
+        Arriving visibility files (availableNow drain), binned by the
+        operator's own map, merge into a partial-aggregate store via
+        foreachBatch; on drain the partials finalize into the A1a
+        averaged columns in place of the visibility aggregation of the
+        ``timechannel()`` / ``bda()`` call the batch command makes, and
+        the MS is written through the same tail —
         the streaming twin of the reference's one-shot
         read→average→write (app.py:59-128), with identical results
         because the maintained partials are decomposable sums.
@@ -793,45 +797,23 @@ class Application:
             import shutil
 
             shutil.rmtree(part_dir)
+
+        def drain(bins, chan_div):
+            # ``bins`` is the operator's held map; the result has
+            # average_vis(..., keep_rep=True)'s columns and order.
+            materialized_ms_vis(
+                stream, bins, part_dir, checkpoint, chan_div
+            ).awaitTermination()
+            dim = bins.select("rep", *tc.BIN_KEYS).distinct()
+            return (
+                finalize_vis(spark, part_dir)
+                .join(dim, tc.BIN_KEYS)
+                .select("rep", *tc.BIN_KEYS, "chan_bin", "corr", *tc.VIS_VALUES)
+            )
+
         # Only the visibility samples ARRIVE; the row table is static, so
         # every other output table is the batch operator's.
-        out = self._average(tables, args.mode)
-        rows = tables["ms_rows"]
-        if args.mode == "bda":
-            from xova_spark.operators import bda as B
-
-            params = B.bin_params(
-                rows,
-                B.ddid_dims(tables),
-                args.decorrelation,
-                args.max_fov,
-                args.time_bin_secs or 1e9,
-                args.min_nchan,
-            )
-            bins = B.bin_map(B.assign_bins(rows, params))
-            chan_div = F.col("chan_fac")
-        else:
-            bins = tc.bin_map(rows, args.time_bin_secs)
-            chan_div = args.chan_bin_size
-        # The same plan the operator held: every trigger's join reads
-        # the cache instead of repeating the FLAG_ROW pass.
-        bins = hold(bins)
-        q = materialized_ms_vis(stream, bins, part_dir, checkpoint, chan_div)
-        q.awaitTermination()
-        # Same columns, order and reopen contract as the batch ms_vis:
-        # row_id = the bin's rep surrogate, chan = the channel bin.
-        dim = bins.select("rep", *tc.BIN_KEYS).distinct()
-        out["ms_vis"] = (
-            finalize_vis(spark, part_dir)
-            .join(dim, tc.BIN_KEYS)
-            .select(
-                F.col("rep").alias("row_id"),
-                *tc.BIN_KEYS,
-                F.col("chan_bin").alias("chan"),
-                "corr",
-                *tc.VIS_VALUES,
-            )
-        )
+        out = self._average(tables, args.mode, vis_average=drain)
         return self._write_output(out, tables)
 
 

@@ -32,12 +32,12 @@ prescribes:
   keeping >= min_nchan output channels (the reference's "factorization
   of nchan >= min_nchan", arguments.py:142-146).
 
-  phase 2 — plain groupBy().agg() with the A1a per-column semantics on
-  the derived (baseline, time_bin) / (baseline, time_bin, chan_bin)
-  keys. Ragged output (different baselines -> different output channel
-  counts, averaging.py:317 'ragged') is natural in the long layout: the
-  per-row NUM_CHAN / DECORR_CHAN_WIDTH columns (averaging.py:159-164)
-  ride along as group constants.
+  phase 2 — timechannel's averaging core (average_binned) on the derived
+  (baseline, time_bin) / (baseline, time_bin, chan_bin) keys: BDA adds
+  ``chan_fac`` to the rep map as the channel divisor and the ragged
+  NUM_CHAN / DECORR_CHAN_WIDTH (averaging.py:159-164) as row group
+  constants. Ragged output (averaging.py:317) is natural in the long
+  layout.
 
 Scale design: phase 1 is one narrow aggregation over (partition,
 baseline) — output cardinality #partitions x #baselines, tiny versus the
@@ -55,13 +55,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from xova_spark.operators.timechannel import (
-    BIN_KEYS,
     BL_KEYS,
     PART_KEYS,
-    average_vis,
-    average_weights,
+    average_binned,
     hold,
-    row_aggs,
+    select_rows,
 )
 
 C_LIGHT = 299792458.0  # m/s
@@ -178,52 +176,26 @@ def bin_params(
     )
 
 
+# BDA's ragged row columns (averaging.py:159-164) <- their params columns.
+RAGGED_COLS = {"NUM_CHAN": "out_nchan", "DECORR_CHAN_WIDTH": "decorr_chan_width"}
+
+
 def assign_bins(rows: DataFrame, params: DataFrame) -> DataFrame:
     """Attach the per-baseline time_bin (floor of the time offset over
     the baseline-dependent bin length) plus the channelisation columns.
-    The params side is broadcast — it is #partitions x #baselines rows."""
-    j = rows.join(F.broadcast(params), PART_KEYS + BL_KEYS)
+    The params side is broadcast — it is #partitions x #baselines rows.
+    Row columns the params supply are dropped first (a BDA output's
+    DECORR_CHAN_WIDTH is ``decorr_chan_width`` case-insensitively)."""
+    keys = PART_KEYS + BL_KEYS
+    j = rows.drop(*[c for c in params.columns if c not in keys]).join(
+        F.broadcast(params), keys
+    )
     return j.withColumn(
         "time_bin",
         F.floor(
             (F.col("TIME") - F.col("t0"))
             / (F.col("n_int").cast("double") * F.col("interval_nom"))
         ).cast("int"),
-    )
-
-
-def average_rows(binned: DataFrame, with_row_id: bool = False) -> DataFrame:
-    """Phase 2a: A1a row-level aggregation on BDA bins + the ragged
-    NUM_CHAN / DECORR_CHAN_WIDTH outputs (averaging.py:159-164).
-
-    ``with_row_id`` adds row_id = min(input row_id) per bin (the rep
-    surrogate) so written BDA output satisfies the load_ms row-identity
-    contract and is check-able/re-openable."""
-    extra = [F.min("row_id").alias("row_id")] if with_row_id else []
-    return binned.groupBy(*BIN_KEYS).agg(
-        *extra,
-        *row_aggs(),
-        F.count("*").alias("n_rows"),
-        F.any_value("out_nchan").alias("NUM_CHAN"),
-        F.any_value("decorr_chan_width").alias("DECORR_CHAN_WIDTH"),
-    )
-
-
-def bin_map(binned: DataFrame) -> DataFrame:
-    """row_id -> BDA bin key + chan_fac + row flag, the join map for the
-    visibility aggregation (analogue of timechannel.bin_map; BDA calls
-    timechannel.average_vis with ``F.col("chan_fac")`` as the divisor).
-
-    Also carries ``rep`` — min(row_id) within the bin — a SINGLE-column
-    surrogate for the 6-column bin key. The visibility aggregation
-    groups on (rep, chan_bin, corr) instead of 8 wide columns: ~3x
-    faster at bench scale (narrower hash keys + narrower shuffle rows;
-    the wide keys are re-attached afterwards by joining the rep -> keys
-    dim — join strategy left to AQE). The window below runs on the ROW
-    table, not the visibility table — cheap."""
-    w = Window.partitionBy(*BIN_KEYS)
-    return binned.withColumn("rep", F.min("row_id").over(w)).select(
-        "row_id", "rep", *BIN_KEYS, "chan_fac", "FLAG_ROW"
     )
 
 
@@ -234,8 +206,6 @@ def spw_grid(params: DataFrame, tables: dict) -> DataFrame:
     (averaging.py:504-523). NEW_SPW_ID = dense_rank over the distinct
     set (deterministic). Driver-scale data: the distinct set has at most
     #SPWs x #divisors rows."""
-    from pyspark.sql import Window
-
     band = tables["spw_chans"].groupBy("SPECTRAL_WINDOW_ID").agg(
         F.min(F.col("CHAN_FREQ") - F.col("CHAN_WIDTH") / 2).alias("f_start"),
         F.sum("CHAN_WIDTH").alias("band"),
@@ -272,8 +242,6 @@ def ddid_map(params: DataFrame, tables: dict) -> DataFrame:
     """J3: old (DATA_DESC_ID, out_nchan) -> NEW_DATA_DESC_ID /
     NEW_SPW_ID broadcast remap (averaging.py:527-547,693-698).
     POLARIZATION_ID carries over unchanged."""
-    from pyspark.sql import Window
-
     ddid = tables["ddid"]
     distinct = (
         params.join(F.broadcast(ddid), "DATA_DESC_ID")
@@ -305,6 +273,7 @@ def bda(
     min_nchan: int = 1,
     fields: list[int] | None = None,
     scans: list[int] | None = None,
+    vis_average=None,
 ) -> dict:
     """Full BDA pipeline (ref averaging.py:270-354 + 550-722): averaged
     main-table parts with remapped DATA_DESC_ID, regenerated SPW/DDID.
@@ -316,37 +285,21 @@ def bda(
     averaging.py:527-547), and spw_chans/spw_meta describe the new
     uniform grids. The ragged-specific ``spw``/``ddid_map`` views are
     kept alongside for lineage. Unknown subtables pass through
-    (subtables.py:9-37)."""
-    rows = tables["ms_rows"]
-    if fields:
-        rows = rows.filter(F.col("FIELD_ID").isin(fields))
-    if scans:
-        rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
+    (subtables.py:9-37). ``vis_average`` as in average_binned."""
+    rows = select_rows(tables["ms_rows"], fields, scans)
     params = hold(bin_params(
         rows, ddid_dims(tables), decorrelation, max_fov, time_bin_secs, min_nchan
     ))
-    binned = assign_bins(rows, params)
     dmap = hold(ddid_map(params, tables))
     grid = hold(spw_grid(params, tables))
-    bins = hold(bin_map(binned))
-    remapped = _remap_rows(average_rows(binned, with_row_id=True), dmap)
-    rewritten = {
-        "ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta", "ddid"
-    }
-    out_weights = None
-    if "ms_weights" in tables:
-        out_weights = (
-            average_weights(tables["ms_weights"], bins, keep_rep=True)
-            .withColumnRenamed("rep", "row_id")
-        )
+    main = average_binned(
+        tables, assign_bins(rows, params), F.col("chan_fac"),
+        payload=["chan_fac"], constants=RAGGED_COLS, vis_average=vis_average,
+    )
+    rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta", "ddid"}
     return {
-        "ms_rows": remap_main(remapped),
-        **({"ms_weights": out_weights} if out_weights is not None else {}),
-        "ms_vis": (
-            average_vis(tables["ms_vis"], bins, F.col("chan_fac"), keep_rep=True)
-            .withColumnRenamed("rep", "row_id")
-            .withColumnRenamed("chan_bin", "chan")
-        ),
+        **main,
+        "ms_rows": remap_main(_remap_rows(main["ms_rows"], dmap)),
         "spw": grid,
         "ddid_map": dmap,
         **conformant_subtables(dmap, grid),

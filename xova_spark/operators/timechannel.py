@@ -23,6 +23,9 @@ codex-africanus time_and_channel contract the reference delegates to):
   falling back to the flagged samples when the output bin is fully
   flagged; FLAG out = all inputs flagged (averaging.py:225 convention).
 
+Everything after binning is ``average_binned``, the core BDA shares:
+the two pipelines differ only in how they bin rows.
+
 Scale design: the row aggregation is one shuffle keyed on
 (partition, baseline) — the min-TIME window and the subsequent groupBy
 share that hash partitioning (HashPartitioning on a key subset satisfies
@@ -64,6 +67,15 @@ def assign_time_bins(rows: DataFrame, time_bin_secs: float) -> DataFrame:
     )
 
 
+def select_rows(rows: DataFrame, fields=None, scans=None) -> DataFrame:
+    """The field/scan selection both pipelines bin (averaging.py:218-221)."""
+    if fields:
+        rows = rows.filter(F.col("FIELD_ID").isin(fields))
+    if scans:
+        rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
+    return rows
+
+
 def average_rows(
     rows: DataFrame,
     time_bin_secs: float = 2.0,
@@ -72,12 +84,9 @@ def average_rows(
     with_row_id: bool = False,
 ) -> DataFrame:
     """A1 row-level averaging (ref averaging.py:184-267)."""
-    if fields:
-        rows = rows.filter(F.col("FIELD_ID").isin(fields))  # averaging.py:218-221
-    if scans:
-        rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
     return average_binned_rows(
-        assign_time_bins(rows, time_bin_secs), with_row_id=with_row_id
+        assign_time_bins(select_rows(rows, fields, scans), time_bin_secs),
+        with_row_id=with_row_id,
     )
 
 
@@ -107,45 +116,56 @@ def row_aggs() -> list:
     ]
 
 
-def average_binned_rows(binned: DataFrame, with_row_id: bool = False) -> DataFrame:
+# Constant ID columns every averaged row carries (ref averaging.py:117-136).
+ID_COLS = ("ARRAY_ID", "OBSERVATION_ID", "PROCESSOR_ID", "STATE_ID")
+
+
+def average_binned_rows(
+    binned: DataFrame,
+    with_row_id: bool = False,
+    constants: dict[str, str] | None = None,
+) -> DataFrame:
     """A1a aggregation over rows that already carry a time_bin column
-    (from assign_time_bins, or chunking.assign_greedy_bins for the
-    bit-exact greedy variant).
+    (from assign_time_bins, BDA's assign_bins, or
+    chunking.assign_greedy_bins for the bit-exact greedy variant).
 
     ``with_row_id`` adds row_id = min(input row_id) per bin — the same
-    ``rep`` surrogate bin_map uses — so the written output satisfies the
+    ``rep`` surrogate rep_map uses — so the written output satisfies the
     load_ms row-identity contract and can be re-opened, re-checked, and
     re-averaged like any input MS (the reference's average-then-check
-    workflow, check.py:22-76)."""
+    workflow, check.py:22-76). ``constants`` maps further output columns
+    to the group-constant binned columns they carry (BDA's ragged
+    NUM_CHAN / DECORR_CHAN_WIDTH, averaging.py:159-164)."""
     extra = [F.min("row_id").alias("row_id")] if with_row_id else []
+    carried = {c: c for c in ID_COLS} | (constants or {})
     return binned.groupBy(*BIN_KEYS).agg(
         *extra,
         *row_aggs(),
         F.count(F.when(~F.col("FLAG_ROW"), F.lit(1))).alias("n_unflagged"),
         F.count("*").alias("n_rows"),
-        # Constant ID columns pass through (ref averaging.py:117-136).
-        *[
-            F.any_value(F.col(c)).alias(c)
-            for c in ("ARRAY_ID", "OBSERVATION_ID", "PROCESSOR_ID", "STATE_ID")
-        ],
+        *[F.any_value(F.col(src)).alias(name) for name, src in carried.items()],
     )
 
 
-def bin_map(rows: DataFrame, time_bin_secs: float = 2.0) -> DataFrame:
+def rep_map(binned: DataFrame, payload: list[str] | tuple = ()) -> DataFrame:
     """row_id -> output-bin key + row flag (the join key for the weights
-    and visibility aggregations).
+    and visibility aggregations), plus the per-row ``payload`` columns
+    the caller names (BDA's ``chan_fac``).
 
     ``rep`` = min(row_id) within the bin is a single-column surrogate
     for the 6-column bin key: the sample-level aggregations group on it
     instead of the wide key (narrower hash keys + shuffle rows, ~3x at
-    bench scale) and re-attach the wide key afterwards by broadcasting
-    the tiny rep -> keys dim. The window runs on the row table only."""
+    bench scale) and re-attach the wide key afterwards by joining the
+    rep -> keys dim. The window runs on the row table only."""
     w = Window.partitionBy(*BIN_KEYS)
-    return (
-        assign_time_bins(rows, time_bin_secs)
-        .withColumn("rep", F.min("row_id").over(w))
-        .select("row_id", "rep", *BIN_KEYS, "FLAG_ROW")
+    return binned.withColumn("rep", F.min("row_id").over(w)).select(
+        "row_id", "rep", *BIN_KEYS, *payload, "FLAG_ROW"
     )
+
+
+def bin_map(rows: DataFrame, time_bin_secs: float = 2.0) -> DataFrame:
+    """The timechannel rep_map: rows binned by assign_time_bins."""
+    return rep_map(assign_time_bins(rows, time_bin_secs))
 
 
 # The frames held by the innermost open held() scope; None outside one.
@@ -313,12 +333,45 @@ def average_spw(
     return out_chans, out_meta
 
 
+def average_binned(
+    tables: dict,
+    binned: DataFrame,
+    chan_div: int | Column,
+    payload: list[str] | tuple = (),
+    constants: dict[str, str] | None = None,
+    vis_average=None,
+) -> dict:
+    """``ms_rows``, ``ms_weights`` and ``ms_vis`` of binned rows under the
+    load_ms contract (row_id = the bin's rep, chan = the channel bin).
+    ``payload``/``constants`` are the pipeline's extra rep-map and row
+    columns. ``vis_average(bins, chan_div)`` returns the visibility table
+    re-attached to its bin keys; the default is ``average_vis``."""
+    bins = hold(rep_map(binned, payload))
+    if vis_average is None:
+        def vis_average(bins, chan_div):
+            return average_vis(tables["ms_vis"], bins, chan_div, keep_rep=True)
+
+    return {
+        "ms_rows": average_binned_rows(
+            binned, with_row_id=True, constants=constants
+        ),
+        "ms_weights": (
+            average_weights(tables["ms_weights"], bins, keep_rep=True)
+            .withColumnRenamed("rep", "row_id")
+        ),
+        "ms_vis": vis_average(bins, chan_div).withColumnsRenamed(
+            {"rep": "row_id", "chan_bin": "chan"}
+        ),
+    }
+
+
 def timechannel(
     tables: dict,
     time_bin_secs: float = 2.0,
     chan_bin_size: int = 16,
     fields: list[int] | None = None,
     scans: list[int] | None = None,
+    vis_average=None,
 ) -> dict:
     """Full timechannel pipeline over a loaded MS (ref app.py:59-128):
     returns the averaged main-table parts + regenerated SPW tables.
@@ -330,28 +383,16 @@ def timechannel(
     reference's own output MS (check.py:22-76 workflow). ALL subtables
     not rewritten by the pipeline pass through unchanged, including ones
     this engine knows nothing about (ref subtables.py:9-37 copies
-    unknown subtables wholesale)."""
-    rows = tables["ms_rows"]
-    if fields:
-        rows = rows.filter(F.col("FIELD_ID").isin(fields))
-    if scans:
-        rows = rows.filter(F.col("SCAN_NUMBER").isin(scans))
-    bins = hold(bin_map(rows, time_bin_secs))
+    unknown subtables wholesale). ``vis_average`` as in average_binned."""
+    binned = assign_time_bins(
+        select_rows(tables["ms_rows"], fields, scans), time_bin_secs
+    )
     out_chans, out_meta = average_spw(
         tables["spw_chans"], tables["spw_meta"], chan_bin_size
     )
     rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta"}
     return {
-        "ms_rows": average_rows(rows, time_bin_secs, with_row_id=True),
-        "ms_weights": (
-            average_weights(tables["ms_weights"], bins, keep_rep=True)
-            .withColumnRenamed("rep", "row_id")
-        ),
-        "ms_vis": (
-            average_vis(tables["ms_vis"], bins, chan_bin_size, keep_rep=True)
-            .withColumnRenamed("rep", "row_id")
-            .withColumnRenamed("chan_bin", "chan")
-        ),
+        **average_binned(tables, binned, chan_bin_size, vis_average=vis_average),
         "spw_chans": out_chans,
         "spw_meta": out_meta,
         # S10 passthrough: every other table (known or unknown) verbatim.

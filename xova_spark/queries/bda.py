@@ -135,7 +135,12 @@ SELECT FIELD_ID, DATA_DESC_ID, SCAN_NUMBER, ANTENNA1, ANTENNA2, time_bin,
     coalesce(avg(v) FILTER (WHERE NOT FLAG_ROW), avg(v)) AS v,
     coalesce(avg(w) FILTER (WHERE NOT FLAG_ROW), avg(w)) AS w,
     bool_and(FLAG_ROW) AS FLAG_ROW,
+    count(*) FILTER (WHERE NOT FLAG_ROW) AS n_unflagged,
     count(*) AS n_rows,
+    any_value(ARRAY_ID) AS ARRAY_ID,
+    any_value(OBSERVATION_ID) AS OBSERVATION_ID,
+    any_value(PROCESSOR_ID) AS PROCESSOR_ID,
+    any_value(STATE_ID) AS STATE_ID,
     any_value(out_nchan) AS NUM_CHAN,
     any_value(decorr_chan_width) AS DECORR_CHAN_WIDTH
 FROM binned
@@ -149,7 +154,9 @@ def bda_rows(spark, sf_dir):
     with ragged NUM_CHAN / DECORR_CHAN_WIDTH outputs
     (averaging.py:159-164)."""
     t, params = _params(spark)
-    return B.average_rows(B.assign_bins(t["ms_rows"], params))
+    return tc.average_binned_rows(
+        B.assign_bins(t["ms_rows"], params), constants=B.RAGGED_COLS
+    )
 
 
 @q(
@@ -191,7 +198,9 @@ def bda_vis(spark, sf_dir):
     varies per baseline (averaging.py:338-342, format='ragged')."""
     t, params = _params(spark)
     binned = B.assign_bins(t["ms_rows"], params)
-    return tc.average_vis(t["ms_vis"], B.bin_map(binned), F.col("chan_fac"))
+    return tc.average_vis(
+        t["ms_vis"], tc.rep_map(binned, ["chan_fac"]), F.col("chan_fac")
+    )
 
 
 @q(
@@ -223,7 +232,9 @@ def bda_rows_remapped(spark, sf_dir):
     of `xova bda` actually reads; averaging.py:693-705)."""
     t, params = _params(spark)
     return B._remap_rows(
-        B.average_rows(B.assign_bins(t["ms_rows"], params)),
+        tc.average_binned_rows(
+            B.assign_bins(t["ms_rows"], params), constants=B.RAGGED_COLS
+        ),
         B.ddid_map(params, t),
     )
 
@@ -323,7 +334,9 @@ def bda_rows_greedy(spark, sf_dir):
     two disciplines provably coincide, which IS the parity statement."""
     from pyspark.sql import functions as F
 
-    return B.average_rows(_greedy_binned(spark))
+    return tc.average_binned_rows(
+        _greedy_binned(spark), constants=B.RAGGED_COLS
+    )
 
 
 _BDA_VIS_SQL = REGISTRY["bda_vis"][1]
@@ -333,12 +346,14 @@ _BDA_VIS_SQL = REGISTRY["bda_vis"][1]
 def bda_vis_greedy(spark, sf_dir):
     """Full A2 visibility aggregation under BIT-GREEDY bin boundaries:
     greedy_bda_map's (row_id -> time_bin) swapped into the pipeline
-    before bin_map — the ragged channel averaging is untouched. Same
+    before rep_map — the ragged channel averaging is untouched. Same
     coincidence oracle as bda_rows_greedy (uniform cadence => greedy ==
     floor grid)."""
     t, _ = _params(spark)
     return tc.average_vis(
-        t["ms_vis"], B.bin_map(_greedy_binned(spark)), F.col("chan_fac")
+        t["ms_vis"],
+        tc.rep_map(_greedy_binned(spark), ["chan_fac"]),
+        F.col("chan_fac"),
     )
 
 

@@ -60,7 +60,8 @@ def bda_avg(spark, sf_dir):
         bdaq.MIN_NCHAN,
     )
     binned = B.assign_bins(t["ms_rows"], params)
-    return tc.average_vis(t["ms_vis"], B.bin_map(binned).persist(), F.col("chan_fac"))
+    bm = tc.rep_map(binned, ["chan_fac"]).persist()
+    return tc.average_vis(t["ms_vis"], bm, F.col("chan_fac"))
 
 
 REGISTRY["timechannel_avg"] = (timechannel_avg, _swap(msq.REGISTRY["ms_tc_vis"][1]))

@@ -21,7 +21,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xova_spark.operators.timechannel import finalize, vis_partials
+from xova_spark.operators.timechannel import BIN_KEYS, finalize, vis_partials
 
 
 def _upsert(partial: DataFrame, out_dir: str, keys: list[str], merge_aggs: list):
@@ -94,8 +94,7 @@ def read_rollup(spark, out_dir: str) -> DataFrame:
 # cannot express. Both pipelines share it: a BDA bin map and
 # ``F.col("chan_fac")`` as the channel divisor give the ragged bins.
 
-_VIS_KEYS = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1", "ANTENNA2",
-             "time_bin", "chan_bin", "corr"]
+_VIS_KEYS = [*BIN_KEYS, "chan_bin", "corr"]
 
 _PARTIAL_SUMS = ["n", "n_unfl", "sw_u", "swre_u", "swim_u", "sw2s2_u",
                  "sw_a", "swre_a", "swim_a", "sw2s2_a"]
