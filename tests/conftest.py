@@ -1,10 +1,11 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from xova_spark.session import get_spark  # noqa: E402
 from xova_spark.sources.ms_fixture import ms_fixture_dir  # noqa: E402

@@ -13,11 +13,13 @@ import pytest
 from xova_spark.app import (
     Application,
     derive_output_name,
+    parse_args,
     parse_channels,
     parse_data_column_map,
     parse_fields,
     parse_scans,
 )
+from xova_spark.extras import run as run_extras
 from xova_spark.sources.ms_fixture import load_ms
 
 
@@ -51,6 +53,14 @@ def test_parse_data_column_map():
 def test_derive_output_name():
     assert derive_output_name("/a/b/foo.ms") == "/a/b/foo_averaged.ms"
     assert derive_output_name("/a/b/foo") == "/a/b/foo_averaged.ms"
+
+
+def test_cli_help_lists_only_the_averager(capsys):
+    """``xova-spark`` is the reference's averager surface alone; the
+    off-paper commands are ``xova-spark-extras``."""
+    with pytest.raises(SystemExit):
+        parse_args(["--help"])
+    assert "{timechannel,bda,check,stream}" in capsys.readouterr().out
 
 
 # -- end-to-end application runs (test_application.py:9-17) ------------------
@@ -101,6 +111,26 @@ def test_app_unknown_field_fails_before_writing(spark, ms_dir, tmp_path, spec):
     with pytest.raises(ValueError, match=spec.split(",")[-1]):
         Application(
             ["timechannel", ms_dir, "-t", "4", "-f", spec, "-o", str(out)],
+            spark=spark,
+        ).execute()
+    assert not out.exists()
+
+
+@pytest.mark.parametrize("cmd, selection, scans", [
+    (["timechannel", "-t", "4"], ["-s", "999"], "999"),
+    (["bda", "-d", "0.95", "-fov", "0.315", "-t", "16"], ["-s", "999"], "999"),
+    (["timechannel", "-t", "4"], ["-f", "0", "-s", "1"], "1"),
+], ids=["timechannel-s999", "bda-s999", "timechannel-f0-s1"])
+def test_app_empty_selection_fails_before_writing(
+    spark, ms_dir, tmp_path, cmd, selection, scans
+):
+    """A -s naming no scan of the input, or a -f/-s pair with no row in
+    common (scan 1 belongs to field 1), fails the run, naming the scans,
+    before any table is written — not an empty MS that passes check."""
+    out = tmp_path / "out.ms"
+    with pytest.raises(ValueError, match=rf"scan\(s\) {scans} in"):
+        Application(
+            [cmd[0], ms_dir, *cmd[1:], *selection, "-o", str(out)],
             spark=spark,
         ).execute()
     assert not out.exists()
@@ -193,6 +223,79 @@ def test_app_stream_bda_matches_batch_average(spark, ms_dir, tmp_path):
         spark=spark,
     ).execute()
     _assert_same_ms(spark, streamed, batch)
+
+
+def _tree_bytes(path) -> dict:
+    """Relative path -> file bytes of every file under ``path``."""
+    out = {}
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+def test_app_stream_resumes_only_under_its_parameters(spark, ms_dir, tmp_path):
+    """``stream`` resumes its checkpoint and partials on an identical
+    rerun, but a rerun with other averaging parameters (or a checkpoint
+    whose parameters were never recorded) raises before its query
+    starts, leaving the output and the partials as they were: merging
+    into partials binned otherwise writes visibilities no batch run
+    would."""
+    out = str(tmp_path / "streamed.ms")
+    params = ["-t", "4", "-c", "16"]
+    Application(["stream", ms_dir, "-o", out, *params], spark=spark).execute()
+    Application(
+        ["stream", ms_dir, "-o", out, "--force", *params], spark=spark
+    ).execute()
+    batch = Application(
+        ["timechannel", ms_dir, "-o", str(tmp_path / "batch.ms"), *params],
+        spark=spark,
+    ).execute()
+    _assert_same_ms(spark, out, batch)
+
+    state = [out, out + ".partials", out + ".ckpt"]
+    before = [_tree_bytes(d) for d in state]
+    with pytest.raises(ValueError, match="time_bin_secs, chan_bin_size"):
+        Application(
+            ["stream", ms_dir, "-o", out, "--force", "-t", "8", "-c", "8"],
+            spark=spark,
+        ).execute()
+    assert [_tree_bytes(d) for d in state] == before
+    os.remove(os.path.join(out + ".partials", "params.json"))
+    with pytest.raises(ValueError, match="mode"):
+        Application(
+            ["stream", ms_dir, "-o", out, "--force", *params], spark=spark
+        ).execute()
+
+
+def test_app_stream_restarted_on_another_input_reads_it(spark, ms_dir, tmp_path):
+    """A stream restarted afresh (checkpoint removed) into the same -o
+    over another input MS averages that input, not the file the first
+    run staged under ``<out>.vis_src``."""
+    import shutil
+
+    import pandas as pd
+
+    first, second = str(tmp_path / "first.ms"), str(tmp_path / "second.ms")
+    shutil.copytree(ms_dir, first)
+    shutil.copytree(ms_dir, second)
+    vis_path = os.path.join(second, "ms_vis.parquet")
+    vis = pd.read_parquet(vis_path)
+    vis["vis_re"] *= 2.0
+    vis.to_parquet(vis_path, index=False)
+    out, params = str(tmp_path / "streamed.ms"), ["-t", "4", "-c", "8"]
+    Application(["stream", first, "-o", out, *params], spark=spark).execute()
+    shutil.rmtree(out + ".ckpt")
+    Application(
+        ["stream", second, "-o", out, "--force", *params], spark=spark
+    ).execute()
+    batch = Application(
+        ["timechannel", second, "-o", str(tmp_path / "batch.ms"), *params],
+        spark=spark,
+    ).execute()
+    _assert_same_ms(spark, out, batch)
 
 
 def _cache_is_empty(spark) -> bool:
@@ -438,7 +541,7 @@ def test_app_rejects_multi_target_data_column_map(spark):
 
 
 def test_app_corpus_writes_split_partitioned(spark, tmp_path):
-    """``xova-spark corpus``: the kept set lands partitioned by split
+    """``xova-spark-extras corpus``: the kept set lands partitioned by split
     and its audit equals the registry composite's."""
     from pyspark.sql import functions as F
 
@@ -446,7 +549,7 @@ def test_app_corpus_writes_split_partitioned(spark, tmp_path):
 
     sf = "/root/testdata/sf0.001"
     out = os.path.join(str(tmp_path), "corpus_out")
-    got = Application(["corpus", sf, "-o", out], spark=spark).execute()
+    got = run_extras(["corpus", sf, "-o", out], spark=spark)
     assert got == out
     for s in ("train", "val", "test"):
         assert os.path.isdir(os.path.join(out, "corpus", f"split={s}")), s
@@ -469,7 +572,7 @@ def test_app_corpus_writes_split_partitioned(spark, tmp_path):
     assert derived == want
     # overwrite guard
     with pytest.raises(SystemExit):
-        Application(["corpus", sf, "-o", out], spark=spark).execute()
+        run_extras(["corpus", sf, "-o", out], spark=spark)
 
 
 def test_app_profile_dump(spark, ms_dir, tmp_path):
@@ -500,14 +603,14 @@ def test_app_profile_dump(spark, ms_dir, tmp_path):
 
 
 def test_app_tokenize_writes_merges_and_counts(spark, tmp_path):
-    """``xova-spark tokenize``: rank-ordered merge table + per-doc token
+    """``xova-spark-extras tokenize``: rank-ordered merge table + per-doc token
     counts land in the output; merges compose (each merged token is its
     pair joined) and BPE counts never exceed character counts."""
     sf = "/root/testdata/sf0.001"
     out = os.path.join(str(tmp_path), "tok_out")
-    got = Application(
+    got = run_extras(
         ["tokenize", sf, "-o", out, "-k", "5", "--vocab", "40"], spark=spark
-    ).execute()
+    )
     assert got == out
     merges = (
         spark.read.parquet(os.path.join(out, "merges"))
@@ -524,11 +627,11 @@ def test_app_tokenize_writes_merges_and_counts(spark, tmp_path):
     assert bad.count() == 0
     # overwrite guard
     with pytest.raises(SystemExit):
-        Application(["tokenize", sf, "-o", out], spark=spark).execute()
+        run_extras(["tokenize", sf, "-o", out], spark=spark)
 
 
 def test_app_cdc_apply_matches_direct_new(spark, tmp_path):
-    """``xova-spark cdc``: applying the diff changelog to the old
+    """``xova-spark-extras cdc``: applying the diff changelog to the old
     snapshot reproduces the new snapshot exactly (the cdcq merge law,
     through the CLI path with generic column introspection)."""
     from pyspark.sql import functions as F
@@ -546,10 +649,10 @@ def test_app_cdc_apply_matches_direct_new(spark, tmp_path):
         "o_orderkey", "op",
         F.col("new_price_cents").alias("price_cents"),
     ).write.parquet(chg_p)
-    got = Application(
+    got = run_extras(
         ["cdc", base_p, "--changes", chg_p, "--keys", "o_orderkey", "-o", out],
         spark=spark,
-    ).execute()
+    )
     assert got == out
     merged = spark.read.parquet(out)
     assert merged.count() == new.count()
@@ -558,13 +661,13 @@ def test_app_cdc_apply_matches_direct_new(spark, tmp_path):
 
 
 def test_app_card_writes_datasheet(spark, tmp_path):
-    """``xova-spark card``: the three datasheet parquets land and the
+    """``xova-spark-extras card``: the three datasheet parquets land and the
     sources card equals the registry query."""
     from xova_spark.queries.textops import t_dataset_card
 
     sf = "/root/testdata/sf0.001"
     out = os.path.join(str(tmp_path), "card_out")
-    got = Application(["card", sf, "-o", out], spark=spark).execute()
+    got = run_extras(["card", sf, "-o", out], spark=spark)
     assert got == out
     src = spark.read.parquet(os.path.join(out, "sources"))
     ref = t_dataset_card(spark, sf)
@@ -673,7 +776,7 @@ def test_app_media_report(spark, tmp_path):
     agree with the registry queries."""
     sf = "/root/testdata/sf0.001"
     out = os.path.join(str(tmp_path), "media_report")
-    got = Application(["media", sf, "-o", out, "--force"], spark=spark).execute()
+    got = run_extras(["media", sf, "-o", out, "--force"], spark=spark)
     from xova_spark.queries.multimodalq import mm_scene_segments
 
     scenes = spark.read.parquet(os.path.join(got, "scenes"))

@@ -107,10 +107,10 @@ def test_histogram_drift_matches_pandas_lattice(spark):
 
 
 def test_dq_cli_writes_reports_and_strict_passes(spark, tmp_path):
-    from xova_spark.app import Application
+    from xova_spark.extras import run
 
     out = str(tmp_path / "dqrep")
-    got = Application(["dq", SF, "-o", out, "--strict"], spark=spark).execute()
+    got = run(["dq", SF, "-o", out, "--strict"], spark=spark)
     assert got == out
     for name in ("profile", "keys", "orphans", "drift"):
         df = spark.read.parquet(f"{out}/{name}")

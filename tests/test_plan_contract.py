@@ -17,6 +17,7 @@ invariant, don't assume it.
 from __future__ import annotations
 
 import inspect
+import os
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -192,7 +193,8 @@ def test_coverage_plan_contract_line_matches_allowlists():
 
     from xova_spark.plancontract import BNLJ_SURVIVORS, WINDOW_SURVIVORS
 
-    with open("/root/repo/COVERAGE.md") as f:
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "COVERAGE.md")) as f:
         text = f.read()
     m = re.search(
         r"Plan contract: \*\*Expand \d+, CartesianProduct (\d+), BNLJ in"

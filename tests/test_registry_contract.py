@@ -4,8 +4,10 @@ entries) — the properties CORRECTNESS_r{N} sampling depends on."""
 
 from __future__ import annotations
 
+import os
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ROWS_ONLY_BY_DESIGN = {"uvw_apply_pandas_synthesis"}
 
 
@@ -145,7 +147,7 @@ def test_coverage_header_counts_are_in_sync():
 
     n_live = len(m.queries())
 
-    cov = open("/root/repo/COVERAGE.md").read()
+    cov = open(os.path.join(REPO, "COVERAGE.md")).read()
     mh = re.search(
         r"Registry: \*\*(\d+) entries; (\d+) oracle-EXACT, (\d+) rows-only",
         cov,
@@ -153,7 +155,7 @@ def test_coverage_header_counts_are_in_sync():
     assert mh, "COVERAGE.md lost its stamped Registry line — rerun gate_summary"
     n_cov, n_exact_cov, n_ro_cov = map(int, mh.groups())
 
-    gate = open("/root/repo/GATE_LOG.md").read()
+    gate = open(os.path.join(REPO, "GATE_LOG.md")).read()
     mg = re.search(r"exact=(\d+) close=(\d+) fail=(\d+) rows_only=(\d+) total=(\d+)", gate)
     assert mg, "GATE_LOG.md has no summary line — rerun gate_summary"
     n_exact_g, n_close_g, n_fail_g, n_ro_g, n_total_g = map(int, mg.groups())

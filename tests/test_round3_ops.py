@@ -166,17 +166,17 @@ def test_ivfpq_probe_join_broadcasts(spark):
 
 
 def test_index_cli_roundtrip_matches_in_session_search(spark, tmp_path):
-    """`xova-spark index` + `search` against the persisted index returns
+    """`xova-spark-extras index` + `search` against the persisted index returns
     BIT-IDENTICAL results to the in-session ann_ivfpq_topk (same qids,
     k, nprobe) — the train-once/search-many contract — and the probe
     filter prunes the cell-partitioned code table at the parquet level."""
     import os
 
-    from xova_spark.app import Application
+    from xova_spark.extras import run
     from xova_spark.queries.pipelineq import ivfpq_index_search
 
     idx = str(tmp_path / "ivfpq_index")
-    Application(["index", SF_SMALL, "-o", idx, "--force"]).execute()
+    run(["index", SF_SMALL, "-o", idx, "--force"])
     assert os.path.isdir(os.path.join(idx, "codes"))
     # cell-partitioned layout on disk
     assert any(

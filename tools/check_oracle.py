@@ -17,6 +17,7 @@ entry must stay EXACT there too (load_tables owns tz/NTZ hygiene).
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
@@ -24,7 +25,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from xova_spark.plancontract import plan_contract_violations  # noqa: E402

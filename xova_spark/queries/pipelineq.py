@@ -643,7 +643,7 @@ def pipeline_corpus_e2e(spark, sf_dir):
 
 def corpus_funnel(docs):
     """The kept-document set of the corpus funnel (the shared core of
-    pipeline_corpus_e2e and the ``xova-spark corpus`` CLI): returns one
+    pipeline_corpus_e2e and the ``xova-spark-extras corpus`` CLI): returns one
     row per surviving document with (doc_id, lang, source, n_tokens,
     split). See pipeline_corpus_e2e's docstring for stage semantics and
     the scale shape."""
@@ -1767,7 +1767,7 @@ def emb_pq_encode(spark, sf_dir):
 # PQ codebooks + codes are an INDEX: production systems (FAISS et al.)
 # train once and search many times — refitting per query would be like
 # rebuilding a B-tree per lookup. Memoized per (session, corpus) exactly
-# like load_tables; the persisted-index path is the `xova-spark index`
+# like load_tables; the persisted-index path is the `xova-spark-extras index`
 # CLI, which writes codes + codebooks to parquet.
 _PQ_FIT_CACHE: dict[tuple[int, str], tuple] = register_cache({})
 
@@ -2278,7 +2278,7 @@ def _ivfpq_recall_sql(n_queries: int = 10, topk: int = 5) -> str:
 def _coarse_cellrank(spark, sf_dir):
     """Quantized embeddings + the full (vector x coarse-centroid) cosine
     ranking: rn = 1 is the cell assignment, rn <= nprobe the probe list.
-    Shared by ann_ivfpq_topk and the `xova-spark index` CLI."""
+    Shared by ann_ivfpq_topk and the `xova-spark-extras index` CLI."""
     e = _emb(spark, sf_dir).select(
         "vec_id",
         F.transform(
@@ -2677,7 +2677,7 @@ def t_cluster_topterms(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Persisted IVF-PQ index (the `xova-spark index` / `search` CLI)
+# Persisted IVF-PQ index (the `xova-spark-extras index` / `search` CLI)
 # ---------------------------------------------------------------------------
 
 

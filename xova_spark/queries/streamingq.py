@@ -902,7 +902,7 @@ def stream_expectations_monitor(spark, sf_dir):
     pattern) — counts are decomposable, so the converged totals equal
     the batch suite no matter how the stream was chunked. This is the
     always-on gate a pipeline alerts from, vs the pre-/post-transform
-    batch check (`xova-spark dq --strict`)."""
+    batch check (`xova-spark-extras dq --strict`)."""
     import os
     import shutil
     import tempfile

@@ -489,7 +489,7 @@ def _bpe_merge_rules(
     spark, sf_dir, vocab: int | None = None, k: int | None = None
 ) -> list:
     """Learn the merge rules (shared by the train and encode queries and
-    the ``xova-spark tokenize`` CLI); returns [(rank, pair, merged,
+    the ``xova-spark-extras tokenize`` CLI); returns [(rank, pair, merged,
     count)]."""
     vocab = _BPE_VOCAB if vocab is None else vocab
     k = _BPE_MERGES if k is None else k

@@ -32,7 +32,7 @@ code paths serve real .ms directories.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -82,18 +82,13 @@ def _open_table(path: str):
     return casa_table(path, ack=False)
 
 
-def _window_frame(spark: SparkSession, n_rows: int, window: int) -> DataFrame:
-    bounds = [(s, min(window, n_rows - s)) for s in range(0, n_rows, window)]
-    df = spark.createDataFrame(bounds, "startrow long, nrow long")
-    # One window per task: the ingest parallelism IS the window count.
-    return df.repartition(max(len(bounds), 1))
-
-
-def read_casa_main_rows(
-    spark: SparkSession, path: str, window: int = DEFAULT_WINDOW
+def _paged(
+    spark: SparkSession, path: str, window: int, schema: str,
+    read: Callable[..., dict],
 ) -> DataFrame:
-    """Row-level main-table columns (+ UVW split to u/v/w), long-layout
-    row_id = the MS row number. Distributed getcol paging."""
+    """The distributed getcol pager: the driver reads only ``nrows()``;
+    each task opens the table by path and yields, per (startrow, nrow)
+    window it holds, the page's columns ``read(t, start, nrow)``."""
     _require_backend(path)
     with _open_table(path) as t:
         n_rows = t.nrows()
@@ -102,13 +97,27 @@ def read_casa_main_rows(
         with _open_table(path) as t:
             for pdf in batches:
                 for start, nrow in zip(pdf["startrow"], pdf["nrow"]):
-                    start, nrow = int(start), int(nrow)
-                    out = {"row_id": np.arange(start, start + nrow)}
-                    for c in ROW_COLS:
-                        out[c] = t.getcol(c, startrow=start, nrow=nrow)
-                    uvw = t.getcol("UVW", startrow=start, nrow=nrow)
-                    out["u"], out["v"], out["w"] = uvw[:, 0], uvw[:, 1], uvw[:, 2]
-                    yield pd.DataFrame(out)
+                    yield pd.DataFrame(read(t, int(start), int(nrow)))
+
+    bounds = [(s, min(window, n_rows - s)) for s in range(0, n_rows, window)]
+    windows = spark.createDataFrame(bounds, "startrow long, nrow long")
+    # One window per task: the ingest parallelism IS the window count.
+    return windows.repartition(max(len(bounds), 1)).mapInPandas(page, schema)
+
+
+def read_casa_main_rows(
+    spark: SparkSession, path: str, window: int = DEFAULT_WINDOW
+) -> DataFrame:
+    """Row-level main-table columns (+ UVW split to u/v/w), long-layout
+    row_id = the MS row number. Distributed getcol paging."""
+
+    def read(t, start: int, nrow: int) -> dict:
+        out = {"row_id": np.arange(start, start + nrow)}
+        for c in ROW_COLS:
+            out[c] = t.getcol(c, startrow=start, nrow=nrow)
+        uvw = t.getcol("UVW", startrow=start, nrow=nrow)
+        out["u"], out["v"], out["w"] = uvw[:, 0], uvw[:, 1], uvw[:, 2]
+        return out
 
     schema = (
         "row_id long, TIME double, INTERVAL double, EXPOSURE double, "
@@ -117,7 +126,7 @@ def read_casa_main_rows(
         "PROCESSOR_ID int, STATE_ID int, FLAG_ROW boolean, "
         "u double, v double, w double"
     )
-    return _window_frame(spark, n_rows, window).mapInPandas(page, schema)
+    return _paged(spark, path, window, schema, read)
 
 
 def read_casa_vis(
@@ -129,54 +138,43 @@ def read_casa_vis(
     """Visibility cube -> long layout (row_id, chan, corr, vis_re,
     vis_im, flag, weight_sp, sigma_sp): each executor pages its windows
     and flattens the (row, chan, corr) cube column-wise."""
-    _require_backend(path)
-    with _open_table(path) as t:
-        n_rows = t.nrows()
-        colnames = set(t.colnames())
-    have_wsp = "WEIGHT_SPECTRUM" in colnames
-    have_ssp = "SIGMA_SPECTRUM" in colnames
 
-    def page(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with _open_table(path) as t:
-            for pdf in batches:
-                for start, nrow in zip(pdf["startrow"], pdf["nrow"]):
-                    start, nrow = int(start), int(nrow)
-                    data = t.getcol(data_column, startrow=start, nrow=nrow)
-                    flag = t.getcol("FLAG", startrow=start, nrow=nrow)
-                    nr, nc, npol = data.shape
-                    if have_wsp:
-                        wsp = t.getcol("WEIGHT_SPECTRUM", startrow=start, nrow=nrow)
-                    else:  # broadcast WEIGHT over channels (MS v2 convention)
-                        wsp = np.repeat(
-                            t.getcol("WEIGHT", startrow=start, nrow=nrow)[:, None, :],
-                            nc, axis=1,
-                        )
-                    if have_ssp:
-                        ssp = t.getcol("SIGMA_SPECTRUM", startrow=start, nrow=nrow)
-                    else:
-                        ssp = np.repeat(
-                            t.getcol("SIGMA", startrow=start, nrow=nrow)[:, None, :],
-                            nc, axis=1,
-                        )
-                    rid = np.arange(start, start + nr)
-                    yield pd.DataFrame(
-                        {
-                            "row_id": np.repeat(rid, nc * npol),
-                            "chan": np.tile(np.repeat(np.arange(nc), npol), nr),
-                            "corr": np.tile(np.arange(npol), nr * nc),
-                            "vis_re": data.real.ravel(),
-                            "vis_im": data.imag.ravel(),
-                            "flag": flag.ravel(),
-                            "weight_sp": wsp.ravel().astype(np.float64),
-                            "sigma_sp": ssp.ravel().astype(np.float64),
-                        }
-                    )
+    def read(t, start: int, nrow: int) -> dict:
+        colnames = set(t.colnames())
+        data = t.getcol(data_column, startrow=start, nrow=nrow)
+        flag = t.getcol("FLAG", startrow=start, nrow=nrow)
+        nr, nc, npol = data.shape
+        if "WEIGHT_SPECTRUM" in colnames:
+            wsp = t.getcol("WEIGHT_SPECTRUM", startrow=start, nrow=nrow)
+        else:  # broadcast WEIGHT over channels (MS v2 convention)
+            wsp = np.repeat(
+                t.getcol("WEIGHT", startrow=start, nrow=nrow)[:, None, :],
+                nc, axis=1,
+            )
+        if "SIGMA_SPECTRUM" in colnames:
+            ssp = t.getcol("SIGMA_SPECTRUM", startrow=start, nrow=nrow)
+        else:
+            ssp = np.repeat(
+                t.getcol("SIGMA", startrow=start, nrow=nrow)[:, None, :],
+                nc, axis=1,
+            )
+        rid = np.arange(start, start + nr)
+        return {
+            "row_id": np.repeat(rid, nc * npol),
+            "chan": np.tile(np.repeat(np.arange(nc), npol), nr),
+            "corr": np.tile(np.arange(npol), nr * nc),
+            "vis_re": data.real.ravel(),
+            "vis_im": data.imag.ravel(),
+            "flag": flag.ravel(),
+            "weight_sp": wsp.ravel().astype(np.float64),
+            "sigma_sp": ssp.ravel().astype(np.float64),
+        }
 
     schema = (
         "row_id long, chan int, corr int, vis_re double, vis_im double, "
         "flag boolean, weight_sp double, sigma_sp double"
     )
-    return _window_frame(spark, n_rows, window).mapInPandas(page, schema)
+    return _paged(spark, path, window, schema, read)
 
 
 def _subtable_frames(spark: SparkSession, path: str) -> dict:
@@ -269,28 +267,20 @@ def read_casa_ms(
     tables["ms_rows"] = read_casa_main_rows(spark, path, window)
     tables["ms_vis"] = read_casa_vis(spark, path, data_column, window)
 
-    def page_weights(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with _open_table(path) as t:
-            for pdf in batches:
-                for start, nrow in zip(pdf["startrow"], pdf["nrow"]):
-                    start, nrow = int(start), int(nrow)
-                    wt = t.getcol("WEIGHT", startrow=start, nrow=nrow)
-                    sg = t.getcol("SIGMA", startrow=start, nrow=nrow)
-                    nr, npol = wt.shape
-                    rid = np.arange(start, start + nr)
-                    yield pd.DataFrame(
-                        {
-                            "row_id": np.repeat(rid, npol),
-                            "corr": np.tile(np.arange(npol), nr),
-                            "WEIGHT": wt.ravel().astype(np.float64),
-                            "SIGMA": sg.ravel().astype(np.float64),
-                        }
-                    )
+    def weights(t, start: int, nrow: int) -> dict:
+        wt = t.getcol("WEIGHT", startrow=start, nrow=nrow)
+        sg = t.getcol("SIGMA", startrow=start, nrow=nrow)
+        nr, npol = wt.shape
+        return {
+            "row_id": np.repeat(np.arange(start, start + nr), npol),
+            "corr": np.tile(np.arange(npol), nr),
+            "WEIGHT": wt.ravel().astype(np.float64),
+            "SIGMA": sg.ravel().astype(np.float64),
+        }
 
-    with _open_table(path) as t:
-        n_rows = t.nrows()
-    tables["ms_weights"] = _window_frame(spark, n_rows, window).mapInPandas(
-        page_weights, "row_id long, corr int, WEIGHT double, SIGMA double"
+    tables["ms_weights"] = _paged(
+        spark, path, window,
+        "row_id long, corr int, WEIGHT double, SIGMA double", weights,
     )
     for name, df in tables.items():
         df.createOrReplaceTempView(name)

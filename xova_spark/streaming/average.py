@@ -39,7 +39,8 @@ def parquet_stream(
     The schema comes from the footer (no Spark job). The file source
     needs a directory (it force-sets basePath to a non-glob load path),
     so a single file is staged as a symlink in ``stage_dir`` — files
-    dropped there later become further micro-batches."""
+    dropped there later become further micro-batches. A link a run over
+    another file left there is re-pointed: the stream reads ``path``."""
     import os
 
     from xova_spark.sources.ms_writer import footer_schema
@@ -48,6 +49,8 @@ def parquet_stream(
     if not os.path.isdir(path):
         os.makedirs(stage_dir, exist_ok=True)
         link = os.path.join(stage_dir, "part-0.parquet")
+        if os.path.lexists(link) and os.readlink(link) != os.path.abspath(path):
+            os.remove(link)
         if not os.path.lexists(link):
             os.symlink(os.path.abspath(path), link)
         path = stage_dir
