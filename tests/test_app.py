@@ -384,7 +384,7 @@ def _last_job_id(sc) -> int:
 # counts are deterministic. Before a run held its shared frames once,
 # they were timechannel 31, bda 115, stream 34. ``stream_bda`` is
 # ``stream --mode bda``, binned by the operator's own held bin map.
-JOB_BUDGET = {"timechannel": 30, "bda": 49, "stream": 31, "stream_bda": 48}
+JOB_BUDGET = {"timechannel": 29, "bda": 39, "stream": 30, "stream_bda": 39}
 
 
 @pytest.mark.parametrize("command", sorted(JOB_BUDGET))
@@ -481,6 +481,37 @@ def test_app_output_reopens_checks_and_reaverages(
     # re-averaging the averaged output runs end-to-end and shrinks rows
     assert 0 < again["ms_rows"].count() < back["ms_rows"].count()
     assert again["ms_vis"].count() > 0
+
+
+def test_app_bda_over_bda_output_writes_its_own_spw(spark, ms_dir, tmp_path):
+    """BDA over a BDA output writes the ``spw`` and ``ddid_map`` this run
+    computed, not the input's passed through: ``spw`` holds the grids of
+    the output's ``spw_chans``, and ``ddid_map`` remints onto its
+    ``ddid``."""
+    from pyspark.sql import functions as F
+
+    cmd = ["-d", "0.95", "-fov", "0.315", "-t", "16", "-mc", "2"]
+    once, twice = str(tmp_path / "once.ms"), str(tmp_path / "twice.ms")
+    Application(["bda", ms_dir, *cmd, "-o", once], spark=spark).execute()
+    Application(["bda", once, *cmd, "-o", twice], spark=spark).execute()
+    back = load_ms(spark, twice)
+    grid = back["spw"].select(
+        F.col("NEW_SPW_ID").alias("SPECTRAL_WINDOW_ID"),
+        "chan", "CHAN_FREQ", "CHAN_WIDTH",
+    )
+    chans = back["spw_chans"].select(
+        "SPECTRAL_WINDOW_ID", "chan", "CHAN_FREQ", "CHAN_WIDTH"
+    )
+    assert sorted(grid.collect()) == sorted(chans.collect())
+    remint = back["ddid_map"].select(
+        F.col("NEW_DATA_DESC_ID").alias("DATA_DESC_ID"),
+        F.col("NEW_SPW_ID").alias("SPECTRAL_WINDOW_ID"),
+        "POLARIZATION_ID",
+    ).distinct()
+    ddid = back["ddid"].select(
+        "DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID"
+    )
+    assert sorted(remint.collect()) == sorted(ddid.collect())
 
 
 def test_app_bda_output_passes_check(spark, ms_dir, tmp_path):

@@ -89,6 +89,24 @@ def test_bda_vis_plan(spark, ms):
     assert P.sortmerge_join_count(q) == 0, P.plan_stats(q)
 
 
+def test_bda_tables_have_no_unpartitioned_window(spark, ms):
+    """BDA's SPW/DDID regeneration is driver code (regrid): no table
+    bda() returns carries a global-sort window in its executed plan."""
+    from pyspark.sql import DataFrame
+
+    from xova_spark.operators import bda as B
+    from xova_spark.plancontract import has_unpartitioned_window
+    from xova_spark.queries import bda as bq
+
+    out = B.bda(ms, bq.DECORR, bq.MAX_FOV, bq.TIME_CAP, bq.MIN_NCHAN)
+    bad = [
+        name for name, df in out.items()
+        if isinstance(df, DataFrame)
+        and has_unpartitioned_window(P.executed_plan(df))
+    ]
+    assert not bad, bad
+
+
 def _tc_map(ms):
     from xova_spark.operators import timechannel as tc
 

@@ -43,16 +43,19 @@ Scale design: phase 1 is one narrow aggregation over (partition,
 baseline) — output cardinality #partitions x #baselines, tiny versus the
 row table, so the params join back to rows/vis is a broadcast. Phase 2
 is one shuffle each for rows and vis, both keyed on the (partition,
-baseline) prefix. The SPW/DDID regeneration operates on the distinct
-channelisation set (A4/A5) — driver-scale data, broadcast back (J3).
+baseline) prefix. The SPW/DDID regeneration (A4/A5) is driver code,
+``regrid``: one collect of the distinct channelisations, the reminted
+ids and grids computed in Python and returned as local relations, so
+the J3 remap join broadcasts them without a job.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from xova_spark.operators.timechannel import (
     BL_KEYS,
@@ -94,23 +97,44 @@ def bda_constants(
     return kt, kf
 
 
+def _local(spark, ddl: str, rows: list) -> DataFrame:
+    """Driver-built ``rows`` (tuples) as an Arrow-backed local relation
+    of schema ``ddl``: it is broadcast and written with no Python
+    worker, unlike a frame built from a list."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def ddid_dims(tables: dict) -> DataFrame:
-    """Per-DDID spectral facts needed by the decorrelation model:
-    nu_max (top channel edge — worst-case smearing), chan_width,
-    NUM_CHAN. Reference joins the same columns at averaging.py:306-308."""
+    """Per-DDID spectral facts, collected once into a local relation:
+    SPECTRAL_WINDOW_ID and POLARIZATION_ID; for the decorrelation model
+    nu_max (top channel edge — worst-case smearing), chan_width and
+    NUM_CHAN (the reference joins the same columns at
+    averaging.py:306-308); for ``regrid`` the band's lower edge
+    f_start and its width."""
     spw = tables["spw_chans"].groupBy("SPECTRAL_WINDOW_ID").agg(
         F.max(F.col("CHAN_FREQ") + F.col("CHAN_WIDTH") / 2).alias("nu_max"),
         F.max("CHAN_WIDTH").alias("chan_width"),
+        F.min(F.col("CHAN_FREQ") - F.col("CHAN_WIDTH") / 2).alias("f_start"),
+        F.sum("CHAN_WIDTH").alias("band"),
     )
-    return (
+    dims = (
         tables["ddid"]
-        .join(F.broadcast(spw), "SPECTRAL_WINDOW_ID")
+        .join(spw, "SPECTRAL_WINDOW_ID")
         .join(
-            F.broadcast(tables["spw_meta"].select("SPECTRAL_WINDOW_ID", "NUM_CHAN")),
+            tables["spw_meta"].select("SPECTRAL_WINDOW_ID", "NUM_CHAN"),
             "SPECTRAL_WINDOW_ID",
         )
-        .select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "nu_max", "chan_width", "NUM_CHAN")
+        .select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID",
+                "nu_max", "chan_width", "NUM_CHAN", "f_start", "band")
     )
+    return _local(dims.sparkSession, dims.schema.simpleString(), dims.collect())
 
 
 def bin_params(
@@ -135,7 +159,7 @@ def bin_params(
         F.min("TIME").alias("t0"),
         F.min("INTERVAL").alias("interval_nom"),
     )
-    p = per_bl.join(F.broadcast(dims), "DATA_DESC_ID")
+    p = per_bl.join(dims, "DATA_DESC_ID")
     dt_max = F.lit(kt) / (F.col("bl_uv") * F.col("nu_max"))
     cap_n = F.floor(F.lit(time_bin_secs) / F.col("interval_nom"))
     n_int = F.greatest(
@@ -199,72 +223,6 @@ def assign_bins(rows: DataFrame, params: DataFrame) -> DataFrame:
     )
 
 
-def spw_grid(params: DataFrame, tables: dict) -> DataFrame:
-    """V3: regenerate SPECTRAL_WINDOW rows for the ragged output — one
-    new SPW per distinct (original SPW, out_nchan) channelisation, its
-    channel grid a uniform linspace over the original band
-    (averaging.py:504-523). NEW_SPW_ID = dense_rank over the distinct
-    set (deterministic). Driver-scale data: the distinct set has at most
-    #SPWs x #divisors rows."""
-    band = tables["spw_chans"].groupBy("SPECTRAL_WINDOW_ID").agg(
-        F.min(F.col("CHAN_FREQ") - F.col("CHAN_WIDTH") / 2).alias("f_start"),
-        F.sum("CHAN_WIDTH").alias("band"),
-    )
-    ddid = tables["ddid"].select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID")
-    distinct = (
-        params.join(F.broadcast(ddid), "DATA_DESC_ID")
-        .select("SPECTRAL_WINDOW_ID", "out_nchan")
-        .distinct()
-    )
-    w = Window.orderBy("SPECTRAL_WINDOW_ID", "out_nchan")
-    keyed = distinct.withColumn(
-        "NEW_SPW_ID", (F.dense_rank().over(w) - 1).cast("int")
-    ).join(F.broadcast(band), "SPECTRAL_WINDOW_ID")
-    new_width = F.col("band") / F.col("out_nchan").cast("double")
-    return (
-        keyed.withColumn("chan", F.explode(F.sequence(F.lit(0), F.col("out_nchan") - 1)))
-        .select(
-            "NEW_SPW_ID",
-            "SPECTRAL_WINDOW_ID",
-            F.col("out_nchan").alias("NUM_CHAN"),
-            F.col("chan").cast("int").alias("chan"),
-            (
-                F.col("f_start")
-                + (F.col("chan").cast("double") + 0.5) * new_width
-            ).alias("CHAN_FREQ"),
-            new_width.alias("CHAN_WIDTH"),
-            F.col("band").alias("TOTAL_BANDWIDTH"),
-        )
-    )
-
-
-def ddid_map(params: DataFrame, tables: dict) -> DataFrame:
-    """J3: old (DATA_DESC_ID, out_nchan) -> NEW_DATA_DESC_ID /
-    NEW_SPW_ID broadcast remap (averaging.py:527-547,693-698).
-    POLARIZATION_ID carries over unchanged."""
-    ddid = tables["ddid"]
-    distinct = (
-        params.join(F.broadcast(ddid), "DATA_DESC_ID")
-        .select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID", "out_nchan")
-        .distinct()
-    )
-    wd = Window.orderBy("DATA_DESC_ID", "out_nchan")
-    ws = Window.orderBy("SPECTRAL_WINDOW_ID", "out_nchan")
-    return (
-        distinct.withColumn(
-            "NEW_DATA_DESC_ID", (F.dense_rank().over(wd) - 1).cast("int")
-        )
-        .withColumn("NEW_SPW_ID", (F.dense_rank().over(ws) - 1).cast("int"))
-        .select(
-            "DATA_DESC_ID",
-            "out_nchan",
-            "NEW_DATA_DESC_ID",
-            "NEW_SPW_ID",
-            "POLARIZATION_ID",
-        )
-    )
-
-
 def bda(
     tables: dict,
     decorrelation: float = 0.95,
@@ -287,23 +245,74 @@ def bda(
     kept alongside for lineage. Unknown subtables pass through
     (subtables.py:9-37). ``vis_average`` as in average_binned."""
     rows = select_rows(tables["ms_rows"], fields, scans)
+    dims = ddid_dims(tables)
     params = hold(bin_params(
-        rows, ddid_dims(tables), decorrelation, max_fov, time_bin_secs, min_nchan
+        rows, dims, decorrelation, max_fov, time_bin_secs, min_nchan
     ))
-    dmap = hold(ddid_map(params, tables))
-    grid = hold(spw_grid(params, tables))
+    grid = regrid(params, dims)
     main = average_binned(
         tables, assign_bins(rows, params), F.col("chan_fac"),
         payload=["chan_fac"], constants=RAGGED_COLS, vis_average=vis_average,
     )
-    rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta", "ddid"}
-    return {
+    out = {
         **main,
-        "ms_rows": remap_main(_remap_rows(main["ms_rows"], dmap)),
-        "spw": grid,
-        "ddid_map": dmap,
-        **conformant_subtables(dmap, grid),
-        **{k: v for k, v in tables.items() if k not in rewritten},
+        "ms_rows": remap_main(_remap_rows(main["ms_rows"], grid["ddid_map"])),
+        # One file per table: a local relation has a partition per core.
+        **{name: df.coalesce(1) for name, df in grid.items()},
+    }
+    # The tables computed here win: an input's own spw/ddid_map lineage
+    # (a BDA output averaged again) does not pass through.
+    return {**out, **{k: v for k, v in tables.items() if k not in out}}
+
+
+def regrid(params: DataFrame, dims: DataFrame) -> dict:
+    """V3/J3 on the driver, over one collect of the distinct
+    (DATA_DESC_ID, out_nchan) channelisations of ``params`` (at most
+    #DDIDs x #divisors rows) and the ``ddid_dims`` local relation.
+
+    Each channelisation mints a NEW_DATA_DESC_ID and each distinct
+    (SPECTRAL_WINDOW_ID, out_nchan) a NEW_SPW_ID, numbered in sorted key
+    order (averaging.py:527-547). A new SPW's grid is a uniform linspace
+    over the original band (averaging.py:504-523), in the oracle's
+    operation order. Returns local relations: ``spw`` (the grids, for
+    lineage), ``ddid_map`` (the remap, averaging.py:693-698) and the
+    conformant ``ddid``, ``spw_chans`` and ``spw_meta``
+    (averaging.py:707-720; EFFECTIVE_BW and RESOLUTION equal CHAN_WIDTH
+    on a uniform grid, REF_FREQUENCY is channel 0's CHAN_FREQ)."""
+    dim = {r["DATA_DESC_ID"]: r for r in dims.collect()}
+    distinct = params.select("DATA_DESC_ID", "out_nchan").distinct()
+    keys = sorted(tuple(r) for r in distinct.collect())
+    spws = sorted({(dim[d]["SPECTRAL_WINDOW_ID"], n) for d, n in keys})
+    new_spw = {k: i for i, k in enumerate(spws)}
+    dmap = [
+        (d, n, i, new_spw[dim[d]["SPECTRAL_WINDOW_ID"], n], dim[d]["POLARIZATION_ID"])
+        for i, (d, n) in enumerate(keys)
+    ]
+    band = {r["SPECTRAL_WINDOW_ID"]: (r["f_start"], r["band"]) for r in dim.values()}
+    grid = []  # (NEW_SPW_ID, SPW, out_nchan, chan, CHAN_FREQ, CHAN_WIDTH, band)
+    for s, (spw, n) in enumerate(spws):
+        f0, bw = band[spw]
+        grid += [(s, spw, n, c, f0 + (c + 0.5) * (bw / n), bw / n, bw)
+                 for c in range(n)]
+    t = {f.name: f.dataType.simpleString()
+         for f in [*dims.schema, params.schema["DATA_DESC_ID"]]}
+    spark, chan_cols = params.sparkSession, "CHAN_FREQ double, CHAN_WIDTH double"
+    return {
+        "spw": _local(spark, f"NEW_SPW_ID int, SPECTRAL_WINDOW_ID "
+                      f"{t['SPECTRAL_WINDOW_ID']}, NUM_CHAN int, chan int, "
+                      f"{chan_cols}, TOTAL_BANDWIDTH double", grid),
+        "ddid_map": _local(spark, f"DATA_DESC_ID {t['DATA_DESC_ID']}, out_nchan "
+                           "int, NEW_DATA_DESC_ID int, NEW_SPW_ID int, "
+                           f"POLARIZATION_ID {t['POLARIZATION_ID']}", dmap),
+        "ddid": _local(spark, "DATA_DESC_ID int, SPECTRAL_WINDOW_ID int, "
+                       f"POLARIZATION_ID {t['POLARIZATION_ID']}",
+                       [m[2:] for m in dmap]),
+        "spw_chans": _local(spark, f"SPECTRAL_WINDOW_ID int, chan int, {chan_cols}, "
+                            "EFFECTIVE_BW double, RESOLUTION double",
+                            [(g[0], *g[3:6], g[5], g[5]) for g in grid]),
+        "spw_meta": _local(spark, "SPECTRAL_WINDOW_ID int, NUM_CHAN int, "
+                           "TOTAL_BANDWIDTH double, REF_FREQUENCY double",
+                           [(g[0], g[2], g[6], g[4]) for g in grid if g[3] == 0]),
     }
 
 
@@ -322,42 +331,13 @@ def remap_main(remapped: DataFrame) -> DataFrame:
     )
 
 
-def conformant_subtables(dmap: DataFrame, grid: DataFrame) -> dict:
-    """DDID / SPW subtables under the standard names and schemas so a
-    written BDA output re-opens through load_ms and passes `check`
-    (V3 wiring, averaging.py:707-720). EFFECTIVE_BW/RESOLUTION equal
-    CHAN_WIDTH on the regenerated uniform grid."""
-    return {
-        "ddid": dmap.select(
-            F.col("NEW_DATA_DESC_ID").alias("DATA_DESC_ID"),
-            F.col("NEW_SPW_ID").alias("SPECTRAL_WINDOW_ID"),
-            "POLARIZATION_ID",
-        ).distinct(),
-        "spw_chans": grid.select(
-            F.col("NEW_SPW_ID").alias("SPECTRAL_WINDOW_ID"),
-            "chan",
-            "CHAN_FREQ",
-            "CHAN_WIDTH",
-            F.col("CHAN_WIDTH").alias("EFFECTIVE_BW"),
-            F.col("CHAN_WIDTH").alias("RESOLUTION"),
-        ),
-        "spw_meta": grid.groupBy(
-            F.col("NEW_SPW_ID").alias("SPECTRAL_WINDOW_ID")
-        ).agg(
-            F.any_value("NUM_CHAN").alias("NUM_CHAN"),
-            F.any_value("TOTAL_BANDWIDTH").alias("TOTAL_BANDWIDTH"),
-            F.min("CHAN_FREQ").alias("REF_FREQUENCY"),
-        ),
-    }
-
-
 def _remap_rows(avg_rows: DataFrame, dmap: DataFrame) -> DataFrame:
     """Apply the J3 DDID remap to the averaged rows: the output NUM_CHAN
     selects which reminted DDID a row points at."""
     m = dmap.select(
         "DATA_DESC_ID", F.col("out_nchan").alias("NUM_CHAN"), "NEW_DATA_DESC_ID"
     )
-    return avg_rows.join(F.broadcast(m), ["DATA_DESC_ID", "NUM_CHAN"], "left")
+    return avg_rows.join(m, ["DATA_DESC_ID", "NUM_CHAN"], "left")
 
 
 def greedy_bda_map(rows: DataFrame, params: DataFrame) -> DataFrame:

@@ -235,28 +235,41 @@ def average_weights(
 VIS_VALUES = ["vis_re", "vis_im", "flag", "weight_sp", "sigma_sp", "n_samples"]
 
 
+def _partials() -> dict:
+    fl, w, s = F.col("flag"), F.col("weight_sp"), F.col("sigma_sp")
+    re, im = F.col("vis_re"), F.col("vis_im")
+    unfl = ~fl
+    return {
+        "n": F.count("*"),
+        "n_unfl": F.count(F.when(unfl, F.lit(1))),
+        "sw_u": F.sum(F.when(unfl, w)),
+        "swre_u": F.sum(F.when(unfl, w * re)),
+        "swim_u": F.sum(F.when(unfl, w * im)),
+        "sw2s2_u": F.sum(F.when(unfl, w * w * s * s)),
+        "sw_a": F.sum(w),
+        "swre_a": F.sum(w * re),
+        "swim_a": F.sum(w * im),
+        "sw2s2_a": F.sum(w * w * s * s),
+        "flag_all": F.bool_and(fl),
+    }
+
+
 def vis_partials() -> list:
     """The A1a visibility aggregation as 11 decomposable sums over raw
     samples: counts and weighted sums over the unflagged samples
     (``_u``) and over all samples (``_a``), plus the all-flagged flag.
-    Partials of disjoint sample sets merge by sum (AND for flag_all),
-    so a batch aggregation and an incrementally merged one feed the
-    same ``finalize``."""
-    fl, w, s = F.col("flag"), F.col("weight_sp"), F.col("sigma_sp")
-    re, im = F.col("vis_re"), F.col("vis_im")
-    unfl = ~fl
+    Partials of disjoint sample sets merge with ``merge_partials``, so
+    a batch aggregation and an incrementally merged one feed the same
+    ``finalize``."""
+    return [e.alias(c) for c, e in _partials().items()]
+
+
+def merge_partials() -> list:
+    """The vis_partials of disjoint sample sets merged into those of
+    their union: counts and sums add, flag_all is AND."""
     return [
-        F.count("*").alias("n"),
-        F.count(F.when(unfl, F.lit(1))).alias("n_unfl"),
-        F.sum(F.when(unfl, w)).alias("sw_u"),
-        F.sum(F.when(unfl, w * re)).alias("swre_u"),
-        F.sum(F.when(unfl, w * im)).alias("swim_u"),
-        F.sum(F.when(unfl, w * w * s * s)).alias("sw2s2_u"),
-        F.sum(w).alias("sw_a"),
-        F.sum(w * re).alias("swre_a"),
-        F.sum(w * im).alias("swim_a"),
-        F.sum(w * w * s * s).alias("sw2s2_a"),
-        F.bool_and(fl).alias("flag_all"),
+        (F.bool_and if c == "flag_all" else F.sum)(c).alias(c)
+        for c in _partials()
     ]
 
 
@@ -281,6 +294,16 @@ def finalize() -> list:
     ]
 
 
+def bin_samples(
+    vis: DataFrame, bins: DataFrame, chan_bin_size: int | Column
+) -> DataFrame:
+    """Visibility samples joined to their row's bin-map columns, with
+    chan_bin = floor(chan / ``chan_bin_size``)."""
+    return vis.join(bins, "row_id").withColumn(
+        "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
+    )
+
+
 def average_vis(
     vis: DataFrame, bins: DataFrame, chan_bin_size: int | Column = 16,
     keep_rep: bool = False,
@@ -291,10 +314,7 @@ def average_vis(
     int for timechannel, ``F.col("chan_fac")`` for BDA's per-baseline
     ragged factor carried by its bin map."""
     # The map's per-row payload: rep, plus chan_fac on a BDA map.
-    narrow = bins.drop(*BIN_KEYS, "FLAG_ROW")
-    j = vis.join(narrow, "row_id").withColumn(
-        "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
-    )
+    j = bin_samples(vis, bins.drop(*BIN_KEYS, "FLAG_ROW"), chan_bin_size)
     keys = ["rep", "chan_bin", "corr"]
     agg = j.groupBy(*keys).agg(*vis_partials()).select(*keys, *finalize())
     return _reattach(agg, bins, ["chan_bin", "corr", *VIS_VALUES], keep_rep)

@@ -186,8 +186,9 @@ def fixms(averaged_rows: DataFrame, antenna: DataFrame, field: DataFrame) -> Dat
     if "NUM_POLY" in field.columns:
         import logging
 
-        # Field tables are dimension-scale; this is a planning-time check.
-        if field.filter(F.col("NUM_POLY") != 0).limit(1).count() > 0:
+        # Field tables are dimension-scale: one collect of the column
+        # (a null NUM_POLY counts as 0).
+        if any(r.NUM_POLY for r in field.select("NUM_POLY").collect()):
             logging.getLogger(__name__).critical(
                 "UVW recompute does not support time-variable reference "
                 "centres. Your dataset will contain averaged UVW "

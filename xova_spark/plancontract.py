@@ -39,20 +39,6 @@ import re
 # each unpartitioned Window line; "source" against the entry function's
 # source (inspect.getsource).
 WINDOW_SURVIVORS: dict[str, dict[str, str]] = {
-    # dense_rank over the DISTINCT (DDID|SPW, out_nchan) dimension —
-    # K = #spectral windows x #binnings, physical metadata, not data.
-    "bda_rows_remapped": {
-        "kind": "dim_agg",
-        "marker": r"HashAggregate\(keys=\[DATA_DESC_ID#\d+",
-    },
-    "bda_spw_grid": {
-        "kind": "dim_agg",
-        "marker": r"HashAggregate\(keys=\[SPECTRAL_WINDOW_ID#\d+",
-    },
-    "bda_ddid_map": {
-        "kind": "dim_agg",
-        "marker": r"HashAggregate\(keys=\[DATA_DESC_ID#\d+",
-    },
     # rank over an already-top-k'd frame: the top-k itself is the
     # distributed TakeOrderedAndProject, the window sees <= limit rows.
     "t_bm25_topk": {

@@ -228,14 +228,15 @@ JOIN dmap m ON m.DATA_DESC_ID = a.DATA_DESC_ID AND m.out_nchan = a.NUM_CHAN
 )
 def bda_rows_remapped(spark, sf_dir):
     """Full A2+J3 composition: averaged rows with their DATA_DESC_ID
-    remapped to the reminted DDIDs (the output-row surface a consumer
-    of `xova bda` actually reads; averaging.py:693-705)."""
+    remapped to the reminted DDIDs of regrid's ddid_map (the output-row
+    surface a consumer of `xova bda` actually reads;
+    averaging.py:693-705)."""
     t, params = _params(spark)
     return B._remap_rows(
         tc.average_binned_rows(
             B.assign_bins(t["ms_rows"], params), constants=B.RAGGED_COLS
         ),
-        B.ddid_map(params, t),
+        B.regrid(params, B.ddid_dims(t))["ddid_map"],
     )
 
 
@@ -274,9 +275,10 @@ WHERE g.i < k.out_nchan
 )
 def bda_spw_grid(spark, sf_dir):
     """V3: reminted SPECTRAL_WINDOW grids — one uniform linspace per
-    distinct (SPW, out_nchan) channelisation (averaging.py:504-523)."""
+    distinct (SPW, out_nchan) channelisation, built on the driver by
+    regrid (averaging.py:504-523)."""
     t, params = _params(spark)
-    return B.spw_grid(params, t)
+    return B.regrid(params, B.ddid_dims(t))["spw"]
 
 
 @q(
@@ -299,10 +301,10 @@ FROM dist
 """.format(dir=_DIR),
 )
 def bda_ddid_map(spark, sf_dir):
-    """J3: broadcast (DATA_DESC_ID, out_nchan) -> new DDID/SPW remap
-    (averaging.py:527-547,693-698)."""
+    """J3: (DATA_DESC_ID, out_nchan) -> new DDID/SPW remap, minted on
+    the driver by regrid (averaging.py:527-547,693-698)."""
     t, params = _params(spark)
-    return B.ddid_map(params, t)
+    return B.regrid(params, B.ddid_dims(t))["ddid_map"]
 
 
 def _greedy_binned(spark):

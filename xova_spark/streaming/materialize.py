@@ -21,7 +21,13 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xova_spark.operators.timechannel import BIN_KEYS, finalize, vis_partials
+from xova_spark.operators.timechannel import (
+    BIN_KEYS,
+    bin_samples,
+    finalize,
+    merge_partials,
+    vis_partials,
+)
 
 
 def _upsert(partial: DataFrame, out_dir: str, keys: list[str], merge_aggs: list):
@@ -86,35 +92,25 @@ def read_rollup(spark, out_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming MS maintenance: the averaging pipeline as a continuously
 # materialized output MS. Each micro-batch of visibility samples merges
-# the DECOMPOSABLE A1a partials (operators/timechannel.vis_partials:
-# counts and sums, flag merged by AND) into the stored table; the
-# averaged columns derive at read time through the same finalize the
-# batch average_vis uses. This is the reference's write path
+# the DECOMPOSABLE A1a partials (operators/timechannel.vis_partials,
+# merged by merge_partials: counts and sums add, flag is AND) into the
+# stored table; the averaged columns derive at read time through the
+# same finalize the batch average_vis uses. This is the reference's write path
 # (app.py:107-116) turned into incremental maintenance the batch engine
 # cannot express. Both pipelines share it: a BDA bin map and
 # ``F.col("chan_fac")`` as the channel divisor give the ragged bins.
 
 _VIS_KEYS = [*BIN_KEYS, "chan_bin", "corr"]
 
-_PARTIAL_SUMS = ["n", "n_unfl", "sw_u", "swre_u", "swim_u", "sw2s2_u",
-                 "sw_a", "swre_a", "swim_a", "sw2s2_a"]
-
-
-def _vis_partials(vis: DataFrame, bins: DataFrame, chan_bin_size) -> DataFrame:
-    """Per-(bin, chan_bin, corr) vis_partials of one micro-batch."""
-    j = vis.join(bins, "row_id").withColumn(
-        "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
-    )
-    return j.groupBy(*_VIS_KEYS).agg(*vis_partials())
-
 
 def _merge_vis_into(batch_df: DataFrame, batch_id: int, out_dir: str,
                     bins: DataFrame, chan_bin_size):
-    _upsert(
-        _vis_partials(batch_df, bins, chan_bin_size), out_dir, _VIS_KEYS,
-        [*[F.sum(c).alias(c) for c in _PARTIAL_SUMS],
-         F.bool_and("flag_all").alias("flag_all")],
+    # Per-(bin, chan_bin, corr) vis_partials of one micro-batch.
+    partial = (
+        bin_samples(batch_df, bins, chan_bin_size)
+        .groupBy(*_VIS_KEYS).agg(*vis_partials())
     )
+    _upsert(partial, out_dir, _VIS_KEYS, merge_partials())
 
 
 def materialized_ms_vis(
