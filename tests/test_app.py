@@ -384,7 +384,9 @@ def _last_job_id(sc) -> int:
 # counts are deterministic. Before a run held its shared frames once,
 # they were timechannel 31, bda 115, stream 34. ``stream_bda`` is
 # ``stream --mode bda``, binned by the operator's own held bin map.
-JOB_BUDGET = {"timechannel": 29, "bda": 39, "stream": 30, "stream_bda": 39}
+# Before each sample table was one aggregation and the SPW tables were
+# driver code, they were timechannel 29, bda 39, stream 30, stream_bda 39.
+JOB_BUDGET = {"timechannel": 24, "bda": 35, "stream": 27, "stream_bda": 37}
 
 
 @pytest.mark.parametrize("command", sorted(JOB_BUDGET))
@@ -512,6 +514,21 @@ def test_app_bda_over_bda_output_writes_its_own_spw(spark, ms_dir, tmp_path):
         "DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID"
     )
     assert sorted(remint.collect()) == sorted(ddid.collect())
+
+
+def test_app_timechannel_over_bda_output_drops_its_grids(spark, ms_dir, tmp_path):
+    """timechannel over a BDA output writes no ``spw``/``ddid_map``: they
+    describe the input's ragged grids, not the output's ``spw_chans``.
+    The output re-opens and passes ``check``."""
+    once, again = str(tmp_path / "bda.ms"), str(tmp_path / "tc.ms")
+    Application(["bda", ms_dir, "-d", "0.95", "-fov", "0.315", "-t", "16",
+                 "-mc", "2", "-o", once], spark=spark).execute()
+    assert {"spw", "ddid_map"} <= set(load_ms(spark, once))
+    Application(["timechannel", once, "-t", "4", "-c", "2", "-o", again],
+                spark=spark).execute()
+    back = load_ms(spark, again)
+    assert not {"spw", "ddid_map"} & set(back), sorted(back)
+    Application(["check", again], spark=spark).execute()  # exits 1 on a violation
 
 
 def test_app_bda_output_passes_check(spark, ms_dir, tmp_path):

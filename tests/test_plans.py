@@ -168,6 +168,22 @@ def test_vis_joins_follow_broadcast_threshold(spark, ms, make_map):
         spark.conf.set(key, old)
 
 
+@pytest.mark.parametrize("make_map", [_tc_map, _bda_map], ids=["timechannel", "bda"])
+def test_sample_tables_join_only_the_bin_map(spark, ms, make_map):
+    """Each averaged sample table is one join, samples to the row -> bin
+    map, and one aggregation: the bin key rides through the aggregation
+    on ``rep`` instead of being joined back onto its result."""
+    from xova_spark.operators import timechannel as tc
+
+    bins, div = make_map(ms)
+    for q in (tc.average_weights(ms["ms_weights"], bins),
+              tc.average_vis(ms["ms_vis"], bins, div)):
+        q.collect()  # the final adaptive plan
+        plan = P.executed_plan(q).split("== Initial Plan ==")[0]
+        joins = re.findall(r"\b\w*(?:Join|CartesianProduct)\b", plan)
+        assert len(joins) == 1, plan
+
+
 def test_codegen_covers_hot_path(spark):
     """The pricing-summary scan->filter->agg pipeline runs inside
     whole-stage codegen (at least one span; no interpreter fallback

@@ -52,14 +52,15 @@ the J3 remap join broadcasts them without a job.
 from __future__ import annotations
 
 import math
+from collections import defaultdict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from xova_spark.operators.timechannel import (
     BL_KEYS,
     PART_KEYS,
+    _local,
     average_binned,
     hold,
     select_rows,
@@ -97,44 +98,33 @@ def bda_constants(
     return kt, kf
 
 
-def _local(spark, ddl: str, rows: list) -> DataFrame:
-    """Driver-built ``rows`` (tuples) as an Arrow-backed local relation
-    of schema ``ddl``: it is broadcast and written with no Python
-    worker, unlike a frame built from a list."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = StructType.fromDDL(ddl)
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
-    return spark.createDataFrame(table, schema)
-
-
 def ddid_dims(tables: dict) -> DataFrame:
-    """Per-DDID spectral facts, collected once into a local relation:
+    """Per-DDID spectral facts as a local relation, built on the driver
+    from one collect each of ``ddid``, ``spw_chans`` and ``spw_meta``:
     SPECTRAL_WINDOW_ID and POLARIZATION_ID; for the decorrelation model
     nu_max (top channel edge — worst-case smearing), chan_width and
     NUM_CHAN (the reference joins the same columns at
     averaging.py:306-308); for ``regrid`` the band's lower edge
     f_start and its width."""
-    spw = tables["spw_chans"].groupBy("SPECTRAL_WINDOW_ID").agg(
-        F.max(F.col("CHAN_FREQ") + F.col("CHAN_WIDTH") / 2).alias("nu_max"),
-        F.max("CHAN_WIDTH").alias("chan_width"),
-        F.min(F.col("CHAN_FREQ") - F.col("CHAN_WIDTH") / 2).alias("f_start"),
-        F.sum("CHAN_WIDTH").alias("band"),
-    )
-    dims = (
-        tables["ddid"]
-        .join(spw, "SPECTRAL_WINDOW_ID")
-        .join(
-            tables["spw_meta"].select("SPECTRAL_WINDOW_ID", "NUM_CHAN"),
-            "SPECTRAL_WINDOW_ID",
-        )
-        .select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID", "POLARIZATION_ID",
-                "nu_max", "chan_width", "NUM_CHAN", "f_start", "band")
-    )
-    return _local(dims.sparkSession, dims.schema.simpleString(), dims.collect())
+    chans = defaultdict(list)
+    for spw, freq, width in tables["spw_chans"].select(
+        "SPECTRAL_WINDOW_ID", "CHAN_FREQ", "CHAN_WIDTH"
+    ).collect():
+        chans[spw].append((freq, width))
+    meta = tables["spw_meta"].select("SPECTRAL_WINDOW_ID", "NUM_CHAN")
+    nchan = dict(meta.collect())
+    ddid = tables["ddid"].select("DATA_DESC_ID", "SPECTRAL_WINDOW_ID",
+                                 "POLARIZATION_ID")
+    facts = {  # SPW -> (nu_max, chan_width, f_start, band)
+        spw: (max(f + w / 2 for f, w in fw), max(w for _, w in fw),
+              min(f - w / 2 for f, w in fw), sum(w for _, w in fw))
+        for spw, fw in chans.items()
+    }
+    dims = [(d, spw, pol, nchan[spw], *facts[spw])
+            for d, spw, pol in ddid.collect() if spw in facts and spw in nchan]
+    ids = ", ".join(f.simpleString() for f in [*ddid.schema, meta.schema["NUM_CHAN"]])
+    return _local(ddid.sparkSession, f"{ids}, nu_max double, chan_width double, "
+                  "f_start double, band double", dims)
 
 
 def bin_params(

@@ -30,20 +30,25 @@ Scale design: the row aggregation is one shuffle keyed on
 (partition, baseline) — the min-TIME window and the subsequent groupBy
 share that hash partitioning (HashPartitioning on a key subset satisfies
 the grouped distribution, so Catalyst inserts no second exchange). The
-vis aggregation joins the big samples table to the (row_id -> bin) map,
-then aggregates in a single shuffle. The row-scale joins carry no hint:
+vis and weights aggregations each join their samples table to the
+(row_id -> bin) map, then aggregate in a single shuffle keyed on the
+bin's ``rep`` surrogate, carrying the bin key through it: one join and
+one aggregation per table. The row-scale joins carry no hint:
 the session's ``spark.sql.autoBroadcastJoinThreshold`` broadcasts the map
 when it is small (on a held map it sees the measured size) and AQE
 shuffle-joins it otherwise. Skewed baselines are handled by AQE
-skew-join splitting.
+skew-join splitting. The SPW tables, a few rows per window, are
+averaged on the driver.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 PART_KEYS = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER"]  # app.py:43 GROUP_COLS
 BL_KEYS = ["ANTENNA1", "ANTENNA2"]
@@ -155,8 +160,8 @@ def rep_map(binned: DataFrame, payload: list[str] | tuple = ()) -> DataFrame:
     ``rep`` = min(row_id) within the bin is a single-column surrogate
     for the 6-column bin key: the sample-level aggregations group on it
     instead of the wide key (narrower hash keys + shuffle rows, ~3x at
-    bench scale) and re-attach the wide key afterwards by joining the
-    rep -> keys dim. The window runs on the row table only."""
+    bench scale) and carry the wide key through that one aggregation.
+    The window runs on the row table only."""
     w = Window.partitionBy(*BIN_KEYS)
     return binned.withColumn("rep", F.min("row_id").over(w)).select(
         "row_id", "rep", *BIN_KEYS, *payload, "FLAG_ROW"
@@ -197,17 +202,13 @@ def hold(df: DataFrame) -> DataFrame:
     return df
 
 
-def _reattach(
-    agg: DataFrame,
-    bins: DataFrame,
-    tail_cols: list[str],
-    keep_rep: bool = False,
-) -> DataFrame:
-    # The rep -> keys dim has one row per OUTPUT bin, which scales with
-    # the input: no hint, the broadcast threshold decides.
-    dim = bins.select("rep", *BIN_KEYS).distinct()
+def _by_rep(j: DataFrame, keys: list, aggs: list, out: list, keep_rep: bool):
+    """One aggregation of the samples ``j`` per (rep, *keys), carrying
+    the bin key: rep is the bin's min(row_id), so it determines the key,
+    and any_value takes it from the row -> bin map the samples joined."""
     head = ["rep", *BIN_KEYS] if keep_rep else BIN_KEYS
-    return agg.join(dim, "rep").select(*head, *tail_cols)
+    carried = [F.any_value(k).alias(k) for k in BIN_KEYS]
+    return j.groupBy("rep", *keys).agg(*carried, *aggs).select(*head, *keys, *out)
 
 
 def average_weights(
@@ -217,19 +218,17 @@ def average_weights(
     SIGMA = sqrt(sum(w²σ²))/sum(w) — weighted RMS (A1a).
 
     The row -> bin map has one entry per MS row, so its join carries no
-    hint (see the module docstring)."""
-    j = weights.join(bins.select("row_id", "rep", "FLAG_ROW"), "row_id")
+    hint (see the module docstring). An averaged MS's samples carry
+    their bin key already; the map's wins."""
+    j = weights.drop(*BIN_KEYS).join(bins, "row_id")
     unfl = ~F.col("FLAG_ROW")
     w, s = F.col("WEIGHT"), F.col("SIGMA")
     sum_w = _fallback(F.sum(F.when(unfl, w)), F.sum(w))
     sum_w2s2 = _fallback(
         F.sum(F.when(unfl, w * w * s * s)), F.sum(w * w * s * s)
     )
-    agg = j.groupBy("rep", "corr").agg(
-        sum_w.alias("WEIGHT"),
-        (F.sqrt(sum_w2s2) / sum_w).alias("SIGMA"),
-    )
-    return _reattach(agg, bins, ["corr", "WEIGHT", "SIGMA"], keep_rep)
+    aggs = [sum_w.alias("WEIGHT"), (F.sqrt(sum_w2s2) / sum_w).alias("SIGMA")]
+    return _by_rep(j, ["corr"], aggs, ["WEIGHT", "SIGMA"], keep_rep)
 
 
 VIS_VALUES = ["vis_re", "vis_im", "flag", "weight_sp", "sigma_sp", "n_samples"]
@@ -313,44 +312,51 @@ def average_vis(
     (rep, chan_bin, corr). ``chan_bin_size`` is the channel divisor: an
     int for timechannel, ``F.col("chan_fac")`` for BDA's per-baseline
     ragged factor carried by its bin map."""
-    # The map's per-row payload: rep, plus chan_fac on a BDA map.
-    j = bin_samples(vis, bins.drop(*BIN_KEYS, "FLAG_ROW"), chan_bin_size)
-    keys = ["rep", "chan_bin", "corr"]
-    agg = j.groupBy(*keys).agg(*vis_partials()).select(*keys, *finalize())
-    return _reattach(agg, bins, ["chan_bin", "corr", *VIS_VALUES], keep_rep)
+    j = bin_samples(vis.drop(*BIN_KEYS), bins, chan_bin_size)
+    return _by_rep(j, ["chan_bin", "corr"], vis_partials(), finalize(), keep_rep)
+
+
+def _local(spark, ddl: str, rows: list) -> DataFrame:
+    """Driver-built ``rows`` (tuples) as an Arrow-backed local relation
+    of schema ``ddl``: it is broadcast and written with no Python
+    worker, unlike a frame built from a list."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def average_spw(
     spw_chans: DataFrame, spw_meta: DataFrame, chan_bin_size: int = 16
 ) -> tuple[DataFrame, DataFrame]:
-    """A3: SPW channel metadata averaging (ref averaging.py:357-406):
-    CHAN_FREQ mean per bin; CHAN_WIDTH/EFFECTIVE_BW/RESOLUTION summed;
-    NUM_CHAN = ceil(nchan / bin)."""
-    out_chans = (
-        spw_chans.withColumn(
-            "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
-        )
-        .groupBy("SPECTRAL_WINDOW_ID", "chan_bin")
-        .agg(
-            F.avg("CHAN_FREQ").alias("CHAN_FREQ"),
-            F.sum("CHAN_WIDTH").alias("CHAN_WIDTH"),
-            F.sum("EFFECTIVE_BW").alias("EFFECTIVE_BW"),
-            F.sum("RESOLUTION").alias("RESOLUTION"),
-        )
-        .withColumnRenamed("chan_bin", "chan")
-    )
-    out_meta = (
-        out_chans.groupBy("SPECTRAL_WINDOW_ID")
-        .agg(
-            F.count("*").cast("int").alias("NUM_CHAN"),
-            F.sum("CHAN_WIDTH").alias("TOTAL_BANDWIDTH"),
-        )
-        .join(
-            spw_meta.select("SPECTRAL_WINDOW_ID", "REF_FREQUENCY"),
-            "SPECTRAL_WINDOW_ID",
-        )
-    )
-    return out_chans, out_meta
+    """A3: SPW channel metadata averaging (ref averaging.py:357-406) on
+    the driver, over one collect of each table: CHAN_FREQ mean per
+    channel bin; CHAN_WIDTH/EFFECTIVE_BW/RESOLUTION summed;
+    NUM_CHAN = ceil(nchan / bin). Local relations out, one partition each."""
+    grouped = defaultdict(list)
+    for spw, chan, *vals in spw_chans.select(
+        "SPECTRAL_WINDOW_ID", "chan", "CHAN_FREQ", "CHAN_WIDTH", "EFFECTIVE_BW",
+        "RESOLUTION",
+    ).collect():
+        grouped[spw, chan // chan_bin_size].append(vals)
+    chans, widths = [], defaultdict(list)
+    for (spw, chan), vals in sorted(grouped.items()):
+        freq, *summed = zip(*vals)
+        chans.append((spw, chan, sum(freq) / len(freq), *map(sum, summed)))
+        widths[spw].append(chans[-1][3])
+    ref = dict(spw_meta.select("SPECTRAL_WINDOW_ID", "REF_FREQUENCY").collect())
+    meta = [(k, len(w), sum(w), ref[k]) for k, w in widths.items() if k in ref]
+    spark, spw = spw_chans.sparkSession, spw_chans.schema["SPECTRAL_WINDOW_ID"]
+    out_chans = _local(spark, f"{spw.simpleString()}, chan int, CHAN_FREQ double, "
+                       "CHAN_WIDTH double, EFFECTIVE_BW double, RESOLUTION double",
+                       chans)
+    out_meta = _local(spark, f"{spw.simpleString()}, NUM_CHAN int, "
+                      "TOTAL_BANDWIDTH double, REF_FREQUENCY double", meta)
+    return out_chans.coalesce(1), out_meta.coalesce(1)
 
 
 def average_binned(
@@ -403,18 +409,19 @@ def timechannel(
     reference's own output MS (check.py:22-76 workflow). ALL subtables
     not rewritten by the pipeline pass through unchanged, including ones
     this engine knows nothing about (ref subtables.py:9-37 copies
-    unknown subtables wholesale). ``vis_average`` as in average_binned."""
+    unknown subtables wholesale), but not a BDA output's ``spw`` and
+    ``ddid_map``: they describe its grids, not these. ``vis_average`` as
+    in average_binned."""
     binned = assign_time_bins(
         select_rows(tables["ms_rows"], fields, scans), time_bin_secs
     )
     out_chans, out_meta = average_spw(
         tables["spw_chans"], tables["spw_meta"], chan_bin_size
     )
-    rewritten = {"ms_rows", "ms_weights", "ms_vis", "spw_chans", "spw_meta"}
-    return {
+    out = {
         **average_binned(tables, binned, chan_bin_size, vis_average=vis_average),
         "spw_chans": out_chans,
         "spw_meta": out_meta,
-        # S10 passthrough: every other table (known or unknown) verbatim.
-        **{k: v for k, v in tables.items() if k not in rewritten},
     }
+    passed = {k: v for k, v in tables.items() if k not in {*out, "spw", "ddid_map"}}
+    return {**out, **passed}

@@ -254,6 +254,7 @@ GROUP BY SPECTRAL_WINDOW_ID, CAST(floor(chan / {CHAN_BIN}) AS INTEGER)
 """,
 )
 def ms_tc_spw_chans(spark, sf_dir):
+    """A3 SPW channel averaging, on the driver (averaging.py:357-406)."""
     t = _ms(spark)
     out_chans, _ = tc.average_spw(t["spw_chans"], t["spw_meta"], CHAN_BIN)
     return out_chans
@@ -279,6 +280,7 @@ GROUP BY oc.SPECTRAL_WINDOW_ID
 """,
 )
 def ms_tc_spw_meta(spark, sf_dir):
+    """A3 NUM_CHAN/TOTAL_BANDWIDTH of the averaged SPWs, on the driver."""
     t = _ms(spark)
     _, out_meta = tc.average_spw(t["spw_chans"], t["spw_meta"], CHAN_BIN)
     return out_meta

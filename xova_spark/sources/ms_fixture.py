@@ -45,7 +45,7 @@ import pyarrow.parquet as pq
 # The fixture is an MS in the input layout; ms_writer owns the format.
 from xova_spark.sources.ms_writer import load_ms  # noqa: F401
 
-DEFAULT_CACHE = "/root/repo/.cache/ms_fixture"
+DEFAULT_CACHE = os.path.abspath(os.path.join(__file__, "../../../.cache/ms_fixture"))
 
 # (nchan, ncorr) per DDID — reference testing_data.py:41-42,55.
 SPW_NCHAN = (16, 32)
