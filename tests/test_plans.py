@@ -172,7 +172,9 @@ def test_vis_joins_follow_broadcast_threshold(spark, ms, make_map):
 def test_sample_tables_join_only_the_bin_map(spark, ms, make_map):
     """Each averaged sample table is one join, samples to the row -> bin
     map, and one aggregation: the bin key rides through the aggregation
-    on ``rep`` instead of being joined back onto its result."""
+    on ``rep`` as ``min`` (one buffer slot per key, where ``any_value``,
+    planned as ``first(k, true)``, takes two) instead of being joined
+    back onto its result."""
     from xova_spark.operators import timechannel as tc
 
     bins, div = make_map(ms)
@@ -182,6 +184,29 @@ def test_sample_tables_join_only_the_bin_map(spark, ms, make_map):
         plan = P.executed_plan(q).split("== Initial Plan ==")[0]
         joins = re.findall(r"\b\w*(?:Join|CartesianProduct)\b", plan)
         assert len(joins) == 1, plan
+        assert not re.search(r"\b(?:any_value|first)\(", plan), plan
+
+
+def test_stream_drain_builds_ms_vis_without_a_join(spark, ms_dir, tmp_path,
+                                                   monkeypatch):
+    """The stream's partial store is keyed like average_vis's one
+    aggregation (rep, chan_bin, corr, the bin key carried), so after the
+    query drains, the ms_vis the stream writes is the store finalized in
+    place: its plan joins nothing (no rep -> bin key dim re-joined)."""
+    from xova_spark.app import Application
+
+    seen = {}
+    write = Application._write_output
+
+    def capture(self, out, tables):
+        seen["ms_vis"] = out["ms_vis"]
+        return write(self, out, tables)
+
+    monkeypatch.setattr(Application, "_write_output", capture)
+    Application(["stream", ms_dir, "-o", str(tmp_path / "streamed.ms"),
+                 "-t", "4", "-c", "8"], spark=spark).execute()
+    plan = P.executed_plan(seen["ms_vis"])
+    assert not re.findall(r"\b\w*(?:Join|CartesianProduct)\b", plan), plan
 
 
 def test_codegen_covers_hot_path(spark):

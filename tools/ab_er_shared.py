@@ -4,10 +4,11 @@ entries (what one gate pass costs); reports per-rep totals and the
 median. Run once on the old code and once on the new, same session
 discipline as the r9 streaming-floor measurement."""
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from xova_spark.session import get_spark  # noqa: E402
 from xova_spark.sharedframes import clear_shared  # noqa: E402

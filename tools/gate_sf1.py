@@ -17,7 +17,7 @@ commit GATE_SF1.md. All sampled entries must be EXACT. Rotate
 record the round in the log header.
 
 Usage: python tools/gate_sf1.py [sf1_dir] [name ...]
-       (defaults: /root/repo/.cache/sf1 and the pinned SF1_SAMPLE)
+       (defaults: <checkout>/.cache/sf1 and the pinned SF1_SAMPLE)
 """
 
 from __future__ import annotations

@@ -7,9 +7,10 @@ sentence), grouped by pack module. Regenerate after adding entries:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def first_sentence(doc: str | None) -> str:

@@ -1,4 +1,4 @@
-"""Generate the bench-only sf1 tier (10x sf0.1) at /root/repo/.cache/sf1.
+"""Generate the bench-only sf1 tier (10x sf0.1) at <checkout>/.cache/sf1.
 
 The driver ships sf{0.001,0.01,0.1}; the 10x-scaling artifact
 (BENCH_sf1.json, VERDICT r4 item 5) needs one tier up. This builds it by
@@ -29,10 +29,11 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SRC = "/root/testdata/sf0.1"
-OUT = "/root/repo/.cache/sf1"
+OUT = os.path.join(ROOT, ".cache", "sf1")
 REPLICAS = 10
 
 

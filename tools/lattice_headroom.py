@@ -45,10 +45,11 @@ from __future__ import annotations
 
 import inspect
 import math
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 MARKER = re.compile(
     r"1_000_000|1000000|\* *1e6|permille|_micro|micro_|_ppm|milli|nats"

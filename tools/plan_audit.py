@@ -60,9 +60,11 @@ entries, which is why a late-landing entry once shipped unchecked):
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 PATTERNS = (
     "Expand",
@@ -142,7 +144,7 @@ def _select_entries(qs: dict, args) -> dict:
             ["git", "diff", "--name-only", ref, "--", "."],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=ROOT,
             check=True,
         ).stdout.split()
         if any(
@@ -150,7 +152,7 @@ def _select_entries(qs: dict, args) -> dict:
         ):
             print(f"--since {ref}: shared module changed -> full sweep")
             return qs
-        changed_abs = {os.path.join("/root/repo", c) for c in changed}
+        changed_abs = {os.path.join(ROOT, c) for c in changed}
         sel = {}
         for n, f in qs.items():
             try:

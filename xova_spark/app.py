@@ -441,7 +441,6 @@ class Application:
         while only some of them have streamed in."""
         args = self.args
         spark = self._session()
-        from xova_spark.operators import timechannel as tc
         from xova_spark.streaming.average import parquet_stream
         from xova_spark.streaming.materialize import (
             finalize_vis,
@@ -457,17 +456,12 @@ class Application:
         )
 
         def drain(bins, chan_div):
-            # ``bins`` is the operator's held map; the result has
-            # average_vis(..., keep_rep=True)'s columns and order.
+            # ``bins`` is the operator's held map; the stored partials
+            # are keyed like average_vis's, so they finalize in place.
             materialized_ms_vis(
                 stream, bins, part_dir, checkpoint, chan_div
             ).awaitTermination()
-            dim = bins.select("rep", *tc.BIN_KEYS).distinct()
-            return (
-                finalize_vis(spark, part_dir)
-                .join(dim, tc.BIN_KEYS)
-                .select("rep", *tc.BIN_KEYS, "chan_bin", "corr", *tc.VIS_VALUES)
-            )
+            return finalize_vis(spark, part_dir, keep_rep=True)
 
         # Only the visibility samples ARRIVE; the row table is static, so
         # every other output table is the batch operator's.

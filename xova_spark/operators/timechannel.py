@@ -32,8 +32,9 @@ share that hash partitioning (HashPartitioning on a key subset satisfies
 the grouped distribution, so Catalyst inserts no second exchange). The
 vis and weights aggregations each join their samples table to the
 (row_id -> bin) map, then aggregate in a single shuffle keyed on the
-bin's ``rep`` surrogate, carrying the bin key through it: one join and
-one aggregation per table. The row-scale joins carry no hint:
+bin's ``rep`` surrogate, carrying the bin key through it as ``min``: one
+join and one aggregation per table, the stream's merged per-trigger
+partials (``bin_partials``) included. The row-scale joins carry no hint:
 the session's ``spark.sql.autoBroadcastJoinThreshold`` broadcasts the map
 when it is small (on a held map it sees the measured size) and AQE
 shuffle-joins it otherwise. Skewed baselines are handled by AQE
@@ -202,13 +203,11 @@ def hold(df: DataFrame) -> DataFrame:
     return df
 
 
-def _by_rep(j: DataFrame, keys: list, aggs: list, out: list, keep_rep: bool):
+def _by_rep(j: DataFrame, keys: list, aggs: list) -> DataFrame:
     """One aggregation of the samples ``j`` per (rep, *keys), carrying
     the bin key: rep is the bin's min(row_id), so it determines the key,
-    and any_value takes it from the row -> bin map the samples joined."""
-    head = ["rep", *BIN_KEYS] if keep_rep else BIN_KEYS
-    carried = [F.any_value(k).alias(k) for k in BIN_KEYS]
-    return j.groupBy("rep", *keys).agg(*carried, *aggs).select(*head, *keys, *out)
+    and min takes it (one buffer slot per key) from the group's rows."""
+    return j.groupBy("rep", *keys).agg(*[F.min(k).alias(k) for k in BIN_KEYS], *aggs)
 
 
 def average_weights(
@@ -228,10 +227,8 @@ def average_weights(
         F.sum(F.when(unfl, w * w * s * s)), F.sum(w * w * s * s)
     )
     aggs = [sum_w.alias("WEIGHT"), (F.sqrt(sum_w2s2) / sum_w).alias("SIGMA")]
-    return _by_rep(j, ["corr"], aggs, ["WEIGHT", "SIGMA"], keep_rep)
-
-
-VIS_VALUES = ["vis_re", "vis_im", "flag", "weight_sp", "sigma_sp", "n_samples"]
+    head = ["rep", *BIN_KEYS] if keep_rep else BIN_KEYS
+    return _by_rep(j, ["corr"], aggs).select(*head, "corr", "WEIGHT", "SIGMA")
 
 
 def _partials() -> dict:
@@ -256,24 +253,12 @@ def _partials() -> dict:
 def vis_partials() -> list:
     """The A1a visibility aggregation as 11 decomposable sums over raw
     samples: counts and weighted sums over the unflagged samples
-    (``_u``) and over all samples (``_a``), plus the all-flagged flag.
-    Partials of disjoint sample sets merge with ``merge_partials``, so
-    a batch aggregation and an incrementally merged one feed the same
-    ``finalize``."""
+    (``_u``) and over all samples (``_a``), plus the all-flagged flag."""
     return [e.alias(c) for c, e in _partials().items()]
 
 
-def merge_partials() -> list:
-    """The vis_partials of disjoint sample sets merged into those of
-    their union: counts and sums add, flag_all is AND."""
-    return [
-        (F.bool_and if c == "flag_all" else F.sum)(c).alias(c)
-        for c in _partials()
-    ]
-
-
 def finalize() -> list:
-    """The VIS_VALUES columns from vis_partials' sums: the
+    """The averaged visibility columns from vis_partials' sums: the
     WEIGHT_SPECTRUM-weighted mean over unflagged samples, falling back
     to all samples when the bin is fully flagged (averaging.py:251-255);
     weight = sum of weights, sigma = sqrt(sum(w²σ²))/sum(w)."""
@@ -293,14 +278,29 @@ def finalize() -> list:
     ]
 
 
-def bin_samples(
+def bin_partials(
     vis: DataFrame, bins: DataFrame, chan_bin_size: int | Column
 ) -> DataFrame:
-    """Visibility samples joined to their row's bin-map columns, with
-    chan_bin = floor(chan / ``chan_bin_size``)."""
-    return vis.join(bins, "row_id").withColumn(
+    """vis_partials per (rep, chan_bin, corr), the bin key carried, of
+    the samples joined to their row's bin map; chan_bin = floor(chan /
+    ``chan_bin_size``). Each stream trigger stores them; batch finalizes them."""
+    j = vis.drop(*BIN_KEYS).join(bins, "row_id").withColumn(
         "chan_bin", F.floor(F.col("chan") / F.lit(chan_bin_size)).cast("int")
     )
+    return _by_rep(j, ["chan_bin", "corr"], vis_partials())
+
+
+def merge_bin_partials(parts: DataFrame) -> DataFrame:
+    """Unioned bin_partials merged: counts and sums add, flag_all is AND."""
+    merged = [(F.bool_and if c == "flag_all" else F.sum)(c).alias(c)
+              for c in _partials()]
+    return _by_rep(parts, ["chan_bin", "corr"], merged)
+
+
+def finalize_partials(parts: DataFrame, keep_rep: bool = False) -> DataFrame:
+    """bin_partials ``parts`` averaged, keyed as average_vis keys them."""
+    head = ["rep", *BIN_KEYS] if keep_rep else BIN_KEYS
+    return parts.select(*head, "chan_bin", "corr", *finalize())
 
 
 def average_vis(
@@ -308,12 +308,11 @@ def average_vis(
     keep_rep: bool = False,
 ) -> DataFrame:
     """Visibility averaging per (bin, chan_bin, corr): finalize over
-    vis_partials (A1/A1a). One shuffle of the big table, keyed on
+    bin_partials (A1/A1a). One shuffle of the big table, keyed on
     (rep, chan_bin, corr). ``chan_bin_size`` is the channel divisor: an
     int for timechannel, ``F.col("chan_fac")`` for BDA's per-baseline
     ragged factor carried by its bin map."""
-    j = bin_samples(vis.drop(*BIN_KEYS), bins, chan_bin_size)
-    return _by_rep(j, ["chan_bin", "corr"], vis_partials(), finalize(), keep_rep)
+    return finalize_partials(bin_partials(vis, bins, chan_bin_size), keep_rep)
 
 
 def _local(spark, ddl: str, rows: list) -> DataFrame:
@@ -371,7 +370,7 @@ def average_binned(
     load_ms contract (row_id = the bin's rep, chan = the channel bin).
     ``payload``/``constants`` are the pipeline's extra rep-map and row
     columns. ``vis_average(bins, chan_div)`` returns the visibility table
-    re-attached to its bin keys; the default is ``average_vis``."""
+    keyed like ``average_vis(..., keep_rep=True)``, the default."""
     bins = hold(rep_map(binned, payload))
     if vis_average is None:
         def vis_average(bins, chan_div):

@@ -14,6 +14,7 @@ incremental state, window assignment — under the value-hash gate.
 from __future__ import annotations
 
 import itertools
+import os
 
 from pyspark.sql import functions as F
 
@@ -23,6 +24,8 @@ from xova_spark.streaming import average as SA
 REGISTRY: dict[str, tuple] = {}
 
 _DIR = ms_fixture_dir()
+# The file-source staging directories, under this checkout's .cache/.
+_CACHE = os.path.abspath(os.path.join(__file__, "../../../.cache"))
 _BIN = 4.0
 _GAP = 4.0
 _uniq = itertools.count()
@@ -75,11 +78,9 @@ def stream_tc_rows(spark, sf_dir):
 def _events_stream(spark, sf_dir: str):
     """File-source stream over the harness events table (symlinked into
     a one-table directory, as the file source requires)."""
-    import os
-
     src = os.path.join(sf_dir, "events.parquet")
     tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = os.path.join("/root/repo/.cache/stream_events", tag)
+    stream_dir = os.path.join(_CACHE, "stream_events", tag)
     os.makedirs(stream_dir, exist_ok=True)
     link = os.path.join(stream_dir, "part-0.parquet")
     if not os.path.exists(link):
@@ -288,11 +289,9 @@ _patch_stream_bda_oracle()
 def _documents_stream(spark, sf_dir: str):
     """File-source stream over the documents table (same symlink-dir
     staging as _events_stream — the file source needs a directory)."""
-    import os
-
     src = os.path.join(sf_dir, "documents.parquet")
     tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = os.path.join("/root/repo/.cache/stream_documents", tag)
+    stream_dir = os.path.join(_CACHE, "stream_documents", tag)
     os.makedirs(stream_dir, exist_ok=True)
     link = os.path.join(stream_dir, "part-0.parquet")
     if not os.path.exists(link):
@@ -357,11 +356,9 @@ def stream_corpus_audit(spark, sf_dir):
 def _embeddings_stream(spark, sf_dir: str):
     """File-source stream over the embeddings table (same symlink-dir
     staging as _events_stream)."""
-    import os
-
     src = os.path.join(sf_dir, "embeddings.parquet")
     tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = os.path.join("/root/repo/.cache/stream_embeddings", tag)
+    stream_dir = os.path.join(_CACHE, "stream_embeddings", tag)
     os.makedirs(stream_dir, exist_ok=True)
     link = os.path.join(stream_dir, "part-0.parquet")
     if not os.path.exists(link):
@@ -763,8 +760,10 @@ def stream_cdc_merge(spark, sf_dir):
 
     At scale this is the upsert-view pattern: the per-batch compact is
     one partial-agg shuffle of the BATCH (not the history), the merge
-    joins state on the same key, and the stage-then-swap write becomes
-    a transactional MERGE on a table format with commits."""
+    re-aggregates the state unioned with it on the same key, and the
+    stage-then-swap write (it records the merged batch id, so a batch
+    replayed after a kill merges once) becomes a transactional MERGE on
+    a table format with commits."""
     import shutil
     import tempfile
 
@@ -903,7 +902,6 @@ def stream_expectations_monitor(spark, sf_dir):
     the batch suite no matter how the stream was chunked. This is the
     always-on gate a pipeline alerts from, vs the pre-/post-transform
     batch check (`xova-spark-extras dq --strict`)."""
-    import os
     import shutil
     import tempfile
 
@@ -1211,11 +1209,9 @@ def stream_neardup_ingest(spark, sf_dir):
 def _customers_stream(spark, sf_dir: str):
     """File-source stream over the harness customer table (symlink into
     a one-table dir, same shape as _events_stream)."""
-    import os
-
     src = os.path.join(sf_dir, "customer.parquet")
     tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = os.path.join("/root/repo/.cache/stream_customer", tag)
+    stream_dir = os.path.join(_CACHE, "stream_customer", tag)
     os.makedirs(stream_dir, exist_ok=True)
     link = os.path.join(stream_dir, "part-0.parquet")
     if not os.path.exists(link):
@@ -1435,7 +1431,8 @@ def stream_join_view_maintenance(spark, sf_dir):
     re-scans the dim for), reduces to per-segment (count, cents)
     partials, and merges ADDITIVELY into the parquet-backed view via
     the shared stage-then-swap materializer (streaming/materialize.py
-    — the same foreachBatch upsert stream_cdc_merge uses). Count+sum
+    — the same foreachBatch upsert stream_cdc_merge uses, under which a
+    batch replayed after a kill merges once). Count+sum
     are associative/commutative, so the converged availableNow state
     equals the batch join-aggregate no matter how ingestion was
     chunked; the DuckDB oracle computes that batch view directly.
@@ -1443,9 +1440,8 @@ def stream_join_view_maintenance(spark, sf_dir):
     At 100 TB this is the canonical streaming-lakehouse rollup: batch
     work is proportional to the CHANGES (one partial-agg of the batch
     + a group-grain merge), never the accumulated history, and the
-    stage-then-swap becomes a transactional MERGE on a real table
-    format."""
-    import os
+    stage-then-swap with its batch-id record becomes a transactional
+    MERGE on a real table format."""
     import shutil
     import tempfile
 
@@ -1466,7 +1462,7 @@ def stream_join_view_maintenance(spark, sf_dir):
 
     src = os.path.join(sf_dir, "orders.parquet")
     tag = os.path.basename(sf_dir.rstrip("/"))
-    stream_dir = os.path.join("/root/repo/.cache/stream_orders", tag)
+    stream_dir = os.path.join(_CACHE, "stream_orders", tag)
     os.makedirs(stream_dir, exist_ok=True)
     link = os.path.join(stream_dir, "part-0.parquet")
     if not os.path.exists(link):

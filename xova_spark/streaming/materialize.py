@@ -8,6 +8,11 @@ the stored table always holds the rollup of everything consumed so far,
 and merging partials is valid because the aggregates carried are
 decomposable (count/sum pairs; averages derive at read time).
 
+The merge is replay-safe: the stored table records the id of the last
+batch it holds, so a batch Spark replays after a kill (merged, but not
+yet committed to the checkpoint) is a no-op, and a swap the kill cut
+short is completed or undone before the next merge.
+
 At real scale the overwrite becomes a transactional MERGE into a table
 format with commit semantics (Delta/Iceberg); the plan shape — batch
 partial agg, key-join merge, atomic swap — is identical.
@@ -22,37 +27,46 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xova_spark.operators.timechannel import (
-    BIN_KEYS,
-    bin_samples,
-    finalize,
-    merge_partials,
-    vis_partials,
+    bin_partials,
+    finalize_partials,
+    merge_bin_partials,
 )
 
 
-def _upsert(partial: DataFrame, out_dir: str, keys: list[str], merge_aggs: list):
+def _upsert(partial: DataFrame, out_dir: str, batch_id: int, merge):
     """Read-merge-overwrite of the stored state ``<out_dir>/current``:
-    union one micro-batch's partials with it, re-aggregate per key with
-    ``merge_aggs``, then stage-then-swap the result in, so a reader
-    never sees a half-written table."""
-    cur = os.path.join(out_dir, "current")
+    ``merge`` re-aggregates it unioned with micro-batch ``batch_id``'s
+    partials, then the result is staged and swapped in, so a reader never
+    sees a half-written table. The staged table records ``batch_id`` in
+    ``_batch_id`` (parquet readers skip ``_`` files): the replay of a
+    batch the state already holds is a no-op. On entry, a swap a kill
+    cut short is undone (``_old`` is the state) or finished."""
+    cur, old, tmp = (os.path.join(out_dir, d) for d in ("current", "_old", "_staged"))
+    if os.path.exists(old):
+        if os.path.exists(cur):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, cur)
+    mark = os.path.join(cur, "_batch_id")
+    if os.path.exists(mark):
+        with open(mark) as fh:
+            if int(fh.read()) == batch_id:
+                return
     if os.path.exists(cur):
         # The merged state has the partials' columns, order and types,
         # so it is read with their schema: no inference job per trigger.
-        partial = (
+        partial = merge(
             partial.sparkSession.read.schema(partial.schema).parquet(cur)
             .unionByName(partial)
-            .groupBy(*keys)
-            .agg(*merge_aggs)
         )
-    tmp = os.path.join(out_dir, "_staged")
     partial.write.mode("overwrite").parquet(tmp)
-    swap = os.path.join(out_dir, "_old")
+    with open(os.path.join(tmp, "_batch_id"), "w") as fh:
+        fh.write(str(batch_id))
     if os.path.exists(cur):
-        os.rename(cur, swap)
+        os.rename(cur, old)
     os.rename(tmp, cur)
-    if os.path.exists(swap):
-        shutil.rmtree(swap)
+    if os.path.exists(old):
+        shutil.rmtree(old)
 
 
 def _start(stream_df: DataFrame, merge, checkpoint: str):
@@ -67,13 +81,15 @@ def _start(stream_df: DataFrame, merge, checkpoint: str):
 
 
 def _merge_into(batch_df: DataFrame, batch_id: int, out_dir: str, keys: list[str]):
+    def merge(state: DataFrame) -> DataFrame:
+        return state.groupBy(*keys).agg(
+            F.sum("n").alias("n"), F.sum("total").alias("total")
+        )
+
     partial = batch_df.groupBy(*keys).agg(
         F.count("*").alias("n"), F.sum("value").alias("total")
     )
-    _upsert(
-        partial, out_dir, keys,
-        [F.sum("n").alias("n"), F.sum("total").alias("total")],
-    )
+    _upsert(partial, out_dir, batch_id, merge)
 
 
 def materialized_rollup(
@@ -92,25 +108,14 @@ def read_rollup(spark, out_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming MS maintenance: the averaging pipeline as a continuously
 # materialized output MS. Each micro-batch of visibility samples merges
-# the DECOMPOSABLE A1a partials (operators/timechannel.vis_partials,
-# merged by merge_partials: counts and sums add, flag is AND) into the
-# stored table; the averaged columns derive at read time through the
-# same finalize the batch average_vis uses. This is the reference's write path
+# its bin_partials — the DECOMPOSABLE A1a sums per (rep, chan_bin, corr)
+# with the bin key carried, the very aggregation the batch average_vis
+# finalizes — into the stored table through merge_bin_partials (counts
+# and sums add, flag is AND); the averaged columns derive at read time
+# through the same finalize. This is the reference's write path
 # (app.py:107-116) turned into incremental maintenance the batch engine
 # cannot express. Both pipelines share it: a BDA bin map and
 # ``F.col("chan_fac")`` as the channel divisor give the ragged bins.
-
-_VIS_KEYS = [*BIN_KEYS, "chan_bin", "corr"]
-
-
-def _merge_vis_into(batch_df: DataFrame, batch_id: int, out_dir: str,
-                    bins: DataFrame, chan_bin_size):
-    # Per-(bin, chan_bin, corr) vis_partials of one micro-batch.
-    partial = (
-        bin_samples(batch_df, bins, chan_bin_size)
-        .groupBy(*_VIS_KEYS).agg(*vis_partials())
-    )
-    _upsert(partial, out_dir, _VIS_KEYS, merge_partials())
 
 
 def materialized_ms_vis(
@@ -126,16 +131,20 @@ def materialized_ms_vis(
     (an int, or ``F.col("chan_fac")`` with a BDA map)."""
     return _start(
         vis_stream,
-        lambda df, bid: _merge_vis_into(df, bid, out_dir, bins, chan_bin_size),
+        lambda df, bid: _upsert(
+            bin_partials(df, bins, chan_bin_size), out_dir, bid, merge_bin_partials
+        ),
         checkpoint,
     )
 
 
-def finalize_vis(spark, out_dir: str) -> DataFrame:
-    """The A1a averaged columns from the stored partials: _VIS_KEYS plus
-    the batch average_vis value columns, through the same finalize."""
+def finalize_vis(spark, out_dir: str, keep_rep: bool = False) -> DataFrame:
+    """The A1a averaged columns from the stored partials, as the batch
+    average_vis returns them: the bin key (led by ``rep`` if
+    ``keep_rep``), chan_bin, corr and the values, through the same
+    finalize."""
     p = spark.read.parquet(os.path.join(out_dir, "current"))
-    return p.select(*_VIS_KEYS, *finalize())
+    return finalize_partials(p, keep_rep)
 
 
 # ---------------------------------------------------------------------------
@@ -163,15 +172,16 @@ def _cdc_compact_batch(batch_df: DataFrame) -> DataFrame:
 
 def _cdc_merge_into(batch_df: DataFrame, batch_id: int, out_dir: str):
     ordk = F.struct(F.col("last_ts_us"), F.col("last_event_id"))
-    _upsert(
-        _cdc_compact_batch(batch_df), out_dir, _CDC_KEYS,
-        [
+
+    def merge(state: DataFrame) -> DataFrame:
+        return state.groupBy(*_CDC_KEYS).agg(
             F.max_by("last_event_id", ordk).alias("last_event_id"),
             F.max_by("last_value", ordk).alias("last_value"),
             F.max("last_ts_us").alias("last_ts_us"),
             F.sum("n_versions").alias("n_versions"),
-        ],
-    )
+        )
+
+    _upsert(_cdc_compact_batch(batch_df), out_dir, batch_id, merge)
 
 
 def materialized_cdc_state(stream_df: DataFrame, out_dir: str, checkpoint: str):
