@@ -20,6 +20,7 @@ from xova_spark.app import (
     parse_scans,
 )
 from xova_spark.extras import run as run_extras
+from xova_spark.sources.ms_writer import OLD_SUFFIX
 from xova_spark.sources.ms_fixture import load_ms
 
 
@@ -154,13 +155,34 @@ def test_app_bda(spark, ms_dir, tmp_path):
 
 
 def test_app_column_rename(spark, ms_dir, tmp_path):
-    out = _run(
-        spark, ms_dir, tmp_path,
-        ["timechannel", ms_dir, "-t", "4", "-dc", "CORRECTED_DATA:DATA"],
-    )
-    back = load_ms(spark, out)
-    assert "DATA_re" in back["ms_vis"].columns
-    assert "vis_re" not in back["ms_vis"].columns
+    """-dc SRC:DST averages SRC and writes it as DST: DATA:CORRECTED_DATA
+    writes CORRECTED_DATA_re/_im, and CORRECTED_DATA:DATA over that
+    output averages them into vis_re/vis_im — the same MS as a plain
+    second run over a plain first output."""
+    params = ["-t", "4", "-c", "8"]
+    corrected, plain = str(tmp_path / "corrected.ms"), str(tmp_path / "plain.ms")
+    Application(["timechannel", ms_dir, *params, "-o", corrected,
+                 "-dc", "DATA:CORRECTED_DATA"], spark=spark).execute()
+    cols = load_ms(spark, corrected)["ms_vis"].columns
+    assert {"CORRECTED_DATA_re", "CORRECTED_DATA_im"} <= set(cols)
+    assert "vis_re" not in cols
+    Application(["timechannel", ms_dir, *params, "-o", plain], spark=spark).execute()
+    again = ["-t", "16", "-c", "2"]
+    got = Application(["timechannel", corrected, *again, "-o", str(tmp_path / "got.ms"),
+                       "-dc", "CORRECTED_DATA:DATA"], spark=spark).execute()
+    want = Application(["timechannel", plain, *again, "-o", str(tmp_path / "want.ms")],
+                       spark=spark).execute()
+    _assert_same_ms(spark, got, want)
+
+
+def test_app_missing_source_column_fails_before_writing(spark, ms_dir, tmp_path):
+    """-dc naming a column the input lacks fails, naming it, before any
+    table is written — not an average of DATA under another name."""
+    out = tmp_path / "out.ms"
+    with pytest.raises(ValueError, match="CORRECTED_DATA"):
+        Application(["timechannel", ms_dir, "-t", "4", "-o", str(out),
+                     "-dc", "CORRECTED_DATA:DATA"], spark=spark).execute()
+    assert not out.exists()
 
 
 def test_app_check_passes(spark, ms_dir, capsys):
@@ -347,11 +369,11 @@ def test_app_stream_replayed_batch_merges_once(spark, ms_dir, tmp_path):
 
 def test_app_stream_resumes_a_swap_cut_short(spark, ms_dir, tmp_path):
     """A stream killed between the partial store's two renames leaves
-    the earlier batches' state in ``_old``, no ``current``, and the
-    batch uncommitted. The resume must restore that state and merge the
-    replayed batch into it, not keep the replayed batch alone. Emulated
-    with the second of two arrival files added after a first run: the
-    state before it becomes ``_old``."""
+    the earlier batches' state parked at ``current`` + OLD_SUFFIX, no
+    ``current``, and the batch uncommitted. The resume must restore
+    that state and merge the replayed batch into it, not keep the
+    replayed batch alone. Emulated with the second of two arrival files
+    added after a first run: the state before it is the parked one."""
     import shutil
 
     out, params = str(tmp_path / "streamed.ms"), ["-t", "4", "-c", "8"]
@@ -366,7 +388,7 @@ def test_app_stream_resumes_a_swap_cut_short(spark, ms_dir, tmp_path):
     Application(cmd, spark=spark).execute()
     _uncommit_last_batch(out + ".ckpt")
     shutil.rmtree(os.path.join(state, "current"))
-    shutil.move(str(tmp_path / "before"), os.path.join(state, "_old"))
+    shutil.move(str(tmp_path / "before"), os.path.join(state, "current" + OLD_SUFFIX))
     Application(cmd, spark=spark).execute()
     batch = Application(
         ["timechannel", ms_dir, "-o", str(tmp_path / "batch.ms"), *params],
@@ -464,8 +486,10 @@ def _last_job_id(sc) -> int:
 # Before each sample table was one aggregation and the SPW tables were
 # driver code, they were timechannel 29, bda 39, stream 30, stream_bda 39.
 # Before the stream stored its partials keyed like the batch aggregation
-# (so its drain re-joined the bin key), stream was 27.
-JOB_BUDGET = {"timechannel": 24, "bda": 35, "stream": 26, "stream_bda": 37}
+# (so its drain re-joined the bin key), stream was 27. Before the store
+# reopened from its manifest (the drain inferred its schema with a job),
+# stream was 26 and stream_bda 37.
+JOB_BUDGET = {"timechannel": 24, "bda": 35, "stream": 25, "stream_bda": 36}
 
 
 @pytest.mark.parametrize("command", sorted(JOB_BUDGET))
@@ -562,6 +586,23 @@ def test_app_output_reopens_checks_and_reaverages(
     # re-averaging the averaged output runs end-to-end and shrinks rows
     assert 0 < again["ms_rows"].count() < back["ms_rows"].count()
     assert again["ms_vis"].count() > 0
+
+
+def test_app_stream_reaverages_an_output(spark, ms_dir, tmp_path):
+    """``stream`` over a written MS reads that MS's ``ms_vis`` table by
+    default (a directory there, not ``ms_vis.parquet``) and writes what
+    ``timechannel`` writes over it."""
+    once = str(tmp_path / "once.ms")
+    Application(["timechannel", ms_dir, "-t", "4", "-c", "4", "-o", once],
+                spark=spark).execute()
+    params = ["-t", "8", "-c", "2"]
+    streamed = Application(
+        ["stream", once, *params, "-o", str(tmp_path / "streamed.ms")], spark=spark
+    ).execute()
+    batch = Application(
+        ["timechannel", once, *params, "-o", str(tmp_path / "batch.ms")], spark=spark
+    ).execute()
+    _assert_same_ms(spark, streamed, batch)
 
 
 def test_app_bda_over_bda_output_writes_its_own_spw(spark, ms_dir, tmp_path):

@@ -9,7 +9,23 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from xova_spark.streaming.materialize import materialized_rollup, read_rollup
+from xova_spark.streaming.materialize import (
+    _upsert,
+    materialized_rollup,
+    read_rollup,
+)
+
+
+def _jobs_of(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"materialize-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
@@ -50,9 +66,10 @@ def test_rollup_converges_to_batch(spark, split_events, tmp_path):
     )
     q.awaitTermination()
     assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
+    state, jobs = _jobs_of(spark, lambda: read_rollup(spark, out_dir))
+    assert jobs == 0  # reopened from the store's manifest
     got = (
-        read_rollup(spark, out_dir)
-        .select("event_type", "n", F.round("total", 4).alias("total"))
+        state.select("event_type", "n", F.round("total", 4).alias("total"))
         .toPandas()
         .set_index("event_type")
         .sort_index()
@@ -67,6 +84,22 @@ def test_rollup_converges_to_batch(spark, split_events, tmp_path):
     assert (got["n"] == want["n"]).all()
     assert (abs(got["total"] - want["total"]) < 1e-6).all()
     assert got["n"].sum() == n
+
+
+@pytest.mark.parametrize("step", ["read", "merge"])
+def test_store_of_an_older_layout_fails_loudly(spark, tmp_path, step):
+    """A store without the manifest (bare parquet files and a
+    ``_batch_id``) raises, naming it, on read and on merge: taken as
+    empty, the next merge would replace its state with one batch."""
+    cur = tmp_path / "state" / "current"
+    spark.range(3).write.parquet(str(cur))
+    (cur / "_batch_id").write_text("0")
+    out_dir = str(tmp_path / "state")
+    with pytest.raises(RuntimeError, match=str(cur)):
+        if step == "read":
+            read_rollup(spark, out_dir)
+        else:
+            _upsert(spark.range(1), out_dir, 1, lambda state: state)
 
 
 @pytest.fixture(scope="module")
@@ -113,7 +146,9 @@ def test_ms_maintenance_converges_to_batch_average(
     q.awaitTermination()
     assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
 
-    got = finalize_vis(spark, out_dir).toPandas()
+    got, jobs = _jobs_of(spark, lambda: finalize_vis(spark, out_dir))
+    assert jobs == 0  # reopened from the store's manifest
+    got = got.toPandas()
     want = tc.average_vis(vis, bins, chan_bin).toPandas()
     keys = ["FIELD_ID", "DATA_DESC_ID", "SCAN_NUMBER", "ANTENNA1", "ANTENNA2",
             "time_bin", "chan_bin", "corr"]

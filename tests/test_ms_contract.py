@@ -12,13 +12,20 @@ from __future__ import annotations
 
 import glob
 import os
+import pathlib
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from xova_spark.app import Application
-from xova_spark.sources.ms_writer import MANIFEST, load_ms, write_ms
+from xova_spark.sources.ms_writer import (
+    MANIFEST,
+    OLD_SUFFIX,
+    OutputExistsError,
+    load_ms,
+    write_ms,
+)
 
 
 def _boom(spark):
@@ -68,6 +75,39 @@ def test_killed_run_staging_dir_is_ignored(spark, ms, tmp_path):
     assert set(back) == {"field"}
     assert _rows(back["field"]) == _rows(ms["field"])
     assert os.path.isdir(os.path.join(dead, "ms_rows"))
+
+
+def test_killed_force_write_is_recovered(spark, ms, tmp_path):
+    """A force write killed between its two renames leaves the old MS
+    parked at ``<out>`` + OLD_SUFFIX and no ``<out>``. The next write
+    puts it back first: without force it refuses, the old MS loads
+    unchanged, and nothing is left beside it."""
+    out = str(tmp_path / "killed.ms")
+    write_ms({"field": ms["field"]}, out)
+    before = {k: _rows(v) for k, v in load_ms(spark, out).items()}
+    os.rename(out, out + OLD_SUFFIX)
+    with pytest.raises(OutputExistsError):
+        write_ms({"antenna": ms["antenna"]}, out)
+    assert {k: _rows(v) for k, v in load_ms(spark, out).items()} == before
+    assert _leftovers(out) == []
+
+
+def _tree_bytes(path):
+    files = (f for f in glob.glob(f"{path}/**", recursive=True) if os.path.isfile(f))
+    return {os.path.relpath(f, path): pathlib.Path(f).read_bytes() for f in files}
+
+
+def test_force_write_keeps_users_old_dirs(spark, ms, tmp_path):
+    """A user's ``<out>.old`` and ``<out>.old-backup`` are not the
+    commit's parked MS: a force write leaves them byte for byte."""
+    out = str(tmp_path / "out.ms")
+    write_ms({"field": ms["field"]}, out)
+    users = [out + ".old", out + ".old-backup"]
+    for d in users:
+        write_ms({"antenna": ms["antenna"]}, d)
+    before = [_tree_bytes(d) for d in users]
+    write_ms({"field": ms["field"]}, out, force=True)
+    assert [_tree_bytes(d) for d in users] == before
 
 
 @pytest.fixture(scope="module")

@@ -160,6 +160,10 @@ def test_casa_bridge_parity_with_parquet_path(spark, ms_dir, tmp_path):
     r = _sorted_pdf(ref["ms_weights"].join(keep, "row_id"), ["row_id", "corr"])
     pd.testing.assert_frame_equal(g, r, check_dtype=False)
 
+    # -dc SRC the table lacks: raised on the driver, naming it.
+    with pytest.raises(ValueError, match="CORRECTED_DATA"):
+        casa_ms.load_ms_auto(spark, twin, data_column="CORRECTED_DATA")
+
 
 def test_casa_bridge_weight_broadcast_without_spectrum(spark, ms_dir, tmp_path):
     """MS v2 convention: absent WEIGHT_SPECTRUM / SIGMA_SPECTRUM, the

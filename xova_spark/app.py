@@ -137,7 +137,7 @@ def create_parser() -> argparse.ArgumentParser:
     st.add_argument("ms", help="Input MS directory (static row/subtables)")
     st.add_argument("--vis-dir", default=None,
                     help="directory of arriving ms_vis parquet files "
-                         "(default: <ms>/ms_vis.parquet)")
+                         "(default: the ms_vis table of <ms>)")
     for p in (tc, bda, st):
         p.add_argument("-o", "--output", default=None)
         p.add_argument("--force", action="store_true", default=False)
@@ -193,16 +193,16 @@ def parse_args(cmdline: list[str]) -> argparse.Namespace:
         if args.command in ("timechannel", "bda"):
             args.data_column = parse_data_column_map(args.data_column)
             # This engine averages ONE visibility column into one output
-            # name; a map with multiple distinct targets (e.g. 'DATA
-            # CORRECTED_DATA:CDATA') would silently rename only once —
+            # name; a map of several pairs (e.g. 'DATA
+            # CORRECTED_DATA:CDATA') would silently average only one —
             # reject it up front with a clear message instead.
-            targets = set(args.data_column.values())
-            if len(targets) > 1:
+            if len(args.data_column) > 1:
                 parser.error(
-                    "-dc maps multiple output columns "
-                    f"({', '.join(sorted(targets))}); this engine averages "
-                    "a single visibility column — pass one SOURCE:TARGET "
-                    "pair (ref -dc semantics, arguments.py:231-245)"
+                    "-dc maps several columns "
+                    f"({', '.join(f'{k}:{v}' for k, v in args.data_column.items())}"
+                    "); this engine averages a single visibility column — "
+                    "pass one SOURCE:TARGET pair (ref -dc semantics, "
+                    "arguments.py:231-245)"
                 )
     return args
 
@@ -288,9 +288,11 @@ class Application:
 
         # Opens real CASA MS directories too when python-casacore is
         # installed (sources/casa_ms bridge); parquet layout otherwise.
+        # -dc SRC: the column averaged, as vis_re/vis_im.
         from xova_spark.sources.casa_ms import load_ms_auto
 
-        tables = load_ms_auto(spark, args.ms)
+        (src,) = getattr(args, "data_column", {"DATA": "DATA"})
+        tables = load_ms_auto(spark, args.ms, data_column=src)
 
         if args.command == "check":
             from xova_spark.operators.check import check_ms, check_spw
@@ -361,12 +363,12 @@ class Application:
 
             out["ms_rows"] = fixms(out["ms_rows"], tables["antenna"], tables["field"])
 
-        # P3: surface the averaged data under the mapped column names.
-        dc = getattr(args, "data_column", None)
-        if "ms_vis" in out and dc and list(dc.items()) != [("DATA", "DATA")]:
-            (to_name,) = set(dc.values())
+        # P3: surface the averaged data under the -dc DST name; DATA
+        # stays vis_re/vis_im, so the output can be averaged again.
+        (dst,) = getattr(args, "data_column", {"DATA": "DATA"}).values()
+        if dst != "DATA":
             out["ms_vis"] = out["ms_vis"].withColumnsRenamed(
-                {"vis_re": f"{to_name}_re", "vis_im": f"{to_name}_im"}
+                {"vis_re": f"{dst}_re", "vis_im": f"{dst}_im"}
             )
 
         from xova_spark.sources.ms_writer import write_ms
@@ -446,8 +448,9 @@ class Application:
             finalize_vis,
             materialized_ms_vis,
         )
+        from xova_spark.sources.ms_writer import table_path
 
-        vis_dir = args.vis_dir or os.path.join(args.ms, "ms_vis.parquet")
+        vis_dir = args.vis_dir or table_path(args.ms, "ms_vis")
         checkpoint = args.checkpoint or args.output + ".ckpt"
         part_dir = args.output + ".partials"
         self._claim_stream_state(vis_dir, checkpoint, part_dir)

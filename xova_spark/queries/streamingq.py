@@ -761,7 +761,7 @@ def stream_cdc_merge(spark, sf_dir):
     At scale this is the upsert-view pattern: the per-batch compact is
     one partial-agg shuffle of the BATCH (not the history), the merge
     re-aggregates the state unioned with it on the same key, and the
-    stage-then-swap write (it records the merged batch id, so a batch
+    store's write_ms commit (it records the merged batch id, so a batch
     replayed after a kill merges once) becomes a transactional MERGE on
     a table format with commits."""
     import shutil
@@ -897,27 +897,32 @@ def stream_expectations_monitor(spark, sf_dir):
     continuously over the arriving event stream: per micro-batch the
     row-level predicates evaluate as conditional counts (one agg over
     the BATCH), and the per-expectation violation totals merge
-    ADDITIVELY into the monitor state (foreachBatch, the materialize
-    pattern) — counts are decomposable, so the converged totals equal
-    the batch suite no matter how the stream was chunked. This is the
-    always-on gate a pipeline alerts from, vs the pre-/post-transform
-    batch check (`xova-spark-extras dq --strict`)."""
+    ADDITIVELY into the monitor state (materialize._upsert, under which
+    a replayed batch merges once) — counts are decomposable, so the
+    converged totals equal the batch suite no matter how the stream was
+    chunked. This is the always-on gate a pipeline alerts from, vs the
+    pre-/post-transform batch check (`xova-spark-extras dq --strict`)."""
     import shutil
     import tempfile
 
     from pyspark.sql import functions as FF
 
     from xova_spark.queries.relational import load_tables
+    from xova_spark.streaming import materialize as M
 
     load_tables(spark, sf_dir, ("events",))
     stream = _events_stream(spark, sf_dir).withColumn(
         "ts", F.to_utc_timestamp(F.col("ts"), "UTC")
     )
     out_dir = tempfile.mkdtemp(prefix="xova_dq_monitor_")
-    cur = os.path.join(out_dir, "current")
 
-    def monitor(batch_df, _bid):
-        sp = batch_df.sparkSession
+    def merge(state):
+        return state.groupBy("expectation").agg(
+            FF.sum("n_rows").alias("n_rows"),
+            FF.sum("n_violations").alias("n_violations"),
+        )
+
+    def monitor(batch_df, bid):
         outs = []
         for name, pred in _EV_EXPECTATIONS:
             outs.append(
@@ -931,35 +936,12 @@ def stream_expectations_monitor(spark, sf_dir):
         partial = outs[0]
         for o in outs[1:]:
             partial = partial.unionAll(o)
-        if os.path.exists(cur):
-            partial = (
-                sp.read.parquet(cur)
-                .unionByName(partial)
-                .groupBy("expectation")
-                .agg(
-                    FF.sum("n_rows").alias("n_rows"),
-                    FF.sum("n_violations").alias("n_violations"),
-                )
-            )
-        tmp = os.path.join(out_dir, "_staged")
-        partial.write.mode("overwrite").parquet(tmp)
-        swap = os.path.join(out_dir, "_old")
-        if os.path.exists(cur):
-            os.rename(cur, swap)
-        os.rename(tmp, cur)
-        if os.path.exists(swap):
-            shutil.rmtree(swap)
+        M._upsert(partial, out_dir, bid, merge)
 
     ckpt = tempfile.mkdtemp(prefix="xova_ckpt_dqmon_")
     try:
-        q_ = (
-            stream.writeStream.foreachBatch(monitor)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q_.awaitTermination()
-        rows = spark.read.parquet(cur).collect()
+        M._start(stream, monitor, ckpt).awaitTermination()
+        rows = M.read_rollup(spark, out_dir).collect()
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1430,9 +1412,9 @@ def stream_join_view_maintenance(spark, sf_dir):
     dimension (stream-static join — the streaming plan Spark never
     re-scans the dim for), reduces to per-segment (count, cents)
     partials, and merges ADDITIVELY into the parquet-backed view via
-    the shared stage-then-swap materializer (streaming/materialize.py
-    — the same foreachBatch upsert stream_cdc_merge uses, under which a
-    batch replayed after a kill merges once). Count+sum
+    the shared materializer (streaming/materialize.py — the same
+    foreachBatch upsert stream_cdc_merge uses, committed by write_ms,
+    under which a batch replayed after a kill merges once). Count+sum
     are associative/commutative, so the converged availableNow state
     equals the batch join-aggregate no matter how ingestion was
     chunked; the DuckDB oracle computes that batch view directly.
@@ -1440,7 +1422,7 @@ def stream_join_view_maintenance(spark, sf_dir):
     At 100 TB this is the canonical streaming-lakehouse rollup: batch
     work is proportional to the CHANGES (one partial-agg of the batch
     + a group-grain merge), never the accumulated history, and the
-    stage-then-swap with its batch-id record becomes a transactional
+    store's commit with its batch-id record becomes a transactional
     MERGE on a real table format."""
     import shutil
     import tempfile

@@ -21,6 +21,17 @@ from pyspark.sql import functions as F
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The package's parent directory: Python workers import xova_spark from
+# it whatever the working directory of the driver.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 24g: a larger heap lets
+    a long-lived session grow past what the host can give it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 << 10, phys // 2 >> 20)}m"
+
 
 def get_spark(
     app_name: str = "xova_spark",
@@ -53,7 +64,11 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # File-split sizing is max(openCostInBytes, bytes/parallelism)

@@ -139,6 +139,10 @@ def read_casa_vis(
     vis_im, flag, weight_sp, sigma_sp): each executor pages its windows
     and flattens the (row, chan, corr) cube column-wise."""
 
+    with _open_table(path) as t:
+        if data_column not in t.colnames():
+            raise ValueError(f"{path} has no {data_column} column")
+
     def read(t, start: int, nrow: int) -> dict:
         colnames = set(t.colnames())
         data = t.getcol(data_column, startrow=start, nrow=nrow)
@@ -287,13 +291,30 @@ def read_casa_ms(
     return tables
 
 
-def load_ms_auto(spark: SparkSession, path: str, **kw) -> dict:
+def load_ms_auto(
+    spark: SparkSession, path: str, data_column: str = "DATA", **kw
+) -> dict:
     """Open EITHER layout: a real CASA MS (casacore present) or the
     parquet-backed directory. This is the loader the CLI uses, so
     pointing `xova-spark timechannel` at a real .ms works wherever
-    python-casacore is installed."""
+    python-casacore is installed.
+
+    ``ms_vis`` carries ``data_column`` as ``vis_re``/``vis_im``: DATA
+    is stored as those columns in the parquet layout, another column
+    ``C`` as ``C_re``/``C_im`` (what this engine writes for ``-dc
+    SRC:C``). A column the input lacks raises, naming it."""
     if is_casa_ms(path):
-        return read_casa_ms(spark, path, **kw)
+        return read_casa_ms(spark, path, data_column=data_column, **kw)
     from xova_spark.sources.ms_fixture import load_ms
 
-    return load_ms(spark, path)
+    tables = load_ms(spark, path)
+    if data_column != "DATA":
+        vis = tables["ms_vis"]
+        cols = {f"{data_column}_re": "vis_re", f"{data_column}_im": "vis_im"}
+        if not set(cols) <= set(vis.columns):
+            raise ValueError(
+                f"{path} has no {data_column} column: its ms_vis has no "
+                f"{' and '.join(cols)}"
+            )
+        tables["ms_vis"] = vis.drop("vis_re", "vis_im").withColumnsRenamed(cols)
+    return tables

@@ -10,9 +10,11 @@ re-read.
 
 The write alone defines an output MS: its tables and the
 ``_schemas.json`` manifest (table -> Spark schema) are committed with
-one rename. ``load_ms`` gives Spark every schema up front — from the
-manifest, or from the footers of an input ``<name>.parquet`` layout —
-so an open submits no Spark job.
+one rename, after ``recover`` has undone a commit a kill cut short.
+``load_ms`` gives Spark every schema up front — from the manifest, or
+from the footers of an input ``<name>.parquet`` layout — so an open
+submits no Spark job. The stream's state stores
+(streaming/materialize.py) are one-table MSs under the same contract.
 
 Scale design: the main table write is ``partitionBy(FIELD_ID,
 DATA_DESC_ID)`` — low-cardinality directory keys (fields x ddids), with
@@ -57,25 +59,43 @@ class OutputExistsError(RuntimeError):
     pass
 
 
+# Where a force write parks the MS it replaces; a name no user's
+# ``<path>.old*`` directory is expected to have. One writer per path.
+OLD_SUFFIX = ".old-xova-swap"
+
+
+def recover(path: str) -> None:
+    """Finish or undo a commit that a kill cut short: with no ``path``,
+    the parked old MS is put back; with both, the parked one is
+    dropped (the new one was committed)."""
+    old = path + OLD_SUFFIX
+    if os.path.exists(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
+
+
 def write_ms(tables: dict, path: str, force: bool = False) -> None:
     """S8/S9/S10/S11: write every DataFrame in ``tables`` as the MS
     ``path``; refuse to overwrite unless force (app.py:152-159).
 
-    Everything goes into ``<path>.tmp-<id>``, which one rename commits;
-    with force the old ``path`` is first moved to ``<path>.old-<id>``
-    and removed after. A write that raises removes the staging dir.
+    After ``recover``, everything goes into ``<path>.tmp-<id>``, which
+    one rename commits; with force the old ``path`` is first parked at
+    ``path + OLD_SUFFIX`` and removed after. A write that raises
+    removes the staging dir.
 
     A ``_keywords`` entry (a plain JSON-able dict, keyed by table name)
     is persisted as ``<path>/_keywords.json`` — the parquet-layout
     analogue of the reference's table-keyword relink on passthrough
     subtables (subtables.py:35 putkeywords); load_ms restores it."""
     path = os.path.normpath(path)
+    recover(path)
     if os.path.exists(path) and not force:
         raise OutputExistsError(
             f"{path} exists. Use force=True to overwrite (ref --force)."
         )
-    run = uuid.uuid4().hex[:12]
-    stage = f"{path}.tmp-{run}"
+    stage = f"{path}.tmp-{uuid.uuid4().hex[:12]}"
     try:
         schemas: dict[str, str] = {}
         for name, df in tables.items():
@@ -101,7 +121,7 @@ def write_ms(tables: dict, path: str, force: bool = False) -> None:
         with open(os.path.join(stage, MANIFEST), "w") as fh:
             json.dump(schemas, fh, indent=1, sort_keys=True)
         if os.path.exists(path):
-            old = f"{path}.old-{run}"
+            old = path + OLD_SUFFIX
             os.rename(path, old)
             try:
                 os.rename(stage, path)
@@ -114,6 +134,15 @@ def write_ms(tables: dict, path: str, force: bool = False) -> None:
     except BaseException:
         shutil.rmtree(stage, ignore_errors=True)
         raise
+
+
+def table_path(ms_dir: str, name: str) -> str:
+    """Where the MS ``ms_dir`` keeps table ``name``: the directory
+    ``<name>`` in a written MS (it has the manifest), the file
+    ``<name>.parquet`` in an input MS."""
+    if os.path.exists(os.path.join(ms_dir, MANIFEST)):
+        return os.path.join(ms_dir, name)
+    return os.path.join(ms_dir, f"{name}.parquet")
 
 
 def footer_schema(path: str) -> StructType:
@@ -151,15 +180,16 @@ def load_ms(spark, ms_dir: str) -> dict:
                 }
         except (ValueError, TypeError, KeyError, AttributeError) as exc:
             raise RuntimeError(f"corrupt MS manifest: {manifest}") from exc
-        paths = {name: os.path.join(ms_dir, name) for name in schemas}
     else:
         files = sorted(glob.glob(os.path.join(glob.escape(ms_dir), "*.parquet")))
         if not files:
             raise RuntimeError(f"not an MS: {ms_dir} has no {MANIFEST} or *.parquet")
-        paths = {os.path.basename(f)[: -len(".parquet")]: f for f in files}
-        schemas = {name: footer_schema(f) for name, f in paths.items()}
+        schemas = {
+            os.path.basename(f)[: -len(".parquet")]: footer_schema(f) for f in files
+        }
     out = {}
-    for name, path in paths.items():
+    for name in schemas:
+        path = table_path(ms_dir, name)
         if not os.path.exists(path):
             raise RuntimeError(f"MS table {name!r} is missing: {path}")
         out[name] = spark.read.schema(schemas[name]).parquet(path)

@@ -8,10 +8,10 @@ the stored table always holds the rollup of everything consumed so far,
 and merging partials is valid because the aggregates carried are
 decomposable (count/sum pairs; averages derive at read time).
 
-The merge is replay-safe: the stored table records the id of the last
-batch it holds, so a batch Spark replays after a kill (merged, but not
-yet committed to the checkpoint) is a no-op, and a swap the kill cut
-short is completed or undone before the next merge.
+The store ``<out_dir>/current`` is a one-table MS (sources/ms_writer.py)
+that records the id of the last batch merged: a batch Spark replays
+after a kill (merged, but not yet committed to the checkpoint) is a
+no-op, and a commit the kill cut short is undone before a read.
 
 At real scale the overwrite becomes a transactional MERGE into a table
 format with commit semantics (Delta/Iceberg); the plan shape — batch
@@ -21,7 +21,6 @@ partial agg, key-join merge, atomic swap — is identical.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,42 +30,35 @@ from xova_spark.operators.timechannel import (
     finalize_partials,
     merge_bin_partials,
 )
+from xova_spark.sources.ms_writer import MANIFEST, load_ms, recover, write_ms
+
+STATE = "state"
+
+
+def _open(spark, out_dir: str) -> dict | None:
+    """load_ms of the store after ``recover``; None if there is none. A
+    store without the manifest (an older layout) raises, naming it."""
+    cur = os.path.join(out_dir, "current")
+    recover(cur)
+    if not os.path.exists(cur):
+        return None
+    if not os.path.exists(os.path.join(cur, MANIFEST)):
+        raise RuntimeError(f"{cur} is not a state store: no {MANIFEST}")
+    return load_ms(spark, cur)
 
 
 def _upsert(partial: DataFrame, out_dir: str, batch_id: int, merge):
-    """Read-merge-overwrite of the stored state ``<out_dir>/current``:
-    ``merge`` re-aggregates it unioned with micro-batch ``batch_id``'s
-    partials, then the result is staged and swapped in, so a reader never
-    sees a half-written table. The staged table records ``batch_id`` in
-    ``_batch_id`` (parquet readers skip ``_`` files): the replay of a
-    batch the state already holds is a no-op. On entry, a swap a kill
-    cut short is undone (``_old`` is the state) or finished."""
-    cur, old, tmp = (os.path.join(out_dir, d) for d in ("current", "_old", "_staged"))
-    if os.path.exists(old):
-        if os.path.exists(cur):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, cur)
-    mark = os.path.join(cur, "_batch_id")
-    if os.path.exists(mark):
-        with open(mark) as fh:
-            if int(fh.read()) == batch_id:
-                return
-    if os.path.exists(cur):
-        # The merged state has the partials' columns, order and types,
-        # so it is read with their schema: no inference job per trigger.
-        partial = merge(
-            partial.sparkSession.read.schema(partial.schema).parquet(cur)
-            .unionByName(partial)
-        )
-    partial.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_batch_id"), "w") as fh:
-        fh.write(str(batch_id))
-    if os.path.exists(cur):
-        os.rename(cur, old)
-    os.rename(tmp, cur)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    """Merge micro-batch ``batch_id``'s partials into the store: recover
+    and reopen it, skip a batch it already holds (a replay), else
+    ``merge`` the state unioned with the partials and commit the result
+    with ``batch_id`` through write_ms."""
+    store = _open(partial.sparkSession, out_dir)
+    if store is not None:
+        if store["_keywords"][STATE]["batch_id"] == batch_id:
+            return
+        partial = merge(store[STATE].unionByName(partial))
+    tables = {STATE: partial, "_keywords": {STATE: {"batch_id": batch_id}}}
+    write_ms(tables, os.path.join(out_dir, "current"), force=True)
 
 
 def _start(stream_df: DataFrame, merge, checkpoint: str):
@@ -102,7 +94,11 @@ def materialized_rollup(
 
 
 def read_rollup(spark, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "current"))
+    """The stored state; reopened with no Spark job."""
+    store = _open(spark, out_dir)
+    if store is None:
+        raise RuntimeError(f"no state store under {out_dir}")
+    return store[STATE]
 
 
 # ---------------------------------------------------------------------------
@@ -143,8 +139,7 @@ def finalize_vis(spark, out_dir: str, keep_rep: bool = False) -> DataFrame:
     average_vis returns them: the bin key (led by ``rep`` if
     ``keep_rep``), chan_bin, corr and the values, through the same
     finalize."""
-    p = spark.read.parquet(os.path.join(out_dir, "current"))
-    return finalize_partials(p, keep_rep)
+    return finalize_partials(read_rollup(spark, out_dir), keep_rep)
 
 
 # ---------------------------------------------------------------------------
